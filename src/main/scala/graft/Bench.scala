@@ -101,10 +101,10 @@ object Bench {
         // chain). Capped at 30 s so a genuinely wedged rep under a large
         // rep timeout can't stall the suite for timeout/2 — cancellation
         // that hasn't propagated in 30 s isn't going to. The cost lands
-        // only on an actual wedge.
-        val graceMs = math.min(math.max(5000L, timeoutMs / 2), 30000L)
-        try result.get(graceMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch { case _: java.util.concurrent.TimeoutException => () }
+        // only on an actual wedge. Join, not `result.get`: the rep thread
+        // completes `result` just before it exits, so reading isAlive
+        // right after `get` returns could count a finished rep as wedged.
+        t.join(math.min(math.max(5000L, timeoutMs / 2), 30000L))
         RepTimeout(stillWedged = t.isAlive)
     }
   }

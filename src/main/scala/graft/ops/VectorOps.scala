@@ -437,17 +437,21 @@ object VectorOps {
   def ivfWrite(index: IvfIndex, path: String): Unit =
     index.assigned.write.partitionBy("centroid").mode("overwrite").parquet(path)
 
-  /** Probe a written IVF index: partition-pruned scan + exact rerank. */
+  /** Probe a written IVF index: partition-pruned scan + exact rerank
+    * ([[ivfTopK]]). A root with a committed version is probed at its
+    * latest version ([[readIndexLatest]]: deleted rows hidden, files a
+    * compaction replaced unlisted); an unversioned layout is read as the
+    * directory it is.
+    */
   def ivfTopKFromPath(spark: org.apache.spark.sql.SparkSession, path: String,
                       centroids: Array[Array[Double]], idCol: String,
                       vecCol: String, query: Seq[Float], k: Int,
                       nProbe: Int = 3): DataFrame = {
-    val probes = nearestCentroids(centroids, query, nProbe)
-    spark.read.parquet(path)
-      .filter(col("centroid").isin(probes: _*))
-      .select(col(idCol), round(cosine(col(vecCol), typedLit(query)), 4).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    val rows = latestVersion(spark, path) match {
+      case Some(v) => readIndexVersionVisible(spark, path, v, idCol)
+      case None => spark.read.parquet(path)
+    }
+    ivfTopK(IvfIndex(rows, centroids), idCol, vecCol, query, k, nProbe)
   }
 
   // ------------------------------------------------ product quantization
@@ -783,39 +787,90 @@ object VectorOps {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def manifestLines(spark: org.apache.spark.sql.SparkSession,
-                            path: String, version: Int): Seq[String] = {
-    val p = manifestPath(path, version)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
+  /** The non-empty lines of a committed metadata file (a manifest, a
+    * sidecar, a checkpoint) — loud on a missing one. */
+  private def fileLines(spark: org.apache.spark.sql.SparkSession,
+                        p: org.apache.hadoop.fs.Path): Seq[String] = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).toIndexedSeq
     finally in.close()
   }
 
-  /** The file list committed as `version` — fails loudly on a missing
+  /** One committed version as its manifest records it, from ONE manifest
+    * read: the file list and the commit metadata (the `#key:value`
+    * header lines — empty for manifests committed without any). Every
+    * per-version concern a reader needs (the delete sidecars, the column
+    * mapping, the table checks) resolves from here, so a read opens its
+    * manifest once, not once per concern.
+    */
+  final case class Snapshot(path: String, version: Int, files: Seq[String],
+                            meta: Map[String, String]) {
+    /** The id tombstone sidecar, if the manifest references one —
+      * resolved via the `deletes` header, never by probing `_deletes/`:
+      * an orphaned sidecar (a crashed or version-race-losing commit)
+      * must stay invisible. */
+    def tombstones(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
+      meta.get("deletes").map(rel => spark.read.parquet(resolveRel(path, rel)))
+
+    /** The deletion-vector sidecar `(file, pos)`, resolved like
+      * [[tombstones]] via the `dv` header. */
+    def deletionVector(spark: org.apache.spark.sql.SparkSession)
+        : Option[DataFrame] =
+      meta.get("dv").map(rel => spark.read.parquet(resolveRel(path, rel)))
+
+    /** physical → logical column names, empty before any rename. */
+    def columnMapping: Map[String, String] =
+      meta.get("colmap").map(_.split(',').toSeq.map { e =>
+        val i = e.indexOf('=')
+        require(i > 0, s"malformed colmap entry: $e")
+        e.take(i) -> e.drop(i + 1)
+      }.toMap).getOrElse(Map.empty)
+
+    /** The physical columns dropped as of this version. */
+    def droppedColumns: Seq[String] =
+      meta.get("coldrop").map(_.split(',').toSeq.filter(_.nonEmpty))
+        .getOrElse(Seq.empty)
+
+    /** The table CHECK constraints (name → parsed Column). */
+    def checks: Seq[(String, Column)] = meta.get("checks") match {
+      case None => Seq.empty
+      case Some(b64) =>
+        new String(java.util.Base64.getDecoder.decode(b64),
+          java.nio.charset.StandardCharsets.UTF_8)
+          .split('\n').toSeq.filter(_.nonEmpty).map { l =>
+            val i = l.indexOf('\t')
+            require(i > 0, s"malformed checks entry: ${l.take(80)}")
+            l.take(i) -> expr(l.drop(i + 1))
+          }
+    }
+  }
+
+  /** The [[Snapshot]] committed as `version` — fails loudly on a missing
     * manifest (a reader must never silently fall back to "whatever files
     * are in the directory": that is exactly the torn read manifests
-    * exist to prevent). `#`-prefixed header lines are commit metadata
-    * ([[readManifestMeta]]), not files.
+    * exist to prevent).
     */
+  def snapshot(spark: org.apache.spark.sql.SparkSession, path: String,
+               version: Int): Snapshot = {
+    val (header, files) =
+      fileLines(spark, manifestPath(path, version)).partition(_.startsWith("#"))
+    Snapshot(path, version, files, header.map { l =>
+      val i = l.indexOf(':')
+      require(i > 1, s"malformed manifest meta line: $l")
+      l.substring(1, i) -> l.substring(i + 1)
+    }.toMap)
+  }
+
+  /** The file list committed as `version` ([[snapshot]]). */
   def readManifest(spark: org.apache.spark.sql.SparkSession, path: String,
                    version: Int): Seq[String] =
-    manifestLines(spark, path, version).filterNot(_.startsWith("#"))
+    snapshot(spark, path, version).files
 
-  /** The commit metadata of `version` (the `#key:value` header lines).
-    * Empty for manifests committed without metadata — old manifests stay
-    * readable unchanged.
-    */
+  /** The commit metadata of `version` ([[snapshot]]). */
   def readManifestMeta(spark: org.apache.spark.sql.SparkSession,
                        path: String, version: Int): Map[String, String] =
-    manifestLines(spark, path, version)
-      .filter(_.startsWith("#"))
-      .map { l =>
-        val i = l.indexOf(':')
-        require(i > 1, s"malformed manifest meta line: $l")
-        l.substring(1, i) -> l.substring(i + 1)
-      }.toMap
+    snapshot(spark, path, version).meta
 
   /** Every committed version, ascending — one `_manifests/` listing
     * (metadata-scale). Empty when the index has never been committed.
@@ -1038,9 +1093,7 @@ object VectorOps {
     val p = new HPath(path, f"_manifests/v$version%05d.batchids")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) return
-    try atomicCreate(fs, path, p,
-      keys.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+    try commitSidecar(spark, path, p.getName, keys,
       s"batch-id checkpoint v$version")
     catch { case _: java.io.IOException if fs.exists(p) => () }
   }
@@ -1065,16 +1118,10 @@ object VectorOps {
     * protecting the commits they recorded.
     */
   def readBatchIdCheckpoint(spark: org.apache.spark.sql.SparkSession,
-                            path: String, version: Int): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path, f"_manifests/v$version%05d.batchids")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty)
+                            path: String, version: Int): Set[String] =
+    fileLines(spark, new org.apache.hadoop.fs.Path(path,
+        f"_manifests/v$version%05d.batchids"))
       .map(l => if (l.contains(':')) l else s":$l").toSet
-    finally in.close()
-  }
 
   /** The commit log as a DataFrame — DESCRIBE HISTORY for the versioned
     * index: (version, op, n_files, has_deletes, batch, restore_of), one
@@ -1087,9 +1134,10 @@ object VectorOps {
                       path: String): DataFrame = {
     import spark.implicits._
     listVersions(spark, path).map { v =>
-      val meta = readManifestMeta(spark, path, v)
+      val snap = snapshot(spark, path, v)
+      val meta = snap.meta
       (v, meta.getOrElse("op", ""),
-        readManifest(spark, path, v).length,
+        snap.files.length,
         meta.contains("deletes"),
         meta.get("batch").map(_.toLong),
         meta.get("restore_of").map(_.toInt))
@@ -1098,24 +1146,46 @@ object VectorOps {
   }
 
   /** Read an index AS OF a committed version: exactly the manifest's
-    * files, with `basePath` so the `centroid=` directory structure still
-    * yields the partition column — a probe against any version stays
-    * partition-pruned (PartitionFilters, locked in PlanSpec). Files
-    * appended after this version's commit are invisible by construction:
-    * they are not in the list.
+    * files ([[scan]]). Files appended after this version's commit are
+    * invisible by construction: they are not in the list.
     */
   def readIndexVersion(spark: org.apache.spark.sql.SparkSession,
                        path: String, version: Int): DataFrame = {
-    val files = readManifest(spark, path, version)
+    val snap = snapshot(spark, path, version)
+    scan(spark, snap, snap.files)
+  }
+
+  /** The one file-subset read of a snapshot: exactly `files` (entries of
+    * `snap.files`), with `basePath` so the `centroid=` directory
+    * structure still yields the partition column — a probe against any
+    * version stays partition-pruned (PartitionFilters, locked in
+    * PlanSpec). External (clone-inherited) entries group by their own
+    * root, each with its own `basePath`. An empty subset reads as an
+    * empty frame with the version's schema.
+    */
+  def scan(spark: org.apache.spark.sql.SparkSession, snap: Snapshot,
+           files: Seq[String]): DataFrame = {
+    require(snap.files.nonEmpty,
+      s"v${snap.version} of ${snap.path} lists no files")
+    if (files.isEmpty) readFiles(spark, snap.path, snap.files).limit(0)
+    else readFiles(spark, snap.path, files)
+  }
+
+  /** The non-empty entry list `files` of the index at `path` as one
+    * frame — the read under [[scan]] and every other file-list read:
+    * local entries under `path`, external ones grouped by their own
+    * root.
+    */
+  private def readFiles(spark: org.apache.spark.sql.SparkSession,
+                        path: String, files: Seq[String]): DataFrame = {
     val (ext, loc) = files.partition(isExternal)
     val parts =
       (if (loc.nonEmpty)
          Seq(spark.read.option("basePath", path)
-           .parquet(loc.map(f => s"$path/$f"): _*))
+           .parquet(loc.map(resolveRel(path, _)): _*))
        else Nil) ++
       ext.groupBy(externalRoot).toSeq.sortBy(_._1).map { case (r, fs) =>
         spark.read.option("basePath", r).parquet(fs: _*) }
-    require(parts.nonEmpty, s"v$version of $path lists no files")
     // allowMissingColumns: a single-root parquet read pads a column
     // absent from some files with nulls; a cross-root read must behave
     // identically or a clone's mixed manifest changes schema semantics
@@ -1138,9 +1208,9 @@ object VectorOps {
   private def externalRoot(entry: String): String =
     entry.split('/').dropRight(2).mkString("/")
 
-  /** Resolve a sidecar pointer (`deletes` / `dv` header value) against
-    * its index root — external pointers (committed by clones/promotes)
-    * resolve as-is. */
+  /** Resolve a manifest entry or a sidecar pointer (`deletes` / `dv`
+    * header value) against its index root — external ones (committed by
+    * clones/promotes) resolve as-is. */
   private def resolveRel(path: String, rel: String): String =
     if (isExternal(rel)) rel else s"$path/$rel"
 
@@ -1202,67 +1272,103 @@ object VectorOps {
     (pointers ++ verbatim).toMap
   }
 
-  /** Split `fromVersion`'s deletion vector across a partition rewrite.
-    * DV sidecars are keyed by (file, pos); a rewrite that copies rows
-    * into NEW files breaks every entry pointing at a rewritten file —
-    * carrying the pointer forward verbatim would silently RESURRECT
-    * those rows in the new version. Here the entries partition exactly:
-    *  - entries whose file lives in a rewritten partition are APPLIED
-    *    physically (the returned transform anti-joins them on scan
-    *    metadata inside the rewrite — the doomed rows never reach the
-    *    new files);
+  /** Split `snap`'s deletion vector across a rewrite of the manifest
+    * files `rewritten` selects. DV sidecars are keyed by (file, pos); a
+    * rewrite that copies rows into NEW files breaks every entry pointing
+    * at a rewritten file — carrying the pointer forward verbatim would
+    * silently RESURRECT those rows in the new version. Here the entries
+    * partition exactly:
+    *  - entries whose file is rewritten are APPLIED physically (the
+    *    returned transform anti-joins them on scan metadata inside the
+    *    rewrite — the doomed rows never reach the new files);
     *  - entries for untouched files stay valid and re-land as
     *    `toVersion`'s sidecar (or the pointer carries verbatim when no
-    *    rewritten partition holds a DV entry — the common case, zero
+    *    rewritten file holds a DV entry — the common case, zero
     *    sidecar I/O).
-    * Returns (metaAdditions, perPartitionTransform). All driver-side
-    * work is delete-sized; the transform's anti-join side broadcasts.
+    * Returns (metaAdditions, filesWithAppliedEntries, transform). All
+    * driver-side work is delete-sized; the transform's anti-join side
+    * broadcasts.
     */
   private def splitDvForRewrite(spark: org.apache.spark.sql.SparkSession,
-                                path: String, fromVersion: Int,
-                                toVersion: Int,
-                                rewrittenParts: Set[String])
-      : (Map[String, String], DataFrame => DataFrame) = {
-    val meta = readManifestMeta(spark, path, fromVersion)
-    if (!meta.contains("dv"))
-      return (Map.empty, identity)
+                                snap: Snapshot, toVersion: Int,
+                                rewritten: String => Boolean)
+      : (Map[String, String], Set[String], DataFrame => DataFrame) = {
+    val none = (Map.empty[String, String], Set.empty[String],
+      identity[DataFrame] _)
+    val meta = snap.meta
     // a ZERO-entry DV is no DV (ADVICE r12): a legal degenerate history
     // (zero-match predicate committed before the writer learned to skip
     // the header) must stay physically applicable — carrying the empty
     // pointer verbatim would trip applyDeletes' full-apply assertion
-    if (meta.get("dvcount").contains("0"))
-      return (Map.empty, identity)
-    val verbatim: Map[String, String] =
-      Map("dv" -> meta("dv")) ++ meta.get("dvcount").map("dvcount" -> _)
-    if (rewrittenParts.isEmpty && meta.contains("dvcount"))
-      return (verbatim, identity) // dvcount > 0, checked above
-    val dv = spark.read.parquet(resolveRel(path, meta("dv")))
+    if (!meta.contains("dv") || meta.get("dvcount").contains("0"))
+      return none
+    val verbatim = (Map("dv" -> meta("dv")) ++
+      meta.get("dvcount").map("dvcount" -> _), Set.empty[String],
+      identity[DataFrame] _)
+    // a DV entry names its file by the last two path segments
+    // (`centroid=K/part-…`), whatever root the manifest entry has
+    val files = snap.files.filter(rewritten)
+      .map(_.split('/').takeRight(2).mkString("/"))
+    if (files.isEmpty && meta.contains("dvcount"))
+      return verbatim // dvcount > 0, checked above
+    val dv = snap.deletionVector(spark).get
       .select(col("file"), col("pos").cast("long").as("pos"))
-    // no dvcount header (foreign writer): the emptiness check needs the
-    // (delete-sized) read we just paid anyway
-    if (dv.isEmpty) return (Map.empty, identity)
-    if (rewrittenParts.isEmpty) return (verbatim, identity)
-    val inPart = substring_index(col("file"), "/", 1)
-      .isin(rewrittenParts.toSeq: _*)
-    val applied = dv.filter(inPart)
-    if (applied.isEmpty) return (verbatim, identity)
-    val b = broadcast(applied.select(col("file").as("__dv_file"),
-      col("pos").as("__dv_pos")))
-    val applier: DataFrame => DataFrame = df => df
-      .withColumn("__dv_file",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__dv_pos", col("_metadata.row_index").cast("long"))
-      .join(b, Seq("__dv_file", "__dv_pos"), "left_anti")
-      .drop("__dv_file", "__dv_pos")
-    val keptDv = dv.filter(!inPart)
+    // no dvcount header (foreign writer): only the (delete-sized) read
+    // can tell an empty DV
+    if (!meta.contains("dvcount") && dv.isEmpty) return none
+    if (files.isEmpty) return verbatim
+    val inRewrite = col("file").isin(files: _*)
+    val applied = dv.filter(inRewrite)
+    val appliedFiles = applied.select(col("file")).distinct().collect()
+      .map(_.getString(0)).toSet
+    if (appliedFiles.isEmpty) return verbatim
+    val applier: DataFrame => DataFrame = subtractDv(_, applied)
+    val keptDv = dv.filter(!inRewrite)
     val nKept = keptDv.count()
-    if (nKept == 0L) (Map.empty, applier)
+    if (nKept == 0L) (Map.empty, appliedFiles, applier)
     else {
       val rel = s"_dv/v$toVersion"
-      keptDv.coalesce(1).write.mode("overwrite").parquet(s"$path/$rel")
-      (Map("dv" -> rel, "dvcount" -> nKept.toString), applier)
+      keptDv.coalesce(1).write.mode("overwrite")
+        .parquet(s"${snap.path}/$rel")
+      (Map("dv" -> rel, "dvcount" -> nKept.toString), appliedFiles, applier)
     }
   }
+
+  /** `df` — a direct scan of data files — minus the `(file, pos)`
+    * positions `dv` names. The anti-join key is scan metadata
+    * (`_metadata.file_path` / `row_index`), never a data column, so rows
+    * with duplicate or absent keys delete correctly; `dv` broadcasts (it
+    * is delete-sized — past broadcastable, the same join repartitions by
+    * `file`, a tuning knob, not a semantic change).
+    */
+  private def subtractDv(df: DataFrame, dv: DataFrame): DataFrame = df
+    .withColumn("__dv_file",
+      substring_index(col("_metadata.file_path"), "/", -2))
+    .withColumn("__dv_pos", col("_metadata.row_index").cast("long"))
+    .join(broadcast(dv.select(col("file").as("__dv_file"),
+        col("pos").cast("long").as("__dv_pos"))),
+      Seq("__dv_file", "__dv_pos"), "left_anti")
+    .drop("__dv_file", "__dv_pos")
+
+  /** `df` (a scan of `snap`) minus `snap`'s deletion-vector positions. */
+  private def withoutDv(spark: org.apache.spark.sql.SparkSession,
+                        snap: Snapshot, df: DataFrame): DataFrame =
+    snap.deletionVector(spark).fold(df)(subtractDv(df, _))
+
+  /** `df` (a scan of `snap`) minus `snap`'s id tombstones — a broadcast
+    * left-anti join on the id column (tombstone sets are id-sized). */
+  private def withoutTombstones(spark: org.apache.spark.sql.SparkSession,
+                                snap: Snapshot, df: DataFrame,
+                                idCol: String): DataFrame =
+    snap.tombstones(spark).fold(df)(d => df.join(
+      broadcast(d.select(col("vid").as(idCol))), Seq(idCol), "left_anti"))
+
+  /** Every row `snap` serves: DV positions subtracted first, then id
+    * tombstones. */
+  private def visible(spark: org.apache.spark.sql.SparkSession,
+                      snap: Snapshot, idCol: String): DataFrame =
+    withoutTombstones(spark, snap,
+      withoutDv(spark, snap, scan(spark, snap, snap.files)), idCol)
 
   /** Fully-VISIBLE read of a pinned version: deletion-vector positions
     * subtracted first (scan-metadata anti-join, [[readIndexVersionDv]]),
@@ -1276,14 +1382,8 @@ object VectorOps {
     */
   def readIndexVersionVisible(spark: org.apache.spark.sql.SparkSession,
                               path: String, version: Int,
-                              idCol: String): DataFrame = {
-    val dvApplied = readIndexVersionDv(spark, path, version)
-    readDeletes(spark, path, version) match {
-      case None => dvApplied
-      case Some(d) => dvApplied.join(
-        broadcast(d.select(col("vid").as(idCol))), Seq(idCol), "left_anti")
-    }
-  }
+                              idCol: String): DataFrame =
+    visible(spark, snapshot(spark, path, version), idCol)
 
   /** Shallow-clone `srcVersion` of `src` as version 1 of `dst`: one
     * manifest write whose entries reference the SOURCE's data files by
@@ -1458,8 +1558,7 @@ object VectorOps {
     */
   def readDeletes(spark: org.apache.spark.sql.SparkSession, path: String,
                   version: Int): Option[DataFrame] =
-    readManifestMeta(spark, path, version).get("deletes")
-      .map(rel => spark.read.parquet(resolveRel(path, rel)))
+    snapshot(spark, path, version).tombstones(spark)
 
   // ------------------------------------ optimistic-concurrency commits
 
@@ -1658,12 +1757,8 @@ object VectorOps {
   def readIndexVersionMor(spark: org.apache.spark.sql.SparkSession,
                           path: String, version: Int,
                           idCol: String): DataFrame = {
-    val base = readIndexVersion(spark, path, version)
-    readDeletes(spark, path, version) match {
-      case None => base
-      case Some(d) => base.join(
-        broadcast(d.select(col("vid").as(idCol))), Seq(idCol), "left_anti")
-    }
+    val snap = snapshot(spark, path, version)
+    withoutTombstones(spark, snap, scan(spark, snap, snap.files), idCol)
   }
 
   /** Apply pending deletes of BOTH kinds PHYSICALLY — id tombstones and
@@ -1685,13 +1780,13 @@ object VectorOps {
   def applyDeletes(spark: org.apache.spark.sql.SparkSession, path: String,
                    fromVersion: Int, toVersion: Int,
                    idCol: String): (Int, Long) = {
-    val delsOpt = readDeletes(spark, path, fromVersion)
-    val hasDv = readManifestMeta(spark, path, fromVersion).contains("dv")
+    val from = snapshot(spark, path, fromVersion)
+    val delsOpt = from.tombstones(spark)
     val carried = carriedMeta(spark, path, fromVersion,
       except = Set("deletes", "dv", "dvcount"))
-    if (delsOpt.isEmpty && !hasDv) { // nothing pending: pure metadata
-      writeManifest(spark, path, toVersion,
-        readManifest(spark, path, fromVersion),
+    if (delsOpt.isEmpty && !from.meta.contains("dv")) {
+      // nothing pending: pure metadata
+      writeManifest(spark, path, toVersion, from.files,
         carried + ("op" -> "apply"))
       return (0, 0L)
     }
@@ -1701,23 +1796,22 @@ object VectorOps {
         // which partitions hold tombstoned rows — over the PHYSICAL
         // read (a doomed row is on disk even when a DV already hides it)
         val delSet = broadcast(d.select(col("vid").as(idCol)))
-        readIndexVersion(spark, path, fromVersion)
+        scan(spark, from, from.files)
           .join(delSet, Seq(idCol), "left_semi")
           .select(col("centroid")).distinct()
           .collect().map(r => s"centroid=${r.get(0)}").toSet
     }
-    val dvParts: Set[String] =
-      readDeletionVector(spark, path, fromVersion) match {
-        case None => Set.empty
-        case Some(dv) => dv
-          .select(substring_index(col("file"), "/", 1).as("p"))
-          .distinct().collect().map(_.getString(0)).toSet
-      }
+    val dvParts: Set[String] = from.deletionVector(spark) match {
+      case None => Set.empty
+      case Some(dv) => dv
+        .select(substring_index(col("file"), "/", 1).as("p"))
+        .distinct().collect().map(_.getString(0)).toSet
+    }
     val hot = tombParts ++ dvParts
     // hot covers every DV partition, so the split applies ALL positions
     // physically and carries nothing — asserted, not assumed
-    val (dvMeta, dvApply) =
-      splitDvForRewrite(spark, path, fromVersion, toVersion, hot)
+    val (dvMeta, _, dvApply) = splitDvForRewrite(spark, from, toVersion,
+      f => hot.contains(f.takeWhile(_ != '/')))
     require(dvMeta.isEmpty,
       s"applyDeletes: DV entries survived a full apply: $dvMeta")
     val tombApply: DataFrame => DataFrame = delsOpt match {
@@ -1726,8 +1820,8 @@ object VectorOps {
         val delSet = broadcast(d.select(col("vid").as(idCol)))
         df => df.join(delSet, Seq(idCol), "left_anti")
     }
-    val from = readManifest(spark, path, fromVersion)
-    val hotBefore = from.filter(f => hot.contains(f.takeWhile(_ != '/')))
+    val hotBefore =
+      from.files.filter(f => hot.contains(f.takeWhile(_ != '/')))
     val nBefore = footerCounts(spark, path, hotBefore).values.sum
     val (rewritten, _, _) =
       rewriteVersioned(spark, path, fromVersion, toVersion, "deleted",
@@ -1835,11 +1929,11 @@ object VectorOps {
     // physically inside the partitions being rewritten (the Delta
     // OPTIMIZE behavior — purging already-reported-deleted rows is
     // dataChange-free) and the remaining entries re-land via the split
-    val multiFileParts = readManifest(spark, path, fromVersion)
-      .groupBy(_.takeWhile(_ != '/'))
+    val from = snapshot(spark, path, fromVersion)
+    val multiFileParts = from.files.groupBy(_.takeWhile(_ != '/'))
       .collect { case (part, files) if files.length > 1 => part }.toSet
-    val (dvMeta, dvApply) = splitDvForRewrite(spark, path, fromVersion,
-      toVersion, multiFileParts)
+    val (dvMeta, _, dvApply) = splitDvForRewrite(spark, from, toVersion,
+      f => multiFileParts.contains(f.takeWhile(_ != '/')))
     val carried = carriedMeta(spark, path, fromVersion,
       except = Set("dv", "dvcount"))
     // op:compact marks the commit dataChange-free: compaction moves bytes,
@@ -1874,36 +1968,17 @@ object VectorOps {
       s"version $toVersion is already committed under $path")
     val fs = new HPath(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val from = readManifest(spark, path, fromVersion)
+    val snap = snapshot(spark, path, fromVersion)
+    val from = snap.files
     requireLocalEntries(from, s"binpack to v$toVersion")
     val sizes = from.map(f =>
       f -> fs.getFileStatus(new HPath(path, f)).getLen).toMap
-    // DV sidecars are keyed by (file, pos) — repacking a DV-referenced
-    // file verbatim would copy its raw bytes into a binpack file the
-    // sidecar doesn't name, silently RESURRECTING every DV-deleted row.
-    // Instead the positions are APPLIED while packing (the Delta
-    // OPTIMIZE behavior — purging already-reported-deleted rows is
-    // dataChange-free): bins holding a DV-referenced file anti-join the
-    // file's positions on scan metadata during the rewrite, and only
-    // the entries of RE-LISTED files re-land in the new version's
-    // sidecar (pointer carried verbatim when nothing it names packed).
-    val dvOpt = readDeletionVector(spark, path, fromVersion)
-      .map(_.select(col("file"), col("pos").cast("long").as("pos")))
-    val dvFiles: Set[String] = dvOpt match {
-      case None => Set.empty
-      case Some(dv) =>
-        dv.select(col("file")).distinct().collect()
-          .map(_.getString(0)).toSet
-    }
-    val packedInputs = scala.collection.mutable.HashSet[String]()
-    val newList = scala.collection.mutable.ArrayBuffer[String]()
-    var bins = 0
-    var maxBinBytes = 0L
-    from.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1).foreach {
+    // plan first (file sizes only): per partition, files under the
+    // target pack first-fit-decreasing into targetBytes-capped bins;
+    // a bin of one file has nothing to gain and re-lists
+    val plan = from.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1).map {
       case (part, files) =>
         val (small, big) = files.partition(f => sizes(f) < targetBytes)
-        newList ++= big
-        // first-fit-decreasing into targetBytes-capped bins
         val packed = scala.collection.mutable
           .ArrayBuffer[(scala.collection.mutable.ArrayBuffer[String], Long)]()
         small.sortBy(f => -sizes(f)).foreach { f =>
@@ -1916,42 +1991,47 @@ object VectorOps {
               packed += ((scala.collection.mutable.ArrayBuffer(f), sizes(f)))
           }
         }
-        packed.zipWithIndex.foreach { case ((binFiles, binBytes), i) =>
-          if (binFiles.length < 2) newList ++= binFiles // nothing to gain
-          else {
-            val tmp = new HPath(path, s"_rewrite_tmp/$part-bin$i")
-            val base = spark.read.option("mergeSchema", "true")
-              .parquet(binFiles.toSeq.map(f => s"$path/$f"): _*)
-            val cleaned =
-              if (dvOpt.isEmpty || !binFiles.exists(dvFiles)) base
-              else base
-                .withColumn("__dv_file",
-                  substring_index(col("_metadata.file_path"), "/", -2))
-                .withColumn("__dv_pos",
-                  col("_metadata.row_index").cast("long"))
-                .join(broadcast(dvOpt.get
-                    .filter(col("file").isin(binFiles.toSeq: _*))
-                    .select(col("file").as("__dv_file"),
-                      col("pos").as("__dv_pos"))),
-                  Seq("__dv_file", "__dv_pos"), "left_anti")
-                .drop("__dv_file", "__dv_pos")
-            packedInputs ++= binFiles
-            cleaned
-              .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val produced = fs.listStatus(tmp).filter(s =>
-              s.isFile && s.getPath.getName.endsWith(".parquet"))
-            require(produced.length == 1,
-              s"coalesce(1) must land one file, got ${produced.length}")
-            val dst = new HPath(path, s"$part/binpack$i-v$toVersion.parquet")
-            fs.delete(dst, false) // crash leftover: toVersion never committed
-            require(fs.rename(produced.head.getPath, dst),
-              s"rename to $dst failed")
-            fs.delete(tmp, true)
-            newList += s"$part/${dst.getName}"
-            bins += 1
-            maxBinBytes = math.max(maxBinBytes, binBytes)
-          }
+        (part, big, packed.toSeq)
+    }
+    val packedInputs = plan.flatMap(_._3.map(_._1)).filter(_.length >= 2)
+      .flatten.toSet
+    // DV sidecars are keyed by (file, pos) — repacking a DV-referenced
+    // file verbatim would copy its raw bytes into a binpack file the
+    // sidecar doesn't name, silently RESURRECTING every DV-deleted row.
+    // Instead the DV splits at FILE granularity: the positions of packed
+    // files are APPLIED while packing (the Delta OPTIMIZE behavior —
+    // purging already-reported-deleted rows is dataChange-free), and
+    // only the entries of RE-LISTED files re-land in the new version's
+    // sidecar (pointer carried verbatim when nothing it names packed)
+    val (dvMeta, dvFiles, dvApply) =
+      splitDvForRewrite(spark, snap, toVersion, packedInputs)
+    val newList = scala.collection.mutable.ArrayBuffer[String]()
+    var bins = 0
+    var maxBinBytes = 0L
+    plan.foreach { case (part, big, packed) =>
+      newList ++= big
+      packed.zipWithIndex.foreach { case ((binFiles, binBytes), i) =>
+        if (binFiles.length < 2) newList ++= binFiles
+        else {
+          val tmp = new HPath(path, s"_rewrite_tmp/$part-bin$i")
+          val base = spark.read.option("mergeSchema", "true")
+            .parquet(binFiles.toSeq.map(f => s"$path/$f"): _*)
+          (if (binFiles.exists(dvFiles)) dvApply(base) else base)
+            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val produced = fs.listStatus(tmp).filter(s =>
+            s.isFile && s.getPath.getName.endsWith(".parquet"))
+          require(produced.length == 1,
+            s"coalesce(1) must land one file, got ${produced.length}")
+          val dst = new HPath(path, s"$part/binpack$i-v$toVersion.parquet")
+          fs.delete(dst, false) // crash leftover: toVersion never committed
+          require(fs.rename(produced.head.getPath, dst),
+            s"rename to $dst failed")
+          fs.delete(tmp, true)
+          newList += s"$part/${dst.getName}"
+          bins += 1
+          maxBinBytes = math.max(maxBinBytes, binBytes)
         }
+      }
     }
     fs.delete(new HPath(path, "_rewrite_tmp"), true)
     // same constraint seam as rewriteVersioned: only the binpack outputs
@@ -1959,27 +2039,6 @@ object VectorOps {
     enforceTableChecks(spark, path, fromVersion,
       newList.toSeq.filterNot(from.contains),
       s"binpack commit of v$toVersion")
-    // the DV splits at FILE granularity: entries of packed files were
-    // applied physically above; entries of re-listed files stay valid
-    // and re-land (or the pointer carries verbatim when nothing it
-    // names packed)
-    val dvMeta: Map[String, String] = dvOpt match {
-      case None => Map.empty
-      case Some(_) if !dvFiles.exists(packedInputs) =>
-        carriedMeta(spark, path, fromVersion).view
-          .filterKeys(k => k == "dv" || k == "dvcount").toMap
-      case Some(dv) =>
-        val keptDv = dv.filter(
-          !col("file").isin(packedInputs.toSeq: _*))
-        val nKept = keptDv.count()
-        if (nKept == 0L) Map.empty
-        else {
-          val rel = s"_dv/v$toVersion"
-          keptDv.coalesce(1).write.mode("overwrite")
-            .parquet(s"$path/$rel")
-          Map("dv" -> rel, "dvcount" -> nKept.toString)
-        }
-    }
     writeManifest(spark, path, toVersion, newList.sorted.toSeq,
       carriedMeta(spark, path, fromVersion,
         except = Set("dv", "dvcount")) ++ dvMeta + ("op" -> "compact"))
@@ -2004,38 +2063,44 @@ object VectorOps {
 
   // -------------------------------------------- servability audit (fsck)
 
-  /** Distributed parquet-footer row counts for a version's files: one
-    * metadata read per file, executor-side (the file list rides an RDD —
-    * genuine per-partition imperative I/O, the one place RDDs earn their
-    * keep — and the Hadoop conf travels as a broadcast so object-store
-    * credentials aren't silently rebuilt from defaults). A file whose
-    * footer fails to open or parse reports -1 instead of throwing: a
-    * torn file is a VERDICT for the audit, not a crash. No data pages
-    * are read — at 100 TB the audit costs one footer round-trip per
-    * file, embarrassingly parallel.
+  /** Values `pull` takes from the parquet FOOTER of each of `files`
+    * (entries of the index at `path`): one metadata read per file,
+    * executor-side (the file list rides an RDD — genuine per-partition
+    * imperative I/O, the one place RDDs earn their keep — and the Hadoop
+    * conf travels as a broadcast so object-store credentials aren't
+    * silently rebuilt from defaults). A file whose footer fails to open
+    * or parse maps to `broken` instead of throwing: a torn file is a
+    * VERDICT, not a crash. No data pages are read — at 100 TB a harvest
+    * costs one footer round-trip per file, embarrassingly parallel.
     */
-  private def footerCounts(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           files: Seq[String]): Map[String, Long] = {
+  private def harvestFooters[T](spark: org.apache.spark.sql.SparkSession,
+                                path: String, files: Seq[String], broken: T)
+                               (pull: org.apache.parquet.hadoop.ParquetFileReader => T)
+      : Map[String, T] = {
     if (files.isEmpty) return Map.empty
     val confGet = GraftShim.hadoopConfAccessor(spark.sparkContext)
-    val root = path
     spark.sparkContext
-      .parallelize(files, math.min(files.length, 32))
-      .map { f =>
-        import org.apache.hadoop.fs.{Path => HPath}
+      .parallelize(files.map(f => (f, resolveRel(path, f))),
+        math.min(files.length, 32))
+      .map { case (f, p) =>
         import org.apache.parquet.hadoop.ParquetFileReader
         import org.apache.parquet.hadoop.util.HadoopInputFile
-        val n =
+        val v =
           try {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new HPath(s"$root/$f"), confGet()))
-            try r.getRecordCount finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => -1L }
-        (f, n)
+            val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(p), confGet()))
+            try pull(r) finally r.close()
+          } catch { case scala.util.control.NonFatal(_) => broken }
+        (f, v)
       }
-      .collect().toMap // one (path, long) pair per file — metadata-scale
+      .collect().toMap // one value per file — metadata-scale
   }
+
+  /** Footer row counts per file, -1 for an unreadable footer. */
+  private def footerCounts(spark: org.apache.spark.sql.SparkSession,
+                           path: String,
+                           files: Seq[String]): Map[String, Long] =
+    harvestFooters(spark, path, files, -1L)(_.getRecordCount)
 
   /** Commit-time integrity stats: `_manifests/v{N}.stats`, one
     * `relpath<TAB>rows` line per manifest file, from a footer-only scan.
@@ -2045,36 +2110,24 @@ object VectorOps {
     */
   def writeStats(spark: org.apache.spark.sql.SparkSession, path: String,
                  version: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val files = readManifest(spark, path, version)
     val counts = footerCounts(spark, path, files)
     files.foreach(f => require(counts.getOrElse(f, -1L) >= 0L,
       s"unreadable footer at commit time: $f"))
-    val p = new HPath(path, f"_manifests/v$version%05d.stats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // same atomic publish as manifests: a reader must never see a
     // half-written stats sidecar (fsck would report phantom corruption)
-    atomicCreate(fs, path, p,
-      files.map(f => s"$f\t${counts(f)}")
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      s"stats v$version")
+    commitSidecar(spark, path, f"v$version%05d.stats",
+      files.map(f => s"$f\t${counts(f)}"), s"stats v$version")
   }
 
   /** The commit-time stats of `version` — loud on a missing sidecar,
     * like [[readManifest]]. */
   def readStats(spark: org.apache.spark.sql.SparkSession, path: String,
-                version: Int): Map[String, Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path, f"_manifests/v$version%05d.stats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty)
+                version: Int): Map[String, Long] =
+    fileLines(spark, new org.apache.hadoop.fs.Path(path,
+        f"_manifests/v$version%05d.stats"))
       .map { l => val i = l.lastIndexOf('\t'); l.take(i) -> l.drop(i + 1).toLong }
       .toMap
-    finally in.close()
-  }
 
   /** Servability audit of a pinned version — the check that runs BEFORE
     * production traffic repins: (present) every manifest file still
@@ -2376,8 +2429,7 @@ object VectorOps {
     val upIds = broadcast(
       if (newFiles.isEmpty) // empty batch: a no-change commit, not a crash
         spark.range(0).select(col("id").cast("long").as(idCol))
-      else spark.read.option("basePath", path)
-        .parquet(newFiles.toSeq.map(f => s"$path/$f"): _*)
+      else readFiles(spark, path, newFiles.toSeq)
         .select(col(idCol).cast("long").as(idCol)).distinct())
     // TOTAL staged rows (replaced + inserted) — not just true inserts;
     // see the Scaladoc's return contract
@@ -2416,8 +2468,9 @@ object VectorOps {
     // a pending DV splits across the rewrite: entries in hot partitions
     // apply physically (their files are being rewritten anyway), the
     // rest carry; column mappings ride verbatim
-    val (dvMeta, dvApply) = splitDvForRewrite(spark, path, fromVersion,
-      toVersion, hot.keySet)
+    val (dvMeta, _, dvApply) = splitDvForRewrite(spark,
+      snapshot(spark, path, fromVersion), toVersion,
+      f => hot.contains(f.takeWhile(_ != '/')))
     val ddl = carriedMeta(spark, path, fromVersion,
       except = Set("deletes", "dv", "dvcount"))
     val (rewritten, _, _) =
@@ -2552,27 +2605,28 @@ object VectorOps {
         spark.range(0).select(col("id").cast("long").as("vid"),
           array().cast("array<double>").as("vec"))
       else
-        spark.read.option("basePath", path)
-          .parquet(files.map(f => s"$path/$f"): _*)
+        readFiles(spark, path, files)
           .select(col(idCol).cast("long").as("vid"),
             col(vecCol).cast("array<double>").as("vec"))
-    def delsOf(v: Int): DataFrame =
-      readDeletes(spark, path, v)
+    def delsOf(snap: Snapshot): DataFrame =
+      snap.tombstones(spark)
         .map(_.select(col("vid").cast("long").as("vid")))
         .getOrElse(emptyIds)
     val steps = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val op = readManifestMeta(spark, path, v).getOrElse("op", "")
+      val snapB = snapshot(spark, path, v)
+      val op = snapB.meta.getOrElse("op", "")
       // dataChange-free maintenance commits: bytes move, meaning doesn't
       // (localize copies inherited bytes under the clone root verbatim)
       if (op == "compact" || op == "apply" || op == "recluster" ||
           op == "localize") None
       else {
-        val a = readManifest(spark, path, v - 1).toSet
-        val b = readManifest(spark, path, v).toSet
+        val snapA = snapshot(spark, path, v - 1)
+        val a = snapA.files.toSet
+        val b = snapB.files.toSet
         val addRows = rowsOf((b -- a).toSeq.sorted)
         val remRows = rowsOf((a -- b).toSeq.sorted)
-        val delsA = delsOf(v - 1)
-        val delsB = delsOf(v)
+        val delsA = delsOf(snapA)
+        val delsB = delsOf(snapB)
         // content diff; visibility-masked (a row tombstoned at B was
         // never visible as an add; a row already dead at A is no delete)
         val insRows = addRows.exceptAll(remRows)
@@ -2614,7 +2668,7 @@ object VectorOps {
                 lit("delete").as("change_type"),
                 lit(null).cast("array<double>").as("vec"))
             else {
-              val prevFiles = readManifest(spark, path, v - 1)
+              val prevFiles = snapA.files
               val keep =
                 try {
                   val blooms = readBloomFilter(spark, path, v - 1, idCol)
@@ -2646,59 +2700,38 @@ object VectorOps {
   // ------------------------------------- file skipping (zone maps)
 
   /** Per-file (min, max) of `colName` straight from the parquet FOOTER
-    * column-chunk statistics — no data page is read (the writer already
-    * paid for the stats at write time; harvesting them is the same
-    * footer round-trip class as [[footerCounts]], executor-distributed).
-    * A file whose footer lacks usable stats for the column maps to the
-    * full range — unprunable, never wrong.
+    * column-chunk statistics ([[harvestFooters]]) — no data page is read
+    * (the writer already paid for the stats at write time). `conv` turns
+    * one raw statistic into a T (None: unusable); a file any block of
+    * which lacks usable stats for the column maps to None — unprunable,
+    * never wrong.
     */
-  private def footerMinMax(spark: org.apache.spark.sql.SparkSession,
-                           path: String, files: Seq[String],
-                           colName: String): Map[String, (Long, Long)] = {
-    if (files.isEmpty) return Map.empty
-    val confGet = GraftShim.hadoopConfAccessor(spark.sparkContext)
-    val root = path
-    spark.sparkContext
-      .parallelize(files, math.min(files.length, 32))
-      .map { f =>
-        import org.apache.hadoop.fs.{Path => HPath}
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        import scala.jdk.CollectionConverters._
-        val range =
-          try {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new HPath(s"$root/$f"), confGet()))
-            try {
-              val perBlock = r.getFooter.getBlocks.asScala.toSeq.flatMap {
-                blk =>
-                  blk.getColumns.asScala
-                    .find(_.getPath.toDotString == colName)
-                    .flatMap { c =>
-                      val s = c.getStatistics
-                      if (s == null || !s.hasNonNullValue) None
-                      else (s.genericGetMin, s.genericGetMax) match {
-                        case (mn: java.lang.Number, mx: java.lang.Number) =>
-                          Some((mn.longValue, mx.longValue))
-                        case _ => None
-                      }
-                    }
-              }
-              // every block must carry stats or the file is unprunable
-              if (perBlock.length == r.getFooter.getBlocks.size)
-                perBlock.reduceOption { (x, y) =>
-                  (math.min(x._1, y._1), math.max(x._2, y._2)) }
-              else None
-            } finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
-        (f, range.getOrElse((Long.MinValue, Long.MaxValue)))
-      }
-      .collect().toMap // one (path, min, max) triple per file
-  }
+  private def footerRanges[T](spark: org.apache.spark.sql.SparkSession,
+                              path: String, files: Seq[String],
+                              colName: String)(conv: Any => Option[T])
+                             (implicit ord: Ordering[T])
+      : Map[String, Option[(T, T)]] =
+    harvestFooters(spark, path, files, Option.empty[(T, T)]) { r =>
+      import scala.jdk.CollectionConverters._
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      val perBlock = blocks.flatMap(_.getColumns.asScala
+        .find(_.getPath.toDotString == colName)
+        .flatMap { c =>
+          val s: org.apache.parquet.column.statistics.Statistics[_] =
+            c.getStatistics
+          if (s == null || !s.hasNonNullValue) None
+          else for (mn <- conv(s.genericGetMin); mx <- conv(s.genericGetMax))
+            yield (mn, mx)
+        })
+      // every block must carry stats or the file is unprunable
+      if (perBlock.length == blocks.size)
+        perBlock.reduceOption((x, y) => (ord.min(x._1, y._1), ord.max(x._2, y._2)))
+      else None
+    }
 
   /** Commit-time zone map: `_manifests/v{N}.colstats`, one
-    * `relpath<TAB>col<TAB>min<TAB>max` line per manifest file, harvested
-    * from parquet footers ([[footerMinMax]]). Same single-file-create
+    * `relpath<TAB>col<TAB>min<TAB>max` line per manifest file and
+    * column, harvested from parquet footers. Same single-file-create
     * commit discipline as manifests and `.stats`. The point of paying a
     * footer pass ONCE at commit: every later pruned read
     * ([[readIndexVersionPruned]]) plans against one small sidecar
@@ -2709,23 +2742,25 @@ object VectorOps {
   def writeColStats(spark: org.apache.spark.sql.SparkSession, path: String,
                     version: Int, cols: String*): Unit = {
     require(cols.nonEmpty, "writeColStats: at least one column")
-    val files = readManifest(spark, path, version)
-    commitSidecar(spark, path, f"v$version%05d.colstats",
-      colStatsLines(spark, path, files, cols), s"colstats v$version")
+    writeSidecarFull(spark, path, version, colStatsSidecar(spark, path, cols))
   }
 
-  /** The zone-map lines for `files` — the pure computation both the
-    * full ([[writeColStats]]) and incremental
+  /** The zone-map lines for `files` (column-major, manifest order) — the
+    * pure computation both the full ([[writeColStats]]) and incremental
     * ([[writeColStatsIncremental]]) writers emit, exposed so audits can
     * prove an incremental sidecar byte-identical to a from-scratch
-    * rebuild. Deterministic per (file, col): data files are immutable,
-    * so a line computed at any commit equals the line recomputed later.
+    * rebuild. A file with no usable footer stats gets the full range.
     */
   def colStatsLines(spark: org.apache.spark.sql.SparkSession, path: String,
                     files: Seq[String], cols: Seq[String]): Seq[String] = {
-    val ranges = cols.map(c => c -> footerMinMax(spark, path, files, c))
-    for { (c, byFile) <- ranges; f <- files }
-      yield { val (mn, mx) = byFile(f); s"$f\t$c\t$mn\t$mx" }
+    val ranges = cols.map(c => c -> footerRanges(spark, path, files, c) {
+      case n: java.lang.Number => Some(n.longValue)
+      case _ => None
+    })
+    for { (c, byFile) <- ranges; f <- files } yield {
+      val (mn, mx) = byFile(f).getOrElse((Long.MinValue, Long.MaxValue))
+      s"$f\t$c\t$mn\t$mx"
+    }
   }
 
   /** Atomic sidecar publish under `_manifests/` — the manifest commit
@@ -2756,13 +2791,7 @@ object VectorOps {
     import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(path, s"_manifests/$name")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toIndexedSeq)
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(fileLines(spark, p))
   }
 
   /** The newest version < `version` that committed a `<vNNNNN><suffix>`
@@ -2777,60 +2806,129 @@ object VectorOps {
       .find(v => fs.exists(new HPath(path, f"_manifests/v$v%05d$suffix")))
   }
 
-  /** INCREMENTAL zone-map maintenance — the carry-forward model the KMV
+  // ------------------------ skipping sidecars: one codec per kind
+
+  /** One skipping-sidecar kind (zone map, string bounds, bloom) as the
+    * generic writers and reader see it: it commits as
+    * `_manifests/vNNNNN.<suffix>`, leads with the format `header` (None:
+    * headerless), has `fields` tab fields per line of which the first
+    * `keyFields` key it (the file, or the file and column), holds the
+    * `keys` of a file list in that order, and `build`s the lines of a
+    * set of files. Lines are deterministic per key — data files are
+    * immutable — so a line carried from an earlier version equals the
+    * line a rebuild would compute.
+    */
+  private final case class Sidecar(suffix: String, header: Option[String],
+                                   fields: Int, keyFields: Int,
+                                   keys: Seq[String] => Seq[String],
+                                   build: Seq[String] => Seq[String]) {
+    def name(version: Int): String = f"v$version%05d.$suffix"
+    def split(line: String): Array[String] = {
+      val parts = line.split('\t')
+      require(parts.length == fields, s"malformed $suffix line: ${line.take(80)}")
+      parts
+    }
+    def key(line: String): String = split(line).take(keyFields).mkString("\t")
+  }
+
+  private def colStatsSidecar(spark: org.apache.spark.sql.SparkSession,
+                              path: String, cols: Seq[String]) =
+    Sidecar("colstats", None, 4, 2,
+      files => for (c <- cols; f <- files) yield s"$f\t$c",
+      colStatsLines(spark, path, _, cols))
+
+  private def strStatsSidecar(spark: org.apache.spark.sql.SparkSession,
+                              path: String, colName: String,
+                              truncateTo: Int) =
+    Sidecar("strstats", Some(stringStatsSidecarHeader(truncateTo)), 4, 2,
+      _.map(f => s"$f\t$colName"),
+      stringStatsLines(spark, path, _, colName, truncateTo))
+
+  private def bloomSidecar(spark: org.apache.spark.sql.SparkSession,
+                           path: String, colName: String, fpp: Double) =
+    Sidecar(s"bloom.$colName", Some(bloomSidecarHeader(fpp)), 2, 1,
+      identity, bloomFilterLines(spark, path, _, colName, fpp))
+
+  /** Commit `sc` for every file of `version`'s manifest; returns the
+    * number of lines harvested (all of them). */
+  private def writeSidecarFull(spark: org.apache.spark.sql.SparkSession,
+                               path: String, version: Int,
+                               sc: Sidecar): Int = {
+    val lines = sc.build(readManifest(spark, path, version))
+    commitSidecar(spark, path, sc.name(version), sc.header.toSeq ++ lines,
+      s"${sc.suffix} v$version")
+    lines.length
+  }
+
+  /** INCREMENTAL sidecar maintenance — the carry-forward model the KMV
     * NDV sidecar proved ([[writeNdvSketch]]'s rank-monotonic merge):
-    * instead of re-harvesting every footer of the version's manifest
+    * instead of re-harvesting every file of the version's manifest
     * (O(table) per commit — the one write-path scale-killer in an
-    * otherwise metadata-priced design), only the files ADDED since the
-    * newest earlier sidecar are harvested; every carried file's line is
-    * copied VERBATIM from the previous sidecar (data files are
-    * immutable, so the line cannot have changed), and removed files'
-    * lines simply don't re-land. The committed bytes are IDENTICAL to a
-    * from-scratch [[writeColStats]] — same (col × manifest-order) line
-    * order, same deterministic per-line payload — so readers cannot
-    * tell the difference; only the write cost changes: ∝ the commit's
-    * delta, not the table. Falls back to the full build when no earlier
-    * sidecar exists. Returns (nCarried, nHarvested) in line units —
-    * `nHarvested` is exactly |added files| × |cols| when the previous
-    * sidecar covered the same columns, the audit every caller should
-    * gate on.
+    * otherwise metadata-priced design), only the files whose keys the
+    * newest earlier sidecar lacks are built; every carried line is
+    * copied VERBATIM (data files are immutable, so the line cannot have
+    * changed), and removed files' lines simply don't re-land. The
+    * committed bytes are IDENTICAL to a from-scratch build — same key
+    * order, same deterministic per-line payload — so readers cannot tell
+    * the difference; only the write cost changes: ∝ the commit's delta,
+    * not the table. Carrying happens ONLY under the same format header
+    * (ADVICE r12): a prior sidecar built with different parameters (a
+    * string truncation, a bloom fpp) or a pre-header one (a v1 bloom,
+    * whose unmixed keys would also break probe correctness) falls back
+    * to the full build, as does a version with no earlier sidecar.
+    * Returns (nCarried, nHarvested) in line units — `nHarvested` is
+    * exactly the added files' line count when the previous sidecar
+    * covered the same columns, the audit every caller should gate on.
+    */
+  private def writeSidecarIncremental(spark: org.apache.spark.sql.SparkSession,
+                                      path: String, version: Int,
+                                      sc: Sidecar): (Int, Int) = {
+    val prev = prevSidecarVersion(spark, path, version, s".${sc.suffix}")
+      .flatMap(v => readSidecarLines(spark, path, sc.name(v)))
+      .filter(lines => sc.header.forall(lines.headOption.contains))
+    prev match {
+      case None => (0, writeSidecarFull(spark, path, version, sc))
+      case Some(lines) =>
+        val prevByKey = lines.filterNot(_.startsWith("#"))
+          .map(l => sc.key(l) -> l).toMap
+        val files = readManifest(spark, path, version)
+        val keys = sc.keys(files)
+        val missing = keys.filterNot(prevByKey.contains)
+        val stale = missing.map(_.takeWhile(_ != '\t')).toSet
+        val fresh = sc.build(files.filter(stale))
+          .map(l => sc.key(l) -> l).toMap
+        commitSidecar(spark, path, sc.name(version), sc.header.toSeq ++
+          keys.map(k => prevByKey.getOrElse(k, fresh(k))),
+          s"${sc.suffix} v$version")
+        (keys.length - missing.length, missing.length)
+    }
+  }
+
+  /** The committed sidecar `sc` of `version`: its format header (None:
+    * headerless) and its lines split into fields — loud on a missing
+    * sidecar and on a malformed line. Only `sc`'s name and line shape
+    * are used here, never its build parameters. */
+  private def readSidecar(spark: org.apache.spark.sql.SparkSession,
+                          path: String, version: Int, sc: Sidecar)
+      : (Option[String], Seq[Array[String]]) = {
+    val lines = readSidecarLines(spark, path, sc.name(version))
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"missing sidecar ${sc.name(version)} under $path"))
+    (lines.headOption.filter(_.startsWith("#")),
+      lines.filterNot(_.startsWith("#")).map(sc.split))
+  }
+
+  /** INCREMENTAL zone-map maintenance ([[writeSidecarIncremental]]):
+    * committed bytes identical to [[writeColStats]], footers harvested
+    * only for the commit's added files. Returns (nCarried, nHarvested)
+    * in line units.
     */
   def writeColStatsIncremental(spark: org.apache.spark.sql.SparkSession,
                                path: String, version: Int, cols: String*)
       : (Int, Int) = {
     require(cols.nonEmpty, "writeColStatsIncremental: at least one column")
-    val files = readManifest(spark, path, version)
-    prevSidecarVersion(spark, path, version, ".colstats") match {
-      case None =>
-        writeColStats(spark, path, version, cols: _*)
-        (0, files.length * cols.length)
-      case Some(prev) =>
-        val prevByKey: Map[(String, String), String] =
-          readSidecarLines(spark, path, f"v$prev%05d.colstats").get
-            .map { l =>
-              val parts = l.split('\t')
-              require(parts.length == 4, s"malformed colstats line: $l")
-              (parts(0), parts(1)) -> l
-            }.toMap
-        val freshByCol: Map[String, Map[String, (Long, Long)]] =
-          cols.map { c =>
-            val missing = files.filterNot(f => prevByKey.contains((f, c)))
-            c -> (if (missing.isEmpty) Map.empty[String, (Long, Long)]
-                  else footerMinMax(spark, path, missing, c))
-          }.toMap
-        var carried = 0; var harvested = 0
-        val lines = for { c <- cols; f <- files } yield
-          prevByKey.get((f, c)) match {
-            case Some(l) => carried += 1; l
-            case None =>
-              harvested += 1
-              val (mn, mx) = freshByCol(c)(f)
-              s"$f\t$c\t$mn\t$mx"
-          }
-        commitSidecar(spark, path, f"v$version%05d.colstats", lines,
-          s"colstats v$version")
-        (carried, harvested)
-    }
+    writeSidecarIncremental(spark, path, version,
+      colStatsSidecar(spark, path, cols))
   }
 
   /** The committed zone map of `version` for `colName` — file →
@@ -2839,21 +2937,23 @@ object VectorOps {
     */
   def readColStats(spark: org.apache.spark.sql.SparkSession, path: String,
                    version: Int, colName: String)
-      : Map[String, (Long, Long)] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path, f"_manifests/v$version%05d.colstats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty)
-      .flatMap { l =>
-        val parts = l.split('\t')
-        require(parts.length == 4, s"malformed colstats line: $l")
-        if (parts(1) == colName)
-          Some(parts(0) -> (parts(2).toLong, parts(3).toLong))
-        else None
-      }.toMap
-    finally in.close()
+      : Map[String, (Long, Long)] =
+    readSidecar(spark, path, version,
+        colStatsSidecar(spark, path, Seq(colName)))._2
+      .collect { case Array(f, c, mn, mx) if c == colName =>
+        f -> (mn.toLong, mx.toLong) }.toMap
+
+  /** The one pruned read: the files of `version` that `keep` admits,
+    * scanned through [[scan]] (an empty kept set reads as an empty frame
+    * with the version's schema). Returns (rows, keptFiles, filesTotal).
+    */
+  private def prunedScan(spark: org.apache.spark.sql.SparkSession,
+                         path: String, version: Int)
+                        (keep: String => Boolean)
+      : (DataFrame, Seq[String], Int) = {
+    val snap = snapshot(spark, path, version)
+    val kept = snap.files.filter(keep)
+    (scan(spark, snap, kept), kept, snap.files.length)
   }
 
   /** Read a pinned version with FILE SKIPPING for the range predicate
@@ -2889,30 +2989,29 @@ object VectorOps {
     require(preds.nonEmpty, "readIndexVersionPrunedRect: need a predicate")
     preds.foreach { case (c, lo, hi) =>
       require(lo <= hi, s"readIndexVersionPrunedRect: $c lo $lo > hi $hi") }
-    val files = readManifest(spark, path, version)
     val zonesByCol = preds.map { case (c, _, _) =>
       c -> readColStats(spark, path, version, c) }.toMap
-    val keep = files.filter { f =>
+    val (rows, kept, total) = prunedScan(spark, path, version) { f =>
       preds.forall { case (c, lo, hi) =>
         val (mn, mx) = zonesByCol(c)
           .getOrElse(f, (Long.MinValue, Long.MaxValue))
         mx >= lo && mn <= hi
       }
     }
-    val rows =
-      if (keep.isEmpty)
-        readIndexVersion(spark, path, version).limit(0)
-      else spark.read.option("basePath", path)
-        .parquet(keep.map(f => s"$path/$f"): _*)
     val filtered = preds.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi }.reduce(_ && _)
-    (rows.filter(filtered), keep.length, files.length)
+    (rows.filter(filtered), kept.length, total)
   }
 
   // --------------------------------- string zone maps (prefix skipping)
 
-  private def cmpU(a: Array[Byte], b: Array[Byte]): Int =
-    java.util.Arrays.compareUnsigned(a, b)
+  /** Unsigned lexicographic byte order — parquet's order for binary
+    * statistics, so every string-bound comparison here uses it, never
+    * String.compareTo (UTF-16 code-unit order diverges above 0x7F). */
+  private object UnsignedBytes extends Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a, b)
+  }
 
   /** The least byte string strictly greater than EVERY string having
     * `p` as a prefix: `p` with its last non-0xFF byte incremented and
@@ -2929,75 +3028,6 @@ object VectorOps {
     }
   }
 
-  /** Per-file (min, max) BYTE statistics of a string column, harvested
-    * from parquet footers like [[footerMinMax]] — parquet orders binary
-    * stats by unsigned lexicographic bytes, so all comparisons here are
-    * [[cmpU]], never String.compareTo (UTF-16 code-unit order diverges
-    * above 0x7F). A file with any stats-less block maps to None —
-    * unprunable, never wrong.
-    */
-  private def footerMinMaxStr(spark: org.apache.spark.sql.SparkSession,
-                              path: String, files: Seq[String],
-                              colName: String)
-      : Map[String, Option[(Array[Byte], Array[Byte])]] = {
-    if (files.isEmpty) return Map.empty
-    val confGet = GraftShim.hadoopConfAccessor(spark.sparkContext)
-    val root = path
-    spark.sparkContext
-      .parallelize(files, math.min(files.length, 32))
-      .map { f =>
-        import org.apache.hadoop.fs.{Path => HPath}
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        import scala.jdk.CollectionConverters._
-        val range =
-          try {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new HPath(s"$root/$f"), confGet()))
-            try {
-              val perBlock = r.getFooter.getBlocks.asScala.toSeq.flatMap {
-                blk =>
-                  blk.getColumns.asScala
-                    .find(_.getPath.toDotString == colName)
-                    .flatMap { c =>
-                      val s = c.getStatistics
-                      if (s == null || !s.hasNonNullValue) None
-                      else (s.genericGetMin, s.genericGetMax) match {
-                        case (mn: org.apache.parquet.io.api.Binary,
-                              mx: org.apache.parquet.io.api.Binary) =>
-                          Some((mn.getBytes, mx.getBytes))
-                        case _ => None
-                      }
-                    }
-              }
-              if (perBlock.length == r.getFooter.getBlocks.size)
-                perBlock.reduceOption { (x, y) =>
-                  (if (java.util.Arrays.compareUnsigned(x._1, y._1) <= 0)
-                     x._1 else y._1,
-                   if (java.util.Arrays.compareUnsigned(x._2, y._2) >= 0)
-                     x._2 else y._2)
-                }
-              else None
-            } finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
-        (f, range)
-      }
-      .collect().toMap
-  }
-
-  /** Commit-time STRING zone map: `_manifests/v{N}.strstats`, one
-    * `relpath<TAB>col<TAB>b64(lower)<TAB>b64(upperExcl)|*` line per
-    * manifest file. Bounds are TRUNCATED to `truncateTo` bytes (the
-    * Iceberg truncate transform, public): the lower bound is the min's
-    * byte prefix (truncation only lowers it), the upper is the max's
-    * truncated prefix incremented — an EXCLUSIVE bound ≥ every value in
-    * the file, `*` when the prefix is all 0xFF (unbounded, unprunable
-    * from above). Truncation is what makes string zone maps affordable:
-    * the sidecar carries 2×16 bytes per file regardless of how long the
-    * strings are. A file with no harvestable stats writes `*<TAB>*` —
-    * unprunable, never wrong. Same footer-pass-at-commit /
-    * one-sidecar-at-plan-time economics as [[writeColStats]].
-    */
   /** The format header every string-stats sidecar leads with (ADVICE
     * r12): records the `truncateTo` the bounds were built under, so the
     * incremental writer detects a parameter change and rebuilds instead
@@ -3008,21 +3038,26 @@ object VectorOps {
   def stringStatsSidecarHeader(truncateTo: Int): String =
     s"#strstats\tv2\ttruncate=$truncateTo"
 
-  private def strStatsHeaderTruncate(lines: Seq[String]): Option[String] =
-    lines.headOption.collect {
-      case h if h.startsWith("#strstats\tv2\ttruncate=") =>
-        h.drop("#strstats\tv2\ttruncate=".length)
-    }
-
+  /** Commit-time STRING zone map: `_manifests/v{N}.strstats`, one
+    * `relpath<TAB>col<TAB>b64(lower)<TAB>b64(upperExcl)|*` line per
+    * manifest file after the format header. Bounds are TRUNCATED to
+    * `truncateTo` bytes (the Iceberg truncate transform, public): the
+    * lower bound is the min's byte prefix (truncation only lowers it),
+    * the upper is the max's truncated prefix incremented — an EXCLUSIVE
+    * bound ≥ every value in the file, `*` when the prefix is all 0xFF
+    * (unbounded, unprunable from above). Truncation is what makes string
+    * zone maps affordable: the sidecar carries 2×16 bytes per file
+    * regardless of how long the strings are. A file with no harvestable
+    * stats writes `*<TAB>*` — unprunable, never wrong. Same
+    * footer-pass-at-commit / one-sidecar-at-plan-time economics as
+    * [[writeColStats]].
+    */
   def writeStringStats(spark: org.apache.spark.sql.SparkSession,
                        path: String, version: Int, colName: String,
                        truncateTo: Int = 16): Unit = {
     require(truncateTo > 0, "writeStringStats: truncateTo must be positive")
-    val files = readManifest(spark, path, version)
-    commitSidecar(spark, path, f"v$version%05d.strstats",
-      stringStatsSidecarHeader(truncateTo) +:
-        stringStatsLines(spark, path, files, colName, truncateTo),
-      s"strstats v$version")
+    writeSidecarFull(spark, path, version,
+      strStatsSidecar(spark, path, colName, truncateTo))
   }
 
   /** The string zone-map lines for `files` — the pure computation
@@ -3032,7 +3067,10 @@ object VectorOps {
   def stringStatsLines(spark: org.apache.spark.sql.SparkSession,
                        path: String, files: Seq[String], colName: String,
                        truncateTo: Int = 16): Seq[String] = {
-    val byFile = footerMinMaxStr(spark, path, files, colName)
+    val byFile = footerRanges(spark, path, files, colName) {
+      case b: org.apache.parquet.io.api.Binary => Some(b.getBytes)
+      case _ => None
+    }(UnsignedBytes)
     val b64 = java.util.Base64.getEncoder
     files.map { f =>
       byFile(f) match {
@@ -3046,53 +3084,20 @@ object VectorOps {
     }
   }
 
-  /** INCREMENTAL string-zone-map maintenance — the same carry-forward
-    * model as [[writeColStatsIncremental]] (footer harvest only over
-    * the commit's added files, carried lines verbatim, committed bytes
-    * identical to a full rebuild). Returns (nCarried, nHarvested).
-    * NOTE: keyed (file, col) like colstats, so a sidecar built for one
-    * column carries cleanly only under the same column — a different
-    * `colName` re-harvests everything, loudly visible in the audit.
+  /** INCREMENTAL string-zone-map maintenance ([[writeSidecarIncremental]]:
+    * footer harvest only over the commit's added files, carried lines
+    * verbatim, committed bytes identical to a full rebuild). Returns
+    * (nCarried, nHarvested). Keyed (file, col) like colstats, so a
+    * sidecar built for one column carries cleanly only under the same
+    * column — a different `colName` re-harvests everything, loudly
+    * visible in the audit.
     */
   def writeStringStatsIncremental(spark: org.apache.spark.sql.SparkSession,
                                   path: String, version: Int,
                                   colName: String, truncateTo: Int = 16)
-      : (Int, Int) = {
-    val files = readManifest(spark, path, version)
-    prevSidecarVersion(spark, path, version, ".strstats") match {
-      case None =>
-        writeStringStats(spark, path, version, colName, truncateTo)
-        (0, files.length)
-      case Some(prev) =>
-        val prevLines =
-          readSidecarLines(spark, path, f"v$prev%05d.strstats").get
-        // carry only under the SAME truncation (ADVICE r12): lines built
-        // at a different truncateTo would silently violate the
-        // byte-identical-to-full-rebuild contract — rebuild instead
-        if (!strStatsHeaderTruncate(prevLines)
-            .contains(truncateTo.toString)) {
-          writeStringStats(spark, path, version, colName, truncateTo)
-          return (0, files.length)
-        }
-        val prevByKey: Map[(String, String), String] = prevLines
-          .filterNot(_.startsWith("#"))
-          .map { l =>
-            val parts = l.split('\t')
-            require(parts.length == 4,
-              s"malformed strstats line: ${l.take(80)}")
-            (parts(0), parts(1)) -> l
-          }.toMap
-        val added = files.filterNot(f => prevByKey.contains((f, colName)))
-        val fresh = stringStatsLines(spark, path, added, colName,
-            truncateTo)
-          .map { l => l.take(l.indexOf('\t')) -> l }.toMap
-        val lines = stringStatsSidecarHeader(truncateTo) +:
-          files.map(f => prevByKey.getOrElse((f, colName), fresh(f)))
-        commitSidecar(spark, path, f"v$version%05d.strstats", lines,
-          s"strstats v$version")
-        (files.length - added.length, added.length)
-    }
-  }
+      : (Int, Int) =
+    writeSidecarIncremental(spark, path, version,
+      strStatsSidecar(spark, path, colName, truncateTo))
 
   /** Post-commit skipping-sidecar maintenance in ONE call — the hook an
     * append / merge / compact flow runs right after its manifest lands
@@ -3134,22 +3139,14 @@ object VectorOps {
   def readStringStats(spark: org.apache.spark.sql.SparkSession,
                       path: String, version: Int, colName: String)
       : Map[String, Option[(Array[Byte], Option[Array[Byte]])]] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path, f"_manifests/v$version%05d.strstats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b64 = java.util.Base64.getDecoder
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(l => l.nonEmpty && !l.startsWith("#")) // format header
-      .flatMap { l =>
-        val parts = l.split('\t')
-        require(parts.length == 4, s"malformed strstats line: ${l.take(80)}")
-        if (parts(1) != colName) None
-        else if (parts(2) == "*") Some(parts(0) -> None)
-        else Some(parts(0) -> Some((b64.decode(parts(2)),
-          if (parts(3) == "*") None else Some(b64.decode(parts(3))))))
+    readSidecar(spark, path, version,
+        strStatsSidecar(spark, path, colName, 16))._2
+      .collect { case Array(f, c, lo, hi) if c == colName =>
+        f -> (if (lo == "*") None
+              else Some((b64.decode(lo),
+                if (hi == "*") None else Some(b64.decode(hi)))))
       }.toMap
-    finally in.close()
   }
 
   /** Read a pinned version with FILE SKIPPING for the predicate
@@ -3171,21 +3168,16 @@ object VectorOps {
     val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val pEnd = prefixUpperBound(p)
     val zones = readStringStats(spark, path, version, colName)
-    val files = readManifest(spark, path, version)
-    val keep = files.filter { f =>
+    val (rows, kept, total) = prunedScan(spark, path, version) { f =>
       zones.get(f).flatten match {
         case None => true // no stats — unprunable, never wrong
         case Some((lower, upperExcl)) =>
           // query range [p, pEnd) ∩ file range [lower, upperExcl) ≠ ∅
-          upperExcl.forall(u => cmpU(p, u) < 0) &&
-            pEnd.forall(pe => cmpU(lower, pe) < 0)
+          upperExcl.forall(u => UnsignedBytes.lt(p, u)) &&
+            pEnd.forall(pe => UnsignedBytes.lt(lower, pe))
       }
     }
-    val rows =
-      if (keep.isEmpty) readIndexVersion(spark, path, version).limit(0)
-      else spark.read.option("basePath", path)
-        .parquet(keep.map(f => s"$path/$f"): _*)
-    (rows.filter(col(colName).startsWith(prefix)), keep.length, files.length)
+    (rows.filter(col(colName).startsWith(prefix)), kept.length, total)
   }
 
   /** RE-CLUSTERING rewrite — the layout-maintenance op every
@@ -3262,32 +3254,6 @@ object VectorOps {
 
   // ------------------------ point-lookup skipping (bloom sidecars)
 
-  /** The manifest-relative name of a data file from its scan URI
-    * (`input_file_name` yields `file:///…/centroid=K/part-….parquet`;
-    * manifests store `centroid=K/part-….parquet`).
-    */
-  private def relTwo(uri: String): String =
-    uri.split('/').takeRight(2).mkString("/")
-
-  /** Commit-time per-file BLOOM sidecar:
-    * `_manifests/v{N}.bloom.{col}`, one `relpath<TAB>base64(filter)`
-    * line per manifest file, built in ONE column-projected pass over the
-    * version's data (per-partition partial filters merged by key — the
-    * raw values never shuffle, only filter bitmaps do). Zone maps
-    * ([[writeColStats]]) serve RANGES; a point lookup on a
-    * high-cardinality column that the layout is NOT clustered on has
-    * min/max ranges that cover everything and degrades to a full scan —
-    * per-file blooms are the standard answer (the Parquet bloom-filter /
-    * lakehouse bloom-index design, public literature): no false
-    * negatives ever, false positives at `fpp`. Filter sizing is per-file
-    * from the committed footer row counts; Spark's own
-    * `util.sketch.BloomFilter` (fixed-seed hashing) keeps the sidecar
-    * deterministic for a given file set. Cost model: the build pays one
-    * column scan at commit time; every later point read plans against
-    * one sidecar. At very large file counts the single sidecar file
-    * should shard (same evolution manifests themselves take — a
-    * documented scale path, not a semantic change).
-    */
   /** The splitmix64 finalizer applied to every value BEFORE it enters a
     * bloom sidecar and to every probe key before testing. Spark's
     * `util.sketch.BloomFilter` derives its k probe positions from two
@@ -3323,152 +3289,130 @@ object VectorOps {
     */
   def bloomSidecarHeader(fpp: Double): String = s"#bloom\tv2\tfpp=$fpp"
 
-  /** Parse a bloom sidecar's header line; None for a pre-header (v1)
-    * sidecar. */
-  private def bloomHeaderFpp(lines: Seq[String]): Option[String] =
-    lines.headOption.collect {
-      case h if h.startsWith("#bloom\tv2\tfpp=") => h.drop("#bloom\tv2\tfpp=".length)
-    }
-
-  private def requireBloomV2(lines: Seq[String], what: String): Unit =
-    require(bloomHeaderFpp(lines).isDefined,
-      s"$what: missing or unrecognized '#bloom v2' format header — this " +
-        "sidecar predates splitmix64 key mixing; probing it with mixed " +
-        "keys would yield false negatives (silently wrong pruning). " +
-        "Rebuild it with writeBloomFilter.")
-
+  /** Commit-time per-file BLOOM sidecar:
+    * `_manifests/v{N}.bloom.{col}`, one `relpath<TAB>base64(filter)`
+    * line per manifest file after the format header, built in ONE
+    * column-projected pass over the version's data
+    * ([[bloomFilterLines]]). Zone maps ([[writeColStats]]) serve RANGES;
+    * a point lookup on a high-cardinality column that the layout is NOT
+    * clustered on has min/max ranges that cover everything and degrades
+    * to a full scan — per-file blooms are the standard answer (the
+    * Parquet bloom-filter / lakehouse bloom-index design, public
+    * literature): no false negatives ever, false positives at `fpp`.
+    * Cost model: the build pays one column scan at commit time; every
+    * later point read plans against one sidecar. At very large file
+    * counts the single sidecar file should shard (same evolution
+    * manifests themselves take — a documented scale path, not a
+    * semantic change).
+    */
   def writeBloomFilter(spark: org.apache.spark.sql.SparkSession,
                        path: String, version: Int, colName: String,
-                       fpp: Double = 0.001): Unit = {
-    val files = readManifest(spark, path, version)
-    commitSidecar(spark, path, f"v$version%05d.bloom.$colName",
-      bloomSidecarHeader(fpp) +: bloomFilterLines(spark, path, files, colName, fpp),
-      s"bloom sidecar v$version.$colName")
-  }
+                       fpp: Double = 0.001): Unit =
+    writeSidecarFull(spark, path, version,
+      bloomSidecar(spark, path, colName, fpp))
 
   /** The per-file bloom lines for `files` — the pure computation shared
     * by [[writeBloomFilter]] (all manifest files) and
     * [[writeBloomFilterIncremental]] (only a commit's added files):
     * ONE column-projected scan of exactly `files`, per-partition
-    * partial filters merged by key. Deterministic per file (fixed-seed
-    * hashing, footer-sized filters over immutable bytes), so a line
-    * built at any commit is byte-equal to the same file's line in a
-    * full rebuild.
+    * partial filters merged by key (the raw values never shuffle, only
+    * filter bitmaps do). Filter sizing is per-file from the footer row
+    * counts; Spark's own `util.sketch.BloomFilter` (fixed-seed hashing)
+    * keeps every line deterministic per file, so a line built at any
+    * commit is byte-equal to the same file's line in a full rebuild.
     */
   def bloomFilterLines(spark: org.apache.spark.sql.SparkSession,
                        path: String, files: Seq[String], colName: String,
                        fpp: Double = 0.001): Seq[String] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.util.sketch.BloomFilter
     if (files.isEmpty) return Seq.empty
+    // the scan names each row's file by URI: filters key by the URI's
+    // path, which a clone-inherited (external) entry resolves to as
+    // surely as a local one
+    val fs = new HPath(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val uriPath = files.map(f =>
+      f -> fs.makeQualified(new HPath(resolveRel(path, f))).toUri.getPath).toMap
     // SIZING FLOOR: below ~3k bits Spark's double-hashed filter has an
     // empirical FP floor ≈ k/bits regardless of the requested fpp
     // (measured: 320-bit filter, 10 mixed items → 2.7e-3 FP at nominal
     // 1e-6; 28.8k bits → nominal). 1000 expected items (3.6 KB at 1e-6)
     // is noise per file and irrelevant at production file sizes, where
     // row counts dwarf it — but it makes small-file sidecars honest.
-    val nByFile = footerCounts(spark, path, files)
-      .map { case (f, n) => f -> math.max(1000L, n) }
-    val bcN = spark.sparkContext.broadcast(nByFile)
-    val partials = spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f"): _*)
+    val bcN = spark.sparkContext.broadcast(footerCounts(spark, path, files)
+      .map { case (f, n) => uriPath(f) -> math.max(1000L, n) })
+    val merged = readFiles(spark, path, files)
       .select(input_file_name().as("_file"),
         col(colName).cast("long").as("_v"))
       .where(col("_v").isNotNull)
       .rdd.mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap[String,
-          org.apache.spark.util.sketch.BloomFilter]()
+        val acc = scala.collection.mutable.HashMap[String, BloomFilter]()
         it.foreach { r =>
-          val rel = relTwo(r.getString(0))
-          val bf = acc.getOrElseUpdate(rel,
-            org.apache.spark.util.sketch.BloomFilter.create(
-              bcN.value.getOrElse(rel, 1L), fpp))
+          val f = new java.net.URI(r.getString(0)).getPath
+          val bf = acc.getOrElseUpdate(f,
+            BloomFilter.create(bcN.value.getOrElse(f, 1L), fpp))
           bf.putLong(mixBloomKey(r.getLong(1)))
         }
         acc.iterator
       }
-    val merged = partials
       .reduceByKey { (a, b) => a.mergeInPlace(b); a }
       .collect().toMap // one bitmap per file — ~2 bytes/row at fpp 1e-3
     files.map { f =>
-      val bf = merged.getOrElse(f, // a file with zero non-null values
-        org.apache.spark.util.sketch.BloomFilter.create(1000L, fpp))
+      val bf = merged.getOrElse(uriPath(f), // a file with zero non-null values
+        BloomFilter.create(1000L, fpp))
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       s"$f\t${java.util.Base64.getEncoder.encodeToString(bos.toByteArray)}"
     }
   }
 
-  /** INCREMENTAL bloom-sidecar maintenance — same carry-forward model
-    * as [[writeColStatsIncremental]], but the saving is DATA I/O, not
-    * just footers: the full [[writeBloomFilter]] re-reads the indexed
-    * column of EVERY file in the version; here only the files added
-    * since the newest earlier sidecar are scanned (one column-projected
-    * pass over the delta), carried files' lines copy verbatim, removed
-    * files' lines drop. Committed bytes identical to a full rebuild
-    * (manifest-order lines, deterministic per-file filters). Falls back
-    * to the full build when no earlier sidecar exists. Returns
+  /** INCREMENTAL bloom-sidecar maintenance ([[writeSidecarIncremental]])
+    * — the saving is DATA I/O, not just footers: the full
+    * [[writeBloomFilter]] re-reads the indexed column of EVERY file in
+    * the version; here only the files added since the newest earlier
+    * sidecar are scanned (one column-projected pass over the delta),
+    * carried files' lines copy verbatim, removed files' lines drop.
+    * Committed bytes identical to a full rebuild. Returns
     * (nCarried, nHarvested) — nHarvested == |added files| is the
     * only-the-delta-was-scanned audit.
     */
   def writeBloomFilterIncremental(spark: org.apache.spark.sql.SparkSession,
                                   path: String, version: Int,
                                   colName: String, fpp: Double = 0.001)
-      : (Int, Int) = {
-    val files = readManifest(spark, path, version)
-    prevSidecarVersion(spark, path, version, s".bloom.$colName") match {
-      case None =>
-        writeBloomFilter(spark, path, version, colName, fpp)
-        (0, files.length)
-      case Some(prev) =>
-        val prevLines =
-          readSidecarLines(spark, path, f"v$prev%05d.bloom.$colName").get
-        // carry ONLY under identical build parameters (ADVICE r12): a
-        // prior sidecar with a different fpp — or a pre-header (v1,
-        // unmixed-key) sidecar — would break both the documented
-        // byte-identical-to-full-rebuild contract and, for v1, probe
-        // correctness itself. Parameter drift falls back to a full
-        // rebuild, honestly audited as all-harvested.
-        if (!bloomHeaderFpp(prevLines).contains(fpp.toString)) {
-          writeBloomFilter(spark, path, version, colName, fpp)
-          return (0, files.length)
-        }
-        val prevByFile: Map[String, String] = prevLines
-          .filterNot(_.startsWith("#"))
-          .map { l =>
-            val i = l.indexOf('\t')
-            require(i > 0, s"malformed bloom line: ${l.take(80)}")
-            l.take(i) -> l
-          }.toMap
-        val added = files.filterNot(prevByFile.contains)
-        val fresh = bloomFilterLines(spark, path, added, colName, fpp)
-          .map { l => l.take(l.indexOf('\t')) -> l }.toMap
-        val lines = bloomSidecarHeader(fpp) +:
-          files.map(f => prevByFile.getOrElse(f, fresh(f)))
-        commitSidecar(spark, path, f"v$version%05d.bloom.$colName", lines,
-          s"bloom sidecar v$version.$colName")
-        (files.length - added.length, added.length)
-    }
+      : (Int, Int) =
+    writeSidecarIncremental(spark, path, version,
+      bloomSidecar(spark, path, colName, fpp))
+
+  /** The (file, base64 filter) entries of `version`'s bloom sidecar for
+    * `colName` — loud on a missing sidecar and on one without the v2
+    * header (probing a pre-mix sidecar with mixed keys would yield false
+    * negatives: silently wrong pruning). */
+  private def bloomEntries(spark: org.apache.spark.sql.SparkSession,
+                           path: String, version: Int,
+                           colName: String): Seq[(String, String)] = {
+    val (header, lines) = readSidecar(spark, path, version,
+      bloomSidecar(spark, path, colName, 0.001))
+    require(header.exists(_.startsWith("#bloom\tv2\tfpp=")),
+      s"bloom sidecar v$version.$colName: missing or unrecognized " +
+        "'#bloom v2' format header — this sidecar predates splitmix64 key " +
+        "mixing; probing it with mixed keys would yield false negatives " +
+        "(silently wrong pruning). Rebuild it with writeBloomFilter.")
+    lines.map(l => (l(0), l(1)))
   }
+
+  private def decodeBloom(b64: String): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(b64)))
 
   /** The committed bloom sidecar of `version` for `colName` — file →
     * filter. Loud on a missing sidecar, like [[readColStats]].
     */
   def readBloomFilter(spark: org.apache.spark.sql.SparkSession,
                       path: String, version: Int, colName: String)
-      : Map[String, org.apache.spark.util.sketch.BloomFilter] = {
-    val lines = readSidecarLines(spark, path,
-        f"v$version%05d.bloom.$colName")
-      .getOrElse(throw new java.io.IOException(
-        s"missing bloom sidecar v$version.$colName under $path"))
-    requireBloomV2(lines, s"bloom sidecar v$version.$colName")
-    lines.filterNot(_.startsWith("#"))
-      .map { l =>
-        val i = l.indexOf('\t')
-        require(i > 0, s"malformed bloom line: ${l.take(80)}")
-        l.take(i) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(
-            java.util.Base64.getDecoder.decode(l.drop(i + 1))))
-      }.toMap
-  }
+      : Map[String, org.apache.spark.util.sketch.BloomFilter] =
+    bloomEntries(spark, path, version, colName)
+      .map { case (f, b64) => f -> decodeBloom(b64) }.toMap
 
   /** Read a pinned version with POINT-LOOKUP file skipping: only files
     * whose committed bloom filter might contain `value` are opened (a
@@ -3483,15 +3427,9 @@ object VectorOps {
   def readIndexVersionPoint(spark: org.apache.spark.sql.SparkSession,
                             path: String, version: Int, colName: String,
                             value: Long): (DataFrame, Seq[String], Int) = {
-    val files = readManifest(spark, path, version)
-    val blooms = readBloomFilter(spark, path, version, colName)
-    val keep = files.filter(f =>
-      blooms.get(f).forall(_.mightContainLong(mixBloomKey(value))))
-    val rows =
-      if (keep.isEmpty) readIndexVersion(spark, path, version).limit(0)
-      else spark.read.option("basePath", path)
-        .parquet(keep.map(f => s"$path/$f"): _*)
-    (rows.filter(col(colName) === value), keep, files.length)
+    val (rows, kept, total) =
+      readIndexVersionSemi(spark, path, version, colName, Seq(value))
+    (rows.filter(col(colName) === value), kept, total)
   }
 
   /** DYNAMIC FILE PRUNING for a join — the Delta DFP design (public):
@@ -3504,12 +3442,10 @@ object VectorOps {
     * (a matching row's file is always kept); a false-positive file costs
     * one wasted open at rate ≈ |keys|·fpp. `maxKeys` keeps the probe's
     * O(|keys|·|files|) driver cost explicit — past it, the right tool is
-    * the shuffle join, not DFP (Delta's own fallback). At a million
-    * files the probe itself distributes (broadcast the key set, ship
-    * bloom shards to executors) — a documented scale path, same
-    * semantics. Returns (rows of kept files, keptList, filesTotal);
-    * the caller's join applies the exact predicate on top — blooms
-    * prune, they never answer.
+    * the shuffle join, not DFP (Delta's own fallback), or the
+    * executor-side probe of [[readIndexVersionSemiDist]]. Returns (rows
+    * of kept files, keptList, filesTotal); the caller's join applies the
+    * exact predicate on top — blooms prune, they never answer.
     */
   def readIndexVersionSemi(spark: org.apache.spark.sql.SparkSession,
                            path: String, version: Int, colName: String,
@@ -3519,16 +3455,9 @@ object VectorOps {
     require(keys.length <= maxKeys,
       s"readIndexVersionSemi: ${keys.length} keys > $maxKeys — a key set " +
         "this large should shuffle-join, not bloom-probe (the DFP cutoff)")
-    val files = readManifest(spark, path, version)
     val blooms = readBloomFilter(spark, path, version, colName)
-    val keep = files.filter(f =>
-      blooms.get(f).forall(b =>
-        keys.exists(k => b.mightContainLong(mixBloomKey(k)))))
-    val rows =
-      if (keep.isEmpty) readIndexVersion(spark, path, version).limit(0)
-      else spark.read.option("basePath", path)
-        .parquet(keep.map(f => s"$path/$f"): _*)
-    (rows, keep, files.length)
+    prunedScan(spark, path, version)(f => blooms.get(f).forall(b =>
+      keys.exists(k => b.mightContainLong(mixBloomKey(k)))))
   }
 
   /** [[readIndexVersionSemi]] PAST the driver-probe cutoff — the
@@ -3538,7 +3467,7 @@ object VectorOps {
     * (exactly the build side a broadcast join materializes anyway —
     * past broadcastable key sizes the right tool is the shuffle join,
     * not DFP, same as the driver variant documents); the bloom sidecar
-    * lines ship to executors as an RDD of (file, filter) shards, each
+    * entries ship to executors as an RDD of (file, filter) shards, each
     * partition probes its shard against the broadcast keys, and only
     * one BOOLEAN per file returns to the driver — metadata-scale,
     * independent of |keys|. Kept-set semantics are IDENTICAL to the
@@ -3553,38 +3482,23 @@ object VectorOps {
                                path: String, version: Int, colName: String,
                                keys: DataFrame)
       : (DataFrame, Seq[String], Int) = {
-    val files = readManifest(spark, path, version)
     val keyArr = keys.select(col(keys.columns.head).cast("long"))
       .where(col(keys.columns.head).isNotNull)
       .distinct().collect().map(_.getLong(0))
     require(keyArr.nonEmpty, "readIndexVersionSemiDist: need a key")
     val bcKeys = spark.sparkContext.broadcast(keyArr)
-    val rawLines = readSidecarLines(spark, path,
-        f"v$version%05d.bloom.$colName")
-      .getOrElse(throw new java.io.IOException(
-        s"missing bloom sidecar v$version.$colName under $path"))
-    requireBloomV2(rawLines, s"bloom sidecar v$version.$colName")
-    val lines = rawLines.filterNot(_.startsWith("#"))
+    val entries = bloomEntries(spark, path, version, colName)
     val probed = spark.sparkContext
-      .parallelize(lines, math.max(1, math.min(lines.length, 32)))
+      .parallelize(entries, math.max(1, math.min(entries.length, 32)))
       .mapPartitions { it =>
         val ks = bcKeys.value
-        it.map { l =>
-          val i = l.indexOf('\t')
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              java.util.Base64.getDecoder.decode(l.substring(i + 1))))
-          (l.substring(0, i),
-            ks.exists(k => bf.mightContainLong(mixBloomKey(k))))
+        it.map { case (f, b64) =>
+          val bf = decodeBloom(b64)
+          (f, ks.exists(k => bf.mightContainLong(mixBloomKey(k))))
         }
       }
       .collect().toMap // one boolean per file — metadata-scale
-    val keep = files.filter(f => probed.getOrElse(f, true))
-    val rows =
-      if (keep.isEmpty) readIndexVersion(spark, path, version).limit(0)
-      else spark.read.option("basePath", path)
-        .parquet(keep.map(f => s"$path/$f"): _*)
-    (rows, keep, files.length)
+    prunedScan(spark, path, version)(f => probed.getOrElse(f, true))
   }
 
   // ----------------------------------------------- deletion vectors (DV)
@@ -3597,8 +3511,7 @@ object VectorOps {
     */
   def readDeletionVector(spark: org.apache.spark.sql.SparkSession,
                          path: String, version: Int): Option[DataFrame] =
-    readManifestMeta(spark, path, version).get("dv")
-      .map(rel => spark.read.parquet(resolveRel(path, rel)))
+    snapshot(spark, path, version).deletionVector(spark)
 
   /** Commit a POSITION delete (deletion vector): rows of `fromVersion`
     * matching `doomed` are marked by `(file, row-index)` in a sidecar
@@ -3633,15 +3546,14 @@ object VectorOps {
       : (Long, Long) = {
     require(!manifestExists(spark, path, toVersion),
       s"version $toVersion is already committed under $path")
-    val files = readManifest(spark, path, fromVersion)
-    val scan = spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f"): _*)
-    val fresh = scan
+    val from = snapshot(spark, path, fromVersion)
+    val files = from.files
+    val fresh = scan(spark, from, files)
       .where(doomed)
       .select(
         substring_index(col("_metadata.file_path"), "/", -2).as("file"),
         col("_metadata.row_index").cast("long").as("pos"))
-    val pending = readDeletionVector(spark, path, fromVersion)
+    val pending = from.deletionVector(spark)
     val merged = pending.map(p => fresh.unionByName(
       p.select(col("file"), col("pos")))).getOrElse(fresh).distinct()
     val sidecarRel = s"_dv/v$toVersion"
@@ -3677,29 +3589,13 @@ object VectorOps {
 
   /** Read a pinned version with its deletion vector applied: the
     * manifest's files, minus exactly the `(file, pos)` pairs the
-    * version's DV names. The anti-join key is scan metadata — no data
-    * column is consulted, so rows with duplicate or absent keys delete
-    * correctly. The DV side broadcasts (it is delete-sized); at a DV so
-    * large broadcast stops fitting, the same join repartitions by
-    * `file` — a tuning knob, not a semantic change. A version with no
-    * DV reads as a plain pinned read.
+    * version's DV names ([[subtractDv]]). A version with no DV reads as
+    * a plain pinned read.
     */
   def readIndexVersionDv(spark: org.apache.spark.sql.SparkSession,
                          path: String, version: Int): DataFrame = {
-    val base = readIndexVersion(spark, path, version)
-    readDeletionVector(spark, path, version) match {
-      case None => base
-      case Some(dv) =>
-        base
-          .withColumn("__dv_file",
-            substring_index(col("_metadata.file_path"), "/", -2))
-          .withColumn("__dv_pos", col("_metadata.row_index").cast("long"))
-          .join(
-            broadcast(dv.select(col("file").as("__dv_file"),
-              col("pos").cast("long").as("__dv_pos"))),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-          .drop("__dv_file", "__dv_pos")
-    }
+    val snap = snapshot(spark, path, version)
+    withoutDv(spark, snap, scan(spark, snap, snap.files))
   }
 
   // ------------------------------------------------------------ restore
@@ -3766,8 +3662,8 @@ object VectorOps {
     */
   def metaAgg(spark: org.apache.spark.sql.SparkSession, path: String,
               version: Int, colName: String, idCol: String): MetaAgg = {
-    val meta = readManifestMeta(spark, path, version)
-    val files = readManifest(spark, path, version)
+    val snap = snapshot(spark, path, version)
+    val (meta, files) = (snap.meta, snap.files)
     val hasTomb = meta.contains("deletes")
     val hasDv = meta.contains("dv")
     val statsOpt: Option[Map[String, Long]] =
@@ -3800,7 +3696,7 @@ object VectorOps {
       case _ =>
         // fallback scan with EVERY delete kind applied: DV positions
         // first (scan-metadata anti-join), then id tombstones
-        val scanned = readIndexVersionVisible(spark, path, version, idCol)
+        val scanned = visible(spark, snap, idCol)
         val r = scanned.agg(count(lit(1)), min(col(colName).cast("long")),
           max(col(colName).cast("long"))).head()
         val n = countMeta.getOrElse(r.getLong(0))
@@ -3893,20 +3789,13 @@ object VectorOps {
   /** The physical columns dropped as of `version` (empty when none). */
   def droppedColumns(spark: org.apache.spark.sql.SparkSession,
                      path: String, version: Int): Seq[String] =
-    readManifestMeta(spark, path, version).get("coldrop")
-      .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
+    snapshot(spark, path, version).droppedColumns
 
   /** The column mapping of `version` (physical → logical), empty when
     * the version predates any rename. */
   def columnMapping(spark: org.apache.spark.sql.SparkSession, path: String,
                     version: Int): Map[String, String] =
-    readManifestMeta(spark, path, version).get("colmap")
-      .map(_.split(',').toSeq.map { e =>
-        val i = e.indexOf('=')
-        require(i > 0, s"malformed colmap entry: $e")
-        e.take(i) -> e.drop(i + 1)
-      }.toMap)
-      .getOrElse(Map.empty)
+    snapshot(spark, path, version).columnMapping
 
   /** [[readIndexVersionMor]] with the version's column mapping applied —
     * the logical-schema read: physical columns rename to their mapped
@@ -3917,12 +3806,12 @@ object VectorOps {
   def readIndexVersionLogical(spark: org.apache.spark.sql.SparkSession,
                               path: String, version: Int,
                               physIdCol: String): DataFrame = {
-    val base = readIndexVersionVisible(spark, path, version, physIdCol)
-    val dropped = droppedColumns(spark, path, version)
-      .filter(base.columns.contains)
+    val snap = snapshot(spark, path, version)
+    val base = visible(spark, snap, physIdCol)
+    val dropped = snap.droppedColumns.filter(base.columns.contains)
     val undropped =
       if (dropped.isEmpty) base else base.drop(dropped: _*)
-    columnMapping(spark, path, version).foldLeft(undropped) {
+    snap.columnMapping.foldLeft(undropped) {
       case (df, (phys, logical)) => df.withColumnRenamed(phys, logical)
     }
   }
@@ -3955,13 +3844,11 @@ object VectorOps {
     */
   def writeNdvSketch(spark: org.apache.spark.sql.SparkSession, path: String,
                      version: Int, colName: String, k: Int = 64): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val files = readManifest(spark, path, version)
     val topk = udaf(new graft.expr.TopKByScore(k))
     val perFile =
       if (files.isEmpty) Seq.empty[(String, Seq[Double])]
-      else spark.read.option("basePath", path)
-        .parquet(files.map(f => s"$path/$f"): _*)
+      else readFiles(spark, path, files)
         .select(substring_index(input_file_name(), "/", -2).as("f"),
           kmvHash(col(colName)).as("h"))
         .distinct() // KMV is over the distinct value set
@@ -3971,13 +3858,9 @@ object VectorOps {
         .select(col("f"), expr("transform(tk, e -> -e.score)").as("hs"))
         .collect().map(r => r.getString(0) -> r.getSeq[Double](1).toSeq)
         .toSeq.sortBy(_._1)
-    val p = new HPath(path, f"_manifests/v$version%05d.ndv.$colName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = s"#k:$k" +: perFile.map { case (f, hs) =>
-      s"$f\t${hs.map(h => (h * 4294967296.0).toLong).mkString(",")}" }
-    atomicCreate(fs, path, p,
-      lines.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+    commitSidecar(spark, path, f"v$version%05d.ndv.$colName",
+      s"#k:$k" +: perFile.map { case (f, hs) =>
+        s"$f\t${hs.map(h => (h * 4294967296.0).toLong).mkString(",")}" },
       s"ndv sketch v$version($colName)")
   }
 
@@ -3988,14 +3871,8 @@ object VectorOps {
   def readNdvSketch(spark: org.apache.spark.sql.SparkSession, path: String,
                     version: Int, colName: String)
       : (Int, Map[String, Seq[Double]]) = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path, f"_manifests/v$version%05d.ndv.$colName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val all =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toIndexedSeq
-      finally in.close()
+    val all = fileLines(spark, new org.apache.hadoop.fs.Path(path,
+      f"_manifests/v$version%05d.ndv.$colName"))
     val k = all.headOption.filter(_.startsWith("#k:"))
       .map(_.stripPrefix("#k:").toInt)
       .getOrElse(throw new IllegalStateException(
@@ -4043,8 +3920,7 @@ object VectorOps {
       : Map[String, Long] = {
     require(constraints.nonEmpty, "checkConstraints: need a constraint")
     if (files.isEmpty) return constraints.map(_._1 -> 0L).toMap
-    val staged = spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f"): _*)
+    val staged = readFiles(spark, path, files)
     val aggs = constraints.map { case (name, cond) =>
       sum(when(coalesce(cond.cast("boolean"), lit(true)), 0L)
         .otherwise(1L)).as(name) }
@@ -4089,17 +3965,7 @@ object VectorOps {
     * Column), empty when none are registered. */
   def tableChecks(spark: org.apache.spark.sql.SparkSession, path: String,
                   version: Int): Seq[(String, Column)] =
-    readManifestMeta(spark, path, version).get("checks") match {
-      case None => Seq.empty
-      case Some(b64) =>
-        new String(java.util.Base64.getDecoder.decode(b64),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split('\n').toSeq.filter(_.nonEmpty).map { l =>
-            val i = l.indexOf('\t')
-            require(i > 0, s"malformed checks entry: ${l.take(80)}")
-            l.take(i) -> expr(l.drop(i + 1))
-          }
-    }
+    snapshot(spark, path, version).checks
 
   /** Enforce `fromVersion`'s table checks over `newFiles` (the files a
     * writer is ABOUT to commit — staged batches, rewritten partitions,
@@ -4208,14 +4074,12 @@ object VectorOps {
       val wave = remaining.take(waveSize)
       remaining = remaining.drop(waveSize)
       kept ++= wave
-      val waveTop = scoreOf(spark.read.option("basePath", path)
-          .parquet(wave.map(f => s"$path/$f"): _*))
+      val waveTop = scoreOf(readFiles(spark, path, wave))
         .orderBy(col("score").desc).limit(k)
         .collect().map(_.getDouble(1))
       top = (top ++ waveTop).sorted(Ordering[Double].reverse).take(k)
     }
-    val rows = scoreOf(spark.read.option("basePath", path)
-        .parquet(kept.toSeq.map(f => s"$path/$f"): _*))
+    val rows = scoreOf(readFiles(spark, path, kept.toSeq))
       .select(col(idCol), round(col("score"), 4).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
@@ -4324,8 +4188,9 @@ object VectorOps {
     // apply physically, the rest carry — merging on a DV-carrying
     // version must not resurrect DV-deleted rows in untouched
     // partitions; column mappings ride verbatim
-    val (dvMeta, dvApply) = splitDvForRewrite(spark, path, fromVersion,
-      toVersion, hot)
+    val (dvMeta, _, dvApply) = splitDvForRewrite(spark,
+      snapshot(spark, path, fromVersion), toVersion,
+      f => hot.contains(f.takeWhile(_ != '/')))
     val ddl = carriedMeta(spark, path, fromVersion,
       except = Set("deletes", "dv", "dvcount"))
     val (rewritten, _, _) =

@@ -105,14 +105,11 @@ object FoodPipeline {
   }
 
   /** S5-shaped CSV sink (header, minimal quoting — SURVEY §7.4: byte-level
-    * QUOTE_NONNUMERIC fidelity is a non-goal) and S9 parquet export.
+    * QUOTE_NONNUMERIC fidelity is a non-goal).
     */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("header", "true").csv(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
 
   /** End-to-end: 4 CSV scans → one lazy wide DataFrame. */
   def run(spark: SparkSession, inputDir: String): DataFrame = {

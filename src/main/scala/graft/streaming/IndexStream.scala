@@ -422,28 +422,21 @@ object IndexStream {
             name.stripPrefix("v").stripSuffix(".manifest").toInt
           }.sorted
         versions.foreach { v =>
-          val meta = VectorOps.readManifestMeta(spark, indexPath, v)
-          val op = meta.getOrElse("op", "")
-          val files = VectorOps.readManifest(spark, indexPath, v)
-          val prev: Seq[String] =
-            if (v == 1) Seq.empty
-            else VectorOps.readManifest(spark, indexPath, v - 1)
-          val prevMeta =
-            if (v == 1) Map.empty[String, String]
-            else VectorOps.readManifestMeta(spark, indexPath, v - 1)
-          val added = files.filterNot(prev.toSet)
-          val removed = prev.filterNot(files.toSet)
+          val snap = VectorOps.snapshot(spark, indexPath, v)
+          val op = snap.meta.getOrElse("op", "")
+          val prev =
+            if (v == 1) VectorOps.Snapshot(indexPath, 0, Seq.empty, Map.empty)
+            else VectorOps.snapshot(spark, indexPath, v - 1)
+          val added = snap.files.filterNot(prev.files.toSet)
+          val removed = prev.files.filterNot(snap.files.toSet)
           val sidecarChanged = Seq("deletes", "dv").exists(k =>
-            meta.get(k) != prevMeta.get(k))
+            snap.meta.get(k) != prev.meta.get(k))
           if (Set("compact", "recluster", "apply", "localize").contains(op))
             nIgnored.incrementAndGet(): Unit // bytes moved, meaning didn't
           else if (removed.isEmpty && !sidecarChanged) {
-            if (added.nonEmpty) {
-              spark.read.option("basePath", indexPath)
-                .parquet(added.map(f => s"$indexPath/$f"): _*)
-                .write.mode("overwrite")
+            if (added.nonEmpty)
+              VectorOps.scan(spark, snap, added).write.mode("overwrite")
                 .parquet(s"$downstreamDir/commit_v$v")
-            }
             nAppends.incrementAndGet()
             afterCommit(v)
           } else if (skipChangeCommits) nSkipped.incrementAndGet(): Unit

@@ -65,6 +65,38 @@ class CloneSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("a clone's inherited entries serve sidecar writes and the pruned " +
+      "and point reads exactly like the source") {
+    val (dir, src, _) = freshIndex("skip")
+    try {
+      val dst = dir.resolve("branch").toString
+      VectorOps.cloneIndex(spark, src, dst, 1)
+      Seq(src, dst).foreach { p =>
+        VectorOps.writeColStats(spark, p, 1, "vec_id")
+        VectorOps.writeBloomFilter(spark, p, 1, "vec_id")
+      }
+      // the clone's zone map holds the source's ranges, entry for entry
+      assert(VectorOps.readColStats(spark, dst, 1, "vec_id")
+        .map { case (f, z) => f.stripPrefix(src + "/") -> z } ==
+        VectorOps.readColStats(spark, src, 1, "vec_id"))
+      def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+        df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+      val (srcR, srcKept, srcN) =
+        VectorOps.readIndexVersionPruned(spark, src, 1, "vec_id", 10L, 40L)
+      val (dstR, dstKept, dstN) =
+        VectorOps.readIndexVersionPruned(spark, dst, 1, "vec_id", 10L, 40L)
+      assert(ids(srcR).nonEmpty && ids(dstR) == ids(srcR))
+      assert(dstKept == srcKept && dstN == srcN)
+      val id = ids(srcR).head
+      val (srcP, srcPK, _) =
+        VectorOps.readIndexVersionPoint(spark, src, 1, "vec_id", id)
+      val (dstP, dstPK, _) =
+        VectorOps.readIndexVersionPoint(spark, dst, 1, "vec_id", id)
+      assert(ids(srcP) == Seq(id) && ids(dstP) == Seq(id))
+      assert(dstPK.length == srcPK.length && srcPK.length < srcN)
+    } finally rmrf(dir)
+  }
+
   test("a clone carries the source's pending tombstone pointer; its " +
       "MOR read resolves the cross-root sidecar") {
     val (dir, src, _) = freshIndex("tomb")

@@ -171,4 +171,34 @@ class DeletionVectorSpec extends SparkSpec {
         embs.count())
     } finally rmrf(dir)
   }
+
+  test("ivfTopKFromPath on a versioned index probes the latest version: " +
+      "no DV-deleted id and no id twice after a compaction") {
+    val dir = java.nio.file.Files.createTempDirectory("dv_topk")
+    try {
+      val path = dir.resolve("index").toString
+      val idx = VectorOps.ivfIndexDeterministic(
+        embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", 4)
+      VectorOps.ivfWrite(idx, path)
+      VectorOps.writeManifest(spark, path, 1,
+        VectorOps.listIndexFiles(spark, path))
+      // an appended batch leaves several small files per partition
+      VectorOps.ivfAppendBatch(spark, embs.filter(col("vec_id") % 3 === 0),
+        idx.centroids, path, "vec_id", "embedding", 0L)
+      val doomed = col("vec_id") % 4 === 1
+      val (nDv, _) = VectorOps.commitDeletionVector(spark, path, 2, 3, doomed)
+      assert(nDv > 0)
+      val (bins, _, _, _) =
+        VectorOps.ivfCompactSmall(spark, path, 3, 4, Long.MaxValue)
+      assert(bins > 0)
+      val first = embs.orderBy("vec_id").head()
+      val q = first.getSeq[Float](first.fieldIndex("embedding"))
+      val got = VectorOps.ivfTopKFromPath(spark, path, idx.centroids,
+          "vec_id", "embedding", q, k = 100000, nProbe = 4)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(got.distinct.length == got.length)
+      assert(!got.exists(_ % 4 == 1))
+      assert(got.length == embs.filter(!doomed).count())
+    } finally rmrf(dir)
+  }
 }
