@@ -844,6 +844,20 @@ object VectorOps {
             l.take(i) -> expr(l.drop(i + 1))
           }
     }
+
+    /** The carried-state headers ([[CarriedKeys]]) a successor version
+      * inherits, minus the keys its writer consumes itself (`except`). */
+    def carried(except: Set[String] = Set.empty): Map[String, String] =
+      meta.filter { case (k, _) => CarriedKeys.contains(k) && !except(k) }
+
+    /** This snapshot as another index root sees it — the source of a
+      * cross-root commit ([[cloneIndex]], [[promoteVersion]]): file
+      * entries and the sidecar pointers (`deletes`, `dv`) absolutize
+      * against this root; value headers carry verbatim. */
+    def rootedAt(root: String): Snapshot =
+      Snapshot(root, version, files.map(resolveRel(path, _)),
+        meta ++ Seq("deletes", "dv").flatMap(k =>
+          meta.get(k).map(rel => k -> resolveRel(path, rel))))
   }
 
   /** The [[Snapshot]] committed as `version` — fails loudly on a missing
@@ -1037,23 +1051,14 @@ object VectorOps {
                             path: String, version: Int, tag: String,
                             df: DataFrame,
                             meta: Map[String, String] = Map.empty): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(tag.matches("[A-Za-z0-9_-]+"),
       s"snapshot tag must be filesystem-safe: $tag")
-    val fs = new HPath(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val stageRel = s"_staging/snap_$tag"
-    df.coalesce(1).write.mode("overwrite").parquet(s"$path/$stageRel")
-    val part = fs.listStatus(new HPath(path, stageRel))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(part.length == 1, s"coalesce(1) wrote ${part.length} files")
     val rel = s"centroid=0/snap-$tag.parquet"
-    fs.mkdirs(new HPath(path, "centroid=0"))
-    val dst = new HPath(path, rel)
-    fs.delete(dst, false) // crash leftover: referenced by no manifest
-    require(fs.rename(part.head.getPath, dst), s"rename to $dst failed")
-    fs.delete(new HPath(path, stageRel), true)
-    writeManifest(spark, path, version, Seq(rel), meta)
+    land(spark, path, s"_staging/snap_$tag", Some(version),
+      df.coalesce(1).write)((_, _) => rel)
+    // a whole snapshot: nothing carries from any earlier version
+    commitVersion(spark, Snapshot(path, 0, Seq.empty, Map.empty), version,
+      Seq(rel), Nil, Set.empty, meta)
   }
 
   /** The committed batch ids with their sink namespace STRIPPED — the
@@ -1236,40 +1241,111 @@ object VectorOps {
   /** The manifest-header keys that describe a version's LOGICAL state
     * beyond its file list — pending deletes of both kinds and the
     * column-mapping DDL. Every writer that commits a successor version
-    * carries these through [[carriedMeta]] unless it explicitly
-    * CONSUMES one (folds a delete physically, recomputes a mapping):
-    * the single shared list is what makes "a new commit path forgot a
-    * key and silently resurrected deleted rows / dropped columns"
-    * structurally impossible — the exact bug class a per-site
-    * hand-picked `filterKeys` invited.
+    * carries these ([[commitVersion]]) unless it explicitly CONSUMES one
+    * (folds a delete physically, recomputes a mapping): the single
+    * shared list is what makes "a new commit path forgot a key and
+    * silently resurrected deleted rows / dropped columns" structurally
+    * impossible — the exact bug class a per-site hand-picked
+    * `filterKeys` invited.
     */
   private[ops] val CarriedKeys: Seq[String] =
     Seq("deletes", "dv", "dvcount", "colmap", "coldrop", "checks")
 
-  /** `fromVersion`'s carried-state headers, minus the keys the calling
-    * writer consumes itself (`except`). */
-  private def carriedMeta(spark: org.apache.spark.sql.SparkSession,
-                          path: String, version: Int,
-                          except: Set[String] = Set.empty)
-      : Map[String, String] =
-    readManifestMeta(spark, path, version).view
-      .filterKeys(k => CarriedKeys.contains(k) && !except.contains(k))
-      .toMap
-
-  /** [[carriedMeta]] for cross-root commits (clone / promote): sidecar
-    * POINTER keys absolutize against the source root so the new index
-    * can resolve them; value keys (counts, column mappings) carry
-    * verbatim.
+  /** The one commit every versioned writer ends in: enforce `from`'s
+    * table checks on the files this commit `created` (staged batches,
+    * rewritten partitions, binpack outputs, localized copies — never the
+    * re-listed corpus; refusal comes before the manifest create, so the
+    * new files stay unreferenced), then commit `toVersion` under
+    * `from`'s root as `files` with `from`'s carried state minus the keys
+    * the writer `consumes`, plus the writer's own `headers`. A writer
+    * thus carries every [[CarriedKeys]] entry by default and names only
+    * what it consumes. `note` qualifies the refusal message.
     */
-  private def carriedMetaAbs(spark: org.apache.spark.sql.SparkSession,
-                             root: String, version: Int)
-      : Map[String, String] = {
-    val m = readManifestMeta(spark, root, version)
-    val pointers = Seq("deletes", "dv").flatMap(k =>
-      m.get(k).map(rel => k -> resolveRel(root, rel)))
-    val verbatim = Seq("dvcount", "colmap", "coldrop", "checks").flatMap(k =>
-      m.get(k).map(v => k -> v))
-    (pointers ++ verbatim).toMap
+  private def commitVersion(spark: org.apache.spark.sql.SparkSession,
+                            from: Snapshot, toVersion: Int,
+                            files: Seq[String], created: Seq[String],
+                            consumes: Set[String],
+                            headers: Map[String, String],
+                            note: String = ""): Unit = {
+    val checks = from.checks
+    if (created.nonEmpty && checks.nonEmpty)
+      requireChecks(spark, from.path, created, checks,
+        s"commit of v$toVersion$note")
+    writeManifest(spark, from.path, toVersion, files,
+      from.carried(consumes) ++ headers)
+  }
+
+  /** Throw the commit refusal ("already committed") when `version` is
+    * committed under `path` — the guard a writer runs before it
+    * replaces anything named by a version: once the version is
+    * committed, the name belongs to whoever committed it. */
+  private def refuseCommitted(spark: org.apache.spark.sql.SparkSession,
+                              path: String, version: Int): Unit =
+    if (manifestExists(spark, path, version))
+      throw new java.io.IOException(
+        s"manifest version $version already committed under $path")
+
+  /** The one landing step of every writer that adds data files: write
+    * `out` (the configured writer of the frame to land) into the
+    * staging directory `stageRel`, list its parquet outputs in name
+    * order (partition directory, then file), move each to the caller's
+    * deterministic name `name(dir, i)` — `dir` the `centroid=`
+    * directory (`""` for an unpartitioned write), `i` the file's index
+    * within it — and drop the staging directory. Nothing landed is
+    * visible until a manifest lists it, and a retry replaces its own
+    * crash leftovers — but only while `toVersion`, the version the
+    * names are keyed by, is uncommitted: once it is committed the names
+    * belong to the version that won, and the landing refuses
+    * ([[refuseCommitted]]) before it touches any of them. Returns the
+    * landed relpaths in that order.
+    */
+  private def land(spark: org.apache.spark.sql.SparkSession, path: String,
+                   stageRel: String, toVersion: Option[Int],
+                   out: org.apache.spark.sql.DataFrameWriter[
+                     org.apache.spark.sql.Row])
+                  (name: (String, Int) => String): Seq[String] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val stage = new HPath(path, stageRel)
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    out.mode("overwrite").parquet(s"$path/$stageRel")
+    def outputs(dir: HPath) = fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName)
+    val dirs = fs.listStatus(stage).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid="))
+      .map(_.getPath.getName).sorted
+    val moves = ("" +: dirs).flatMap { d =>
+      outputs(if (d.isEmpty) stage else new HPath(stage, d))
+        .zipWithIndex.map { case (src, i) => src -> name(d, i) }
+    }
+    val rels = moves.map(_._2)
+    require(rels.distinct.length == rels.length,
+      s"landing names collide under $stageRel: ${rels.mkString(", ")}")
+    if (rels.exists(r => fs.exists(new HPath(path, r))))
+      toVersion.foreach(refuseCommitted(spark, path, _))
+    moves.foreach { case (src, rel) =>
+      val dst = new HPath(path, rel)
+      fs.mkdirs(dst.getParent)
+      fs.delete(dst, false) // crash leftover: referenced by no manifest
+      require(fs.rename(src, dst), s"rename to $dst failed")
+    }
+    fs.delete(stage, true)
+    rels
+  }
+
+  /** Write `df` as `toVersion`'s `dir` sidecar (`_deletes/vN`, `_dv/vN`:
+    * one parquet file) and return its relpath. Like [[land]], it
+    * replaces a crash leftover of an uncommitted `toVersion` and refuses
+    * to replace the sidecar of a committed one. */
+  private def writeVersionSidecar(spark: org.apache.spark.sql.SparkSession,
+                                  path: String, dir: String, toVersion: Int,
+                                  df: DataFrame): String = {
+    val rel = s"$dir/v$toVersion"
+    val p = new org.apache.hadoop.fs.Path(path, rel)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      refuseCommitted(spark, path, toVersion)
+    df.coalesce(1).write.mode("overwrite").parquet(s"$path/$rel")
+    rel
   }
 
   /** Split `snap`'s deletion vector across a rewrite of the manifest
@@ -1327,9 +1403,7 @@ object VectorOps {
     val nKept = keptDv.count()
     if (nKept == 0L) (Map.empty, appliedFiles, applier)
     else {
-      val rel = s"_dv/v$toVersion"
-      keptDv.coalesce(1).write.mode("overwrite")
-        .parquet(s"${snap.path}/$rel")
+      val rel = writeVersionSidecar(spark, snap.path, "_dv", toVersion, keptDv)
       (Map("dv" -> rel, "dvcount" -> nKept.toString), appliedFiles, applier)
     }
   }
@@ -1399,11 +1473,9 @@ object VectorOps {
     */
   def cloneIndex(spark: org.apache.spark.sql.SparkSession, src: String,
                  dst: String, srcVersion: Int): Unit = {
-    val abs = readManifest(spark, src, srcVersion)
-      .map(f => if (isExternal(f)) f else s"$src/$f")
-    val carried = carriedMetaAbs(spark, src, srcVersion)
-    writeManifest(spark, dst, 1, abs,
-      carried ++ Map("op" -> "clone", "source" -> src,
+    val from = snapshot(spark, src, srcVersion).rootedAt(dst)
+    commitVersion(spark, from, 1, from.files, Nil, Set.empty,
+      Map("op" -> "clone", "source" -> src,
         "source_version" -> srcVersion.toString))
   }
 
@@ -1431,8 +1503,8 @@ object VectorOps {
       s"version $toVersion is already committed under $path")
     val conf = spark.sparkContext.hadoopConfiguration
     val dstFs = new HPath(path).getFileSystem(conf)
-    val files = readManifest(spark, path, fromVersion)
-    val planned = files.map { f =>
+    val from = snapshot(spark, path, fromVersion)
+    val planned = from.files.map { f =>
       if (isExternal(f)) f -> f.split('/').takeRight(2).mkString("/")
       else f -> f
     }
@@ -1455,10 +1527,9 @@ object VectorOps {
       }
     }
     // sidecar pointers: external ones copy under this root and remap
-    val meta = carriedMeta(spark, path, fromVersion).map {
-      case (k @ ("deletes" | "dv"), rel) if isExternal(rel) =>
-        val localRel =
-          if (k == "deletes") s"_deletes/v$toVersion" else s"_dv/v$toVersion"
+    val localized = Seq("deletes" -> "_deletes", "dv" -> "_dv").flatMap {
+      case (k, dir) => from.meta.get(k).filter(isExternal).map { rel =>
+        val localRel = s"$dir/v$toVersion"
         val sp = new HPath(rel)
         val dp = new HPath(path, localRel)
         dstFs.delete(dp, true) // crash leftover
@@ -1466,16 +1537,14 @@ object VectorOps {
           false, true, conf),
           s"localizeClone: sidecar copy of $rel failed")
         k -> localRel
-      case kv => kv
+      }
     }
-    // same constraint seam as every rewrite-class commit: the copied
-    // files are this commit's new files (enforce-on-write surfaces
-    // inherited rows that violate a check registered on the clone)
-    enforceTableChecks(spark, path, fromVersion,
-      planned.collect { case (src, rel) if src != rel => rel },
-      s"localize commit of v$toVersion")
-    writeManifest(spark, path, toVersion, rels.sorted,
-      meta + ("op" -> "localize"))
+    // the copied files are this commit's new files (enforce-on-write
+    // surfaces inherited rows that violate a check registered on the
+    // clone)
+    commitVersion(spark, from, toVersion, rels.sorted,
+      planned.collect { case (src, rel) if src != rel => rel }, Set.empty,
+      localized.toMap + ("op" -> "localize"))
     (copied, local)
   }
 
@@ -1491,14 +1560,13 @@ object VectorOps {
   def promoteVersion(spark: org.apache.spark.sql.SparkSession,
                      branch: String, branchVersion: Int,
                      main: String): Int = {
-    val entries = readManifest(spark, branch, branchVersion)
-      .map(f => if (isExternal(f)) f else s"$branch/$f")
+    val from = snapshot(spark, branch, branchVersion).rootedAt(main)
+    val entries = from.files
       .map(f => if (f.startsWith(main + "/")) f.drop(main.length + 1) else f)
-    val carried = carriedMetaAbs(spark, branch, branchVersion)
     val head = latestVersion(spark, main).getOrElse(
       throw new IllegalStateException(s"no committed version under $main"))
-    writeManifest(spark, main, head + 1, entries,
-      carried ++ Map("op" -> "promote", "promote_source" -> branch,
+    commitVersion(spark, from, head + 1, entries, Nil, Set.empty,
+      Map("op" -> "promote", "promote_source" -> branch,
         "promote_version" -> branchVersion.toString))
     head + 1
   }
@@ -1523,7 +1591,8 @@ object VectorOps {
                     meta: Map[String, String] = Map.empty): Unit = {
     require(!manifestExists(spark, path, toVersion),
       s"version $toVersion is already committed under $path")
-    val pending = readDeletes(spark, path, fromVersion)
+    val from = snapshot(spark, path, fromVersion)
+    val pending = from.tombstones(spark)
       .map(d => d.select(col("vid")))
       .getOrElse(spark.emptyDataFrame.select(lit(0L).as("vid")).limit(0))
     // The sidecar directory is named by the version that CREATES it but
@@ -1533,20 +1602,16 @@ object VectorOps {
     // observe; the retry's overwrite write reclaims it (the
     // errorifexists-then-manifest ordering this replaces wedged the
     // version number permanently on exactly that crash).
-    val sidecarRel = s"_deletes/v$toVersion"
-    ids.select(col(ids.columns.head).cast("long").as("vid"))
-      .union(pending).distinct()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/$sidecarRel")
+    val sidecarRel = writeVersionSidecar(spark, path, "_deletes", toVersion,
+      ids.select(col(ids.columns.head).cast("long").as("vid"))
+        .union(pending).distinct())
     // op:delete tags the commit for the change feed ([[indexChanges]]):
     // a logical delete's tombstone delta IS its change set. The OTHER
     // carried-state keys (a pending DV, column mappings) ride along —
     // a tombstone delete on top of a DV delete must not resurrect the
     // DV's rows
-    writeManifest(spark, path, toVersion,
-      readManifest(spark, path, fromVersion),
-      carriedMeta(spark, path, fromVersion, except = Set("deletes")) ++
-        Map("op" -> "delete") ++ meta + ("deletes" -> sidecarRel))
+    commitVersion(spark, from, toVersion, from.files, Nil, Set("deletes"),
+      Map("op" -> "delete") ++ meta + ("deletes" -> sidecarRel))
   }
 
   /** The tombstone sidecar of `version`, if its manifest references one.
@@ -1579,8 +1644,11 @@ object VectorOps {
     * union is exact. Rewrites (compaction, physical deletes) are NOT
     * routed through this path — they remove files, and a remove/remove
     * or remove/append race needs a conflict CHECK, not a merge
-    * ([[rewriteVersioned]] stays single-writer; its duplicate-version
-    * refusal makes the race loud, never silent).
+    * ([[rewriteVersioned]] stays single-writer). A stale rewrite is
+    * refused with "already committed": it never replaces a file or
+    * sidecar named by a committed version ([[land]]), though the files
+    * it landed under free names stay behind as unreferenced orphans for
+    * the vacuum.
     *
     * A pending tombstone pointer on the head is carried forward
     * automatically: an append commits new rows, it must not resurrect
@@ -1599,44 +1667,36 @@ object VectorOps {
                      maxAttempts: Int = 10): OccCommit = {
     require(newFiles.nonEmpty, "commitFilesOcc: newFiles must be non-empty")
     // table checks enforce on every APPEND too — validated against the
-    // head visible at entry, and RE-validated inside the retry loop
-    // whenever a conflict-resolved head carries a DIFFERENT `checks`
-    // header (ADVICE r12: carrying the new head's header without
-    // re-running it would land an append CLAIMING constraints it never
-    // enforced). `validatedChecks` tracks the header the staged files
-    // were last proven against; re-validation is the rare case (checks
-    // are usually absent or unchanged across a conflict), so the common
-    // retry stays metadata-priced.
-    var validatedChecks: Option[String] = None
-    (assumeHead.orElse(latestVersion(spark, path)))
-      .foreach { h =>
-        enforceTableChecks(spark, path, h, newFiles, "append commit")
-        validatedChecks = readManifestMeta(spark, path, h).get("checks")
-      }
+    // first attempt's head, and RE-validated whenever a conflict-resolved
+    // head carries a DIFFERENT `checks` header (ADVICE r12: carrying the
+    // new head's header without re-running it would land an append
+    // CLAIMING constraints it never enforced). `proven` is the header
+    // the staged files were last validated against; re-validation is
+    // the rare case (checks are usually absent or unchanged across a
+    // conflict), so the common retry stays metadata-priced.
+    var proven: Option[Option[String]] = None
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val head =
         if (attempt == 1 && assumeHead.isDefined) assumeHead.get
         else latestVersion(spark, path).getOrElse(0)
-      val headFiles =
-        if (head == 0) Seq.empty else readManifest(spark, path, head)
       // an append leaves every existing file untouched, so the FULL
       // carried state stays valid verbatim: tombstones and DV positions
       // still point at their files, dvcount is unchanged (new files add
       // no deleted positions), and the column mapping must survive or
       // an append to a renamed table would silently reset its schema
-      val carried =
-        if (head == 0) Map.empty[String, String]
-        else carriedMeta(spark, path, head)
-      if (carried.get("checks") != validatedChecks) {
-        enforceTableChecks(spark, path, head, newFiles,
-          s"append commit (post-conflict revalidation, attempt $attempt)")
-        validatedChecks = carried.get("checks")
-      }
+      val from =
+        if (head == 0) Snapshot(path, 0, Seq.empty, Map.empty)
+        else snapshot(spark, path, head)
+      val checks = from.meta.get("checks")
+      val unproven = if (proven.contains(checks)) Nil else newFiles
+      proven = Some(checks)
       try {
-        writeManifest(spark, path, head + 1,
-          (headFiles ++ newFiles).sorted, carried ++ meta)
+        commitVersion(spark, from, head + 1, (from.files ++ newFiles).sorted,
+          unproven, Set.empty, meta,
+          if (attempt == 1) ""
+          else s" (append, post-conflict revalidation, attempt $attempt)")
         return OccCommit(head + 1, attempt)
       } catch {
         case e: java.io.IOException =>
@@ -1680,48 +1740,39 @@ object VectorOps {
                      sink: String = "",
                      extraMeta: Map[String, String] = Map.empty)
       : (Int, Boolean, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(sink.isEmpty || sink.matches("[A-Za-z0-9_-]+"),
       s"sink name must be filesystem-safe ([A-Za-z0-9_-]+): $sink")
-    if (committedBatchKeys(spark, path).contains(batchKey(sink, batchId)))
-      return (latestVersion(spark, path).get, true, 0)
-    val fs = new HPath(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // staging dirs and data-file names are sink-qualified: two append
-    // streams on one index share batchIds by construction, and the
-    // deterministic names exist to make a REPLAY of the same
-    // (sink, batchId) overwrite its own crash leftovers — never a
-    // sibling stream's committed files
-    val tag = if (sink.isEmpty) s"$batchId" else s"$sink-$batchId"
-    val stageRel = s"_staging/batch_$tag"
-    batch.select(col(idCol), col(vecCol),
-        ivfAssign(col(vecCol), centroids).as("centroid"))
-      .write.partitionBy("centroid").mode("overwrite")
-      .parquet(s"$path/$stageRel")
-    val newFiles = scala.collection.mutable.ArrayBuffer[String]()
-    fs.listStatus(new HPath(path, stageRel))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid="))
-      .sortBy(_.getPath.getName)
-      .foreach { part =>
-        val files = fs.listStatus(part.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        fs.mkdirs(new HPath(path, part.getPath.getName))
-        files.zipWithIndex.foreach { case (f, i) =>
-          val rel = s"${part.getPath.getName}/batch$tag-$i.parquet"
-          val dst = new HPath(path, rel)
-          fs.delete(dst, false) // crash leftover: un-committed by step 1
-          require(fs.rename(f.getPath, dst), s"rename to $dst failed")
-          newFiles += rel
-        }
-      }
-    fs.delete(new HPath(path, stageRel), true)
-    val meta = extraMeta ++
-      Map("batch" -> batchId.toString, "op" -> "append") ++
-      (if (sink.isEmpty) Map.empty else Map("sink" -> sink))
-    val c = commitFilesOcc(spark, path, newFiles.toSeq, meta, assumeHead)
-    (c.version, false, c.attempts)
+    unlessReplayed(spark, path, sink, batchId)((_, true, 0)) { batchMeta =>
+      // staging dirs and data-file names are sink-qualified: two append
+      // streams on one index share batchIds by construction, and the
+      // deterministic names exist to make a REPLAY of the same
+      // (sink, batchId) overwrite its own crash leftovers — never a
+      // sibling stream's committed files. The replay guard has already
+      // proven this batch uncommitted, so any leftover is un-committed
+      val tag = if (sink.isEmpty) s"$batchId" else s"$sink-$batchId"
+      val newFiles = landAssigned(spark, path, batch, centroids, idCol,
+        vecCol, s"_staging/batch_$tag", s"batch$tag", None)
+      val c = commitFilesOcc(spark, path, newFiles,
+        extraMeta ++ batchMeta + ("op" -> "append"), assumeHead)
+      (c.version, false, c.attempts)
+    }
   }
+
+  /** The replay guard of the streaming batch writers ([[ivfAppendBatch]],
+    * [[commitDeletesBatch]], [[ivfUpsertBatch]]): a (sink, batchId)
+    * already in a committed manifest is a redelivery — answered by
+    * `replayed(head)` with nothing written. Otherwise `commit` runs with
+    * the batch headers its commit must carry: `batch`, and `sink` when
+    * the sink is named.
+    */
+  private def unlessReplayed[T](spark: org.apache.spark.sql.SparkSession,
+                                path: String, sink: String, batchId: Long)
+                               (replayed: Int => T)
+                               (commit: Map[String, String] => T): T =
+    if (committedBatchKeys(spark, path).contains(batchKey(sink, batchId)))
+      replayed(latestVersion(spark, path).get)
+    else commit(Map("batch" -> batchId.toString) ++
+      (if (sink.isEmpty) Map.empty[String, String] else Map("sink" -> sink)))
 
   /** Idempotent streaming delete commit — [[commitDeletes]] keyed by
     * `batchId` with the same replay contract as [[ivfAppendBatch]]: an
@@ -1736,17 +1787,14 @@ object VectorOps {
                          path: String, batchId: Long,
                          ids: DataFrame, sink: String = "",
                          extraMeta: Map[String, String] = Map.empty)
-      : (Int, Boolean) = {
-    if (committedBatchKeys(spark, path).contains(batchKey(sink, batchId)))
-      return (latestVersion(spark, path).get, true)
-    val head = latestVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"streaming deletes need an initial committed version under $path"))
-    commitDeletes(spark, path, head, head + 1, ids,
-      extraMeta ++ Map("batch" -> batchId.toString) ++
-        (if (sink.isEmpty) Map.empty else Map("sink" -> sink)))
-    (head + 1, false)
-  }
+      : (Int, Boolean) =
+    unlessReplayed(spark, path, sink, batchId)((_, true)) { batchMeta =>
+      val head = latestVersion(spark, path).getOrElse(
+        throw new IllegalStateException(
+          s"streaming deletes need an initial committed version under $path"))
+      commitDeletes(spark, path, head, head + 1, ids, extraMeta ++ batchMeta)
+      (head + 1, false)
+    }
 
   /** Merge-on-read: the pinned version's files minus its tombstones —
     * a broadcast left-anti join on the id column (tombstone sets are
@@ -1782,12 +1830,10 @@ object VectorOps {
                    idCol: String): (Int, Long) = {
     val from = snapshot(spark, path, fromVersion)
     val delsOpt = from.tombstones(spark)
-    val carried = carriedMeta(spark, path, fromVersion,
-      except = Set("deletes", "dv", "dvcount"))
     if (delsOpt.isEmpty && !from.meta.contains("dv")) {
       // nothing pending: pure metadata
-      writeManifest(spark, path, toVersion, from.files,
-        carried + ("op" -> "apply"))
+      commitVersion(spark, from, toVersion, from.files, Nil,
+        Set("deletes", "dv", "dvcount"), Map("op" -> "apply"))
       return (0, 0L)
     }
     val tombParts: Set[String] = delsOpt match {
@@ -1808,102 +1854,97 @@ object VectorOps {
         .distinct().collect().map(_.getString(0)).toSet
     }
     val hot = tombParts ++ dvParts
-    // hot covers every DV partition, so the split applies ALL positions
-    // physically and carries nothing — asserted, not assumed
-    val (dvMeta, _, dvApply) = splitDvForRewrite(spark, from, toVersion,
-      f => hot.contains(f.takeWhile(_ != '/')))
-    require(dvMeta.isEmpty,
-      s"applyDeletes: DV entries survived a full apply: $dvMeta")
     val tombApply: DataFrame => DataFrame = delsOpt match {
       case None => identity
       case Some(d) =>
         val delSet = broadcast(d.select(col("vid").as(idCol)))
         df => df.join(delSet, Seq(idCol), "left_anti")
     }
-    val hotBefore =
-      from.files.filter(f => hot.contains(f.takeWhile(_ != '/')))
-    val nBefore = footerCounts(spark, path, hotBefore).values.sum
-    val (rewritten, _, _) =
-      rewriteVersioned(spark, path, fromVersion, toVersion, "deleted",
-        // every delete sidecar is FOLDED IN here — the new version must
-        // not carry a pointer forward or the subtraction would run
-        // twice. op:apply marks the commit dataChange-free for the
-        // change feed: these rows were reported deleted when the
-        // LOGICAL commit landed; the physical purge must not report
-        // them twice
-        carryMeta = carried + ("op" -> "apply")) {
-        (part, _) => hot.contains(part)
-      } { df => tombApply(dvApply(df)) }
-    val hotAfter = readManifest(spark, path, toVersion)
-      .filter(f => hot.contains(f.takeWhile(_ != '/')))
-    val nAfter = footerCounts(spark, path, hotAfter).values.sum
-    (rewritten, nBefore - nAfter)
+    val nBefore = footerCounts(spark, path,
+      from.files.filter(f => hot(partOf(f)))).values.sum
+    // every delete sidecar is FOLDED IN here — the new version must not
+    // carry a pointer forward or the subtraction would run twice (hot
+    // covers every DV partition, so consuming `dv` asserts that the
+    // split applies every position and carries none). op:apply marks
+    // the commit dataChange-free for the change feed: these rows were
+    // reported deleted when the LOGICAL commit landed; the physical
+    // purge must not report them twice
+    val groups = partitionGroups(from, toVersion, "deleted")((p, _) => hot(p))
+    val committed = rewriteVersioned(spark, from, toVersion, groups, Nil,
+      Set("deletes", "dv"), Map("op" -> "apply"))(tombApply)
+    val nAfter = footerCounts(spark, path,
+      committed.filter(f => hot(partOf(f)))).values.sum
+    (groups.length, nBefore - nAfter)
   }
 
-  /** Shared write-new/commit core of every versioned rewrite
-    * ([[ivfCompactVersioned]], [[applyDeletes]]): walk `fromVersion`'s
-    * partitions, rewrite those `shouldRewrite` selects — coalesce(1) of
-    * `transformPart` over exactly that version's files (read WITHOUT
-    * basePath: the new file must not embed the partition column the
-    * directory encodes), landed BESIDE the old files via rename so data
-    * stays immutable and pinned readers are undisturbed — re-list the
-    * rest untouched, and commit `toVersion`. Returns
-    * (partitionsRewritten, filesFrom, filesTo).
+  /** The partition of a root-relative manifest entry
+    * (`centroid=K/file` → `centroid=K`). */
+  private def partOf(entry: String): String = entry.takeWhile(_ != '/')
+
+  /** The partitions of `from` that `select` picks, as rewrite groups
+    * for [[rewriteVersioned]]: each partition's files land as one
+    * `part/tag-v{toVersion}.parquet`. */
+  private def partitionGroups(from: Snapshot, toVersion: Int, tag: String)
+                             (select: (String, Seq[String]) => Boolean)
+      : Seq[(Seq[String], String)] =
+    from.files.groupBy(partOf).toSeq.sortBy(_._1).collect {
+      case (part, files) if select(part, files) =>
+        files -> s"$part/$tag-v$toVersion.parquet"
+    }
+
+  /** The one rewrite every file-replacing writer ([[ivfCompactVersioned]],
+    * [[ivfCompactSmall]], [[applyDeletes]], [[ivfUpsert]], [[ivfMerge]])
+    * delegates to. Each group — a partition or a binpack bin — is a
+    * set of `from`'s files and the deterministic name they rewrite to:
+    * one coalesce(1) of `transform` over exactly those files (read
+    * WITHOUT basePath: the new file must not embed the partition column
+    * the directory encodes), [[land]]ed BESIDE the old files so data
+    * stays immutable and pinned readers are undisturbed. `from`'s
+    * deletion vector splits across the rewrite first
+    * ([[splitDvForRewrite]]): the positions in rewritten files are
+    * applied inside the groups that hold them, the rest re-land; a
+    * writer that `consumes` `dv` asserts that nothing is left to carry.
+    * Every file no group names is re-listed untouched, `extraFiles`
+    * (already-landed files: the upsert's and merge's new rows) commit
+    * ATOMICALLY with the rewrite — replace-old and insert-new must be
+    * one version or a reader between them sees the id vanish — and the
+    * whole list commits as `toVersion` ([[commitVersion]], which
+    * validates exactly the files created here). Returns the committed
+    * file list.
     */
   private def rewriteVersioned(spark: org.apache.spark.sql.SparkSession,
-                               path: String, fromVersion: Int,
-                               toVersion: Int, dstTag: String,
-                               carryMeta: Map[String, String],
-                               extraFiles: Seq[String] = Nil)
-                              (shouldRewrite: (String, Seq[String]) => Boolean)
-                              (transformPart: DataFrame => DataFrame)
-      : (Int, Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = new HPath(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val from = readManifest(spark, path, fromVersion)
-    requireLocalEntries(from, s"rewrite to v$toVersion")
-    val newList = scala.collection.mutable.ArrayBuffer[String]()
-    val freshFiles = scala.collection.mutable.ArrayBuffer[String]()
-    var rewritten = 0
-    from.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1).foreach {
-      case (part, files) =>
-        if (shouldRewrite(part, files)) {
-          val tmp = new HPath(path, s"_rewrite_tmp/$part")
-          // mergeSchema: a partition may mix pre- and post-evolution
-          // files (q_schema_evolution's exact layout) — without the
-          // merge, rewriting such a partition silently DROPS the evolved
-          // column from the rows whose files carried it
-          transformPart(spark.read.option("mergeSchema", "true")
-              .parquet(files.map(f => s"$path/$f"): _*))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val produced = fs.listStatus(tmp)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          require(produced.length == 1,
-            s"coalesce(1) must land one file, got ${produced.length}")
-          val dst = new HPath(path, s"$part/$dstTag-v$toVersion.parquet")
-          fs.delete(dst, false) // crash leftover: toVersion never committed
-          require(fs.rename(produced.head.getPath, dst),
-            s"rename to $dst failed")
-          fs.delete(tmp, true)
-          newList += s"$part/${dst.getName}"
-          freshFiles += s"$part/${dst.getName}"
-          rewritten += 1
-        } else newList ++= files
+                               from: Snapshot, toVersion: Int,
+                               groups: Seq[(Seq[String], String)],
+                               extraFiles: Seq[String],
+                               consumes: Set[String],
+                               headers: Map[String, String])
+                              (transform: DataFrame => DataFrame)
+      : Seq[String] = {
+    val path = from.path
+    requireLocalEntries(from.files, s"rewrite to v$toVersion")
+    val inputs = groups.flatMap(_._1).toSet
+    val (dvMeta, dvFiles, dvApply) =
+      splitDvForRewrite(spark, from, toVersion, inputs)
+    require(!consumes("dv") || dvMeta.isEmpty,
+      s"rewrite to v$toVersion: DV entries survived a full apply: $dvMeta")
+    val written = groups.zipWithIndex.flatMap { case ((files, dst), i) =>
+      // mergeSchema: a group may mix pre- and post-evolution files
+      // (q_schema_evolution's exact layout) — without the merge,
+      // rewriting it silently DROPS the evolved column from the rows
+      // whose files carried it
+      val base = spark.read.option("mergeSchema", "true")
+        .parquet(files.map(f => s"$path/$f"): _*)
+      land(spark, path, s"_rewrite_tmp/g$i", Some(toVersion),
+        transform(if (files.exists(dvFiles)) dvApply(base) else base)
+          .coalesce(1).write)((_, _) => dst)
     }
-    fs.delete(new HPath(path, "_rewrite_tmp"), true)
-    // the ONE constraint seam every rewrite-class writer (upsert, merge,
-    // compaction, physical delete apply) passes through: validate only
-    // the files this commit CREATED (rewritten outputs + staged extras —
-    // never the re-listed corpus), refuse pre-manifest
-    enforceTableChecks(spark, path, fromVersion,
-      (freshFiles ++ extraFiles).toSeq, s"commit of v$toVersion")
-    // extraFiles: already-landed data files committed ATOMICALLY with the
-    // rewrite (the upsert's appended rows — replace-old and insert-new
-    // must be one version or a reader between them sees the id vanish)
-    writeManifest(spark, path, toVersion,
-      (newList ++ extraFiles).sorted.toSeq, carryMeta)
-    (rewritten, from.length, newList.length)
+    val tmp = new org.apache.hadoop.fs.Path(path, "_rewrite_tmp")
+    tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
+    val committed =
+      (from.files.filterNot(inputs) ++ written ++ extraFiles).sorted
+    commitVersion(spark, from, toVersion, committed, written ++ extraFiles,
+      consumes ++ Set("dv", "dvcount"), dvMeta ++ headers)
+    committed
   }
 
   /** Versioned in-place compaction: coalesce every partition that
@@ -1928,20 +1969,15 @@ object VectorOps {
     // by (file, pos), which a rewrite breaks; they are APPLIED
     // physically inside the partitions being rewritten (the Delta
     // OPTIMIZE behavior — purging already-reported-deleted rows is
-    // dataChange-free) and the remaining entries re-land via the split
+    // dataChange-free) and the remaining entries re-land via the split.
+    // op:compact marks the commit dataChange-free: the change feed must
+    // stay silent across it (the Delta CDF design)
     val from = snapshot(spark, path, fromVersion)
-    val multiFileParts = from.files.groupBy(_.takeWhile(_ != '/'))
-      .collect { case (part, files) if files.length > 1 => part }.toSet
-    val (dvMeta, _, dvApply) = splitDvForRewrite(spark, from, toVersion,
-      f => multiFileParts.contains(f.takeWhile(_ != '/')))
-    val carried = carriedMeta(spark, path, fromVersion,
-      except = Set("dv", "dvcount"))
-    // op:compact marks the commit dataChange-free: compaction moves bytes,
-    // the change feed must stay silent across it (the Delta CDF design)
-    rewriteVersioned(spark, path, fromVersion, toVersion, "compacted",
-      carryMeta = carried ++ dvMeta + ("op" -> "compact")) {
-      (part, files) => files.length > 1
-    } { dvApply }
+    val groups = partitionGroups(from, toVersion, "compacted")(
+      (_, files) => files.length > 1)
+    val committed = rewriteVersioned(spark, from, toVersion, groups, Nil,
+      Set.empty, Map("op" -> "compact"))(identity)
+    (groups.length, from.files.length, committed.length)
   }
 
   /** Size-aware OPTIMIZE: binpack only the SMALL files — the nightly
@@ -1954,10 +1990,12 @@ object VectorOps {
     * read to plan); only bins holding ≥ 2 files rewrite (one coalesced
     * file each), every file ≥ target and every singleton bin is
     * RE-LISTED untouched — zero I/O for the data that is already right.
-    * Same snapshot discipline as every rewrite: new files land beside
-    * the old, one manifest create commits, pinned readers undisturbed,
-    * tombstone pointer carried, op:compact dataChange-free in the feed.
-    * Returns (binsRewritten, filesFrom, filesTo, maxBinInputBytes).
+    * Same snapshot discipline as every rewrite ([[rewriteVersioned]]):
+    * new files land beside the old, one manifest create commits, pinned
+    * readers undisturbed, tombstone pointer carried, DV positions of
+    * packed files applied while packing, op:compact dataChange-free in
+    * the feed. Returns (binsRewritten, filesFrom, filesTo,
+    * maxBinInputBytes).
     */
   def ivfCompactSmall(spark: org.apache.spark.sql.SparkSession,
                       path: String, fromVersion: Int, toVersion: Int,
@@ -1968,81 +2006,32 @@ object VectorOps {
       s"version $toVersion is already committed under $path")
     val fs = new HPath(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val snap = snapshot(spark, path, fromVersion)
-    val from = snap.files
-    requireLocalEntries(from, s"binpack to v$toVersion")
-    val sizes = from.map(f =>
+    val from = snapshot(spark, path, fromVersion)
+    val sizes = from.files.map(f =>
       f -> fs.getFileStatus(new HPath(path, f)).getLen).toMap
-    // plan first (file sizes only): per partition, files under the
-    // target pack first-fit-decreasing into targetBytes-capped bins;
-    // a bin of one file has nothing to gain and re-lists
-    val plan = from.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1).map {
+    // plan (file sizes only): per partition, files under the target pack
+    // first-fit-decreasing into targetBytes-capped bins; a bin of one
+    // file has nothing to gain and re-lists. Bins are numbered within
+    // their partition, singletons included
+    val bins = from.files.groupBy(partOf).toSeq.sortBy(_._1).flatMap {
       case (part, files) =>
-        val (small, big) = files.partition(f => sizes(f) < targetBytes)
-        val packed = scala.collection.mutable
-          .ArrayBuffer[(scala.collection.mutable.ArrayBuffer[String], Long)]()
-        small.sortBy(f => -sizes(f)).foreach { f =>
-          packed.find(_._2 + sizes(f) <= targetBytes) match {
-            case Some(bin) =>
-              val i = packed.indexOf(bin)
-              bin._1 += f
-              packed(i) = (bin._1, bin._2 + sizes(f))
-            case None =>
-              packed += ((scala.collection.mutable.ArrayBuffer(f), sizes(f)))
+        val packed = scala.collection.mutable.ArrayBuffer[(Seq[String], Long)]()
+        files.filter(f => sizes(f) < targetBytes).sortBy(f => -sizes(f))
+          .foreach { f =>
+            val i = packed.indexWhere(_._2 + sizes(f) <= targetBytes)
+            if (i < 0) packed += ((Seq(f), sizes(f)))
+            else packed(i) = (packed(i)._1 :+ f, packed(i)._2 + sizes(f))
           }
+        packed.zipWithIndex.collect { case ((binFiles, bytes), i)
+            if binFiles.length >= 2 =>
+          (binFiles, s"$part/binpack$i-v$toVersion.parquet", bytes)
         }
-        (part, big, packed.toSeq)
     }
-    val packedInputs = plan.flatMap(_._3.map(_._1)).filter(_.length >= 2)
-      .flatten.toSet
-    // DV sidecars are keyed by (file, pos) — repacking a DV-referenced
-    // file verbatim would copy its raw bytes into a binpack file the
-    // sidecar doesn't name, silently RESURRECTING every DV-deleted row.
-    // Instead the DV splits at FILE granularity: the positions of packed
-    // files are APPLIED while packing (the Delta OPTIMIZE behavior —
-    // purging already-reported-deleted rows is dataChange-free), and
-    // only the entries of RE-LISTED files re-land in the new version's
-    // sidecar (pointer carried verbatim when nothing it names packed)
-    val (dvMeta, dvFiles, dvApply) =
-      splitDvForRewrite(spark, snap, toVersion, packedInputs)
-    val newList = scala.collection.mutable.ArrayBuffer[String]()
-    var bins = 0
-    var maxBinBytes = 0L
-    plan.foreach { case (part, big, packed) =>
-      newList ++= big
-      packed.zipWithIndex.foreach { case ((binFiles, binBytes), i) =>
-        if (binFiles.length < 2) newList ++= binFiles
-        else {
-          val tmp = new HPath(path, s"_rewrite_tmp/$part-bin$i")
-          val base = spark.read.option("mergeSchema", "true")
-            .parquet(binFiles.toSeq.map(f => s"$path/$f"): _*)
-          (if (binFiles.exists(dvFiles)) dvApply(base) else base)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val produced = fs.listStatus(tmp).filter(s =>
-            s.isFile && s.getPath.getName.endsWith(".parquet"))
-          require(produced.length == 1,
-            s"coalesce(1) must land one file, got ${produced.length}")
-          val dst = new HPath(path, s"$part/binpack$i-v$toVersion.parquet")
-          fs.delete(dst, false) // crash leftover: toVersion never committed
-          require(fs.rename(produced.head.getPath, dst),
-            s"rename to $dst failed")
-          fs.delete(tmp, true)
-          newList += s"$part/${dst.getName}"
-          bins += 1
-          maxBinBytes = math.max(maxBinBytes, binBytes)
-        }
-      }
-    }
-    fs.delete(new HPath(path, "_rewrite_tmp"), true)
-    // same constraint seam as rewriteVersioned: only the binpack outputs
-    // validate, refusal pre-manifest
-    enforceTableChecks(spark, path, fromVersion,
-      newList.toSeq.filterNot(from.contains),
-      s"binpack commit of v$toVersion")
-    writeManifest(spark, path, toVersion, newList.sorted.toSeq,
-      carriedMeta(spark, path, fromVersion,
-        except = Set("dv", "dvcount")) ++ dvMeta + ("op" -> "compact"))
-    (bins, from.length, newList.length, maxBinBytes)
+    val committed = rewriteVersioned(spark, from, toVersion,
+      bins.map(b => b._1 -> b._2), Nil, Set.empty,
+      Map("op" -> "compact"))(identity)
+    (bins.length, from.files.length, committed.length,
+      bins.map(_._3).foldLeft(0L)(math.max))
   }
 
   /** [[readIndexVersion]] with parquet schema merging: the pinned
@@ -2337,46 +2326,59 @@ object VectorOps {
 
   // ------------------------------------------------ copy-on-write upsert
 
-  /** Stage `df` assigned under the frozen coarse quantizer and rename
-    * its files into the `centroid=` directories under DETERMINISTIC
-    * `tag-{i}.parquet` names — the shared landing step of every
-    * copy-on-write writer ([[ivfUpsert]], [[ivfMerge]]): nothing staged
-    * here is visible until the caller's manifest create commits, and a
-    * crashed attempt's leftovers are overwritten (never duplicated) by
-    * the retry because the names are deterministic. Returns the landed
-    * relpaths in partition-then-index order.
+  /** [[land]] `df` assigned under the frozen coarse quantizer,
+    * partitioned by `centroid`, as `centroid=K/{prefix}-{i}.parquet` —
+    * the landing of every writer that adds vectors ([[ivfAppendBatch]],
+    * [[ivfUpsert]], [[ivfMerge]]). Returns the landed relpaths in
+    * partition-then-index order.
     */
-  private def stageAssignedFiles(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, df: DataFrame,
-                                 centroids: Array[Array[Double]],
-                                 idCol: String, vecCol: String,
-                                 tag: String, stageRel: String): Seq[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = new HPath(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    df.select(col(idCol), col(vecCol),
-        ivfAssign(col(vecCol), centroids).as("centroid"))
-      .write.partitionBy("centroid").mode("overwrite")
-      .parquet(s"$path/$stageRel")
-    val landed = scala.collection.mutable.ArrayBuffer[String]()
-    fs.listStatus(new HPath(path, stageRel))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid="))
-      .sortBy(_.getPath.getName)
-      .foreach { part =>
-        val files = fs.listStatus(part.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        fs.mkdirs(new HPath(path, part.getPath.getName))
-        files.zipWithIndex.foreach { case (f, i) =>
-          val rel = s"${part.getPath.getName}/$tag-$i.parquet"
-          val dst = new HPath(path, rel)
-          fs.delete(dst, false) // crash leftover: never committed
-          require(fs.rename(f.getPath, dst), s"rename to $dst failed")
-          landed += rel
-        }
-      }
-    fs.delete(new HPath(path, stageRel), true)
-    landed.toSeq
+  private def landAssigned(spark: org.apache.spark.sql.SparkSession,
+                           path: String, df: DataFrame,
+                           centroids: Array[Array[Double]],
+                           idCol: String, vecCol: String, stageRel: String,
+                           prefix: String,
+                           toVersion: Option[Int]): Seq[String] =
+    land(spark, path, stageRel, toVersion,
+      df.select(col(idCol), col(vecCol),
+          ivfAssign(col(vecCol), centroids).as("centroid"))
+        .write.partitionBy("centroid"))(
+      (dir, i) => s"$dir/$prefix-$i.parquet")
+
+  /** The copy-on-write tail of [[ivfUpsert]] and [[ivfMerge]], one
+    * commit of `toVersion` from `from`: the hot partitions — those
+    * PHYSICALLY holding a `touched` id (a tombstoned row being
+    * re-inserted is invisible but on disk, and its stale bytes must go)
+    * — are rewritten without the touched ids, `landed` (the staged
+    * insert/update rows) commits in the same version, and pending
+    * tombstones carry forward MINUS the `reinserted` ids (an upsert of a
+    * tombstoned id resurrects it by intent: the new row must not be
+    * subtracted). A pending DV splits across the rewrite; column
+    * mappings and checks ride verbatim. Returns the partitions
+    * rewritten.
+    */
+  private def copyOnWrite(spark: org.apache.spark.sql.SparkSession,
+                          from: Snapshot, toVersion: Int, op: String,
+                          tag: String, touched: DataFrame,
+                          reinserted: DataFrame, idCol: String,
+                          landed: Seq[String],
+                          extraMeta: Map[String, String]): Int = {
+    // one batch-sized semi-join aggregate over the PHYSICAL read
+    val hot = scan(spark, from, from.files)
+      .join(touched, Seq(idCol), "left_semi")
+      .groupBy(col("centroid")).agg(count(lit(1)).as("n"))
+      .collect().map(r => s"centroid=${r.get(0)}").toSet
+    val tombstones = from.tombstones(spark).flatMap { d =>
+      val kept = d.select(col("vid"))
+        .join(reinserted.select(col(idCol).as("vid")), Seq("vid"), "left_anti")
+      if (kept.isEmpty) None
+      else Some("deletes" ->
+        writeVersionSidecar(spark, from.path, "_deletes", toVersion, kept))
+    }
+    val groups = partitionGroups(from, toVersion, tag)((p, _) => hot(p))
+    rewriteVersioned(spark, from, toVersion, groups, landed, Set("deletes"),
+      Map("op" -> op) ++ tombstones ++ extraMeta)(
+      _.join(touched, Seq(idCol), "left_anti"))
+    groups.length
   }
 
   /** Row-level upsert as ONE atomic commit — the reference's own
@@ -2398,10 +2400,12 @@ object VectorOps {
     *
     * Rewrites remove files, so like [[ivfCompactVersioned]] this path is
     * single-writer by design — a concurrent upsert/append race needs a
-    * conflict CHECK, and the duplicate-version refusal keeps the race
-    * loud ([[commitFilesOcc]] documents the split). Cost: the batch's
-    * bytes + the hot partitions' bytes; a batch of brand-new ids
-    * rewrites nothing and degenerates to a pure append.
+    * conflict CHECK ([[commitFilesOcc]] documents the split). A stale
+    * upsert whose `toVersion` another writer committed first is refused
+    * with "already committed" and leaves that version untouched: it never
+    * replaces a file or sidecar the committed version names ([[land]]).
+    * Cost: the batch's bytes + the hot partitions' bytes; a batch of
+    * brand-new ids rewrites nothing and degenerates to a pure append.
     *
     * Returns (partitionsRewritten, nReplaced, nStaged): `nReplaced` is
     * the count of VISIBLE rows superseded; `nStaged` is the TOTAL staged
@@ -2415,12 +2419,12 @@ object VectorOps {
                 vecCol: String,
                 extraMeta: Map[String, String] = Map.empty)
       : (Int, Long, Long) = {
+    val from = snapshot(spark, path, fromVersion)
     // land the assigned batch under deterministic upsert-tagged names
-    // (same stage-then-rename discipline as ivfAppendBatch: nothing is
-    // visible until the manifest below commits)
-    val newFiles = scala.collection.mutable.ArrayBuffer[String]()
-    newFiles ++= stageAssignedFiles(spark, path, updates, centroids,
-      idCol, vecCol, s"upsert$toVersion", s"_staging/upsert_$toVersion")
+    // (nothing is visible until the manifest commits)
+    val newFiles = landAssigned(spark, path, updates, centroids, idCol,
+      vecCol, s"_staging/upsert_$toVersion", s"upsert$toVersion",
+      Some(toVersion))
     // everything downstream reads the STAGED bytes, not the caller's
     // plan: `updates` may be an arbitrarily expensive computation (a
     // re-embedding join, a streaming micro-batch) and is consumed exactly
@@ -2429,56 +2433,20 @@ object VectorOps {
     val upIds = broadcast(
       if (newFiles.isEmpty) // empty batch: a no-change commit, not a crash
         spark.range(0).select(col("id").cast("long").as(idCol))
-      else readFiles(spark, path, newFiles.toSeq)
+      else readFiles(spark, path, newFiles)
         .select(col(idCol).cast("long").as(idCol)).distinct())
     // TOTAL staged rows (replaced + inserted) — not just true inserts;
     // see the Scaladoc's return contract
     val nStaged =
       if (newFiles.isEmpty) 0L
-      else footerCounts(spark, path, newFiles.toSeq).values.sum
-    // which partitions hold rows being replaced — one batch-sized
-    // semi-join aggregate. Over the PHYSICAL read, not the MOR read: a
-    // TOMBSTONED row whose id is being upserted is invisible but still on
-    // disk, and since the upsert drops its id from the carried sidecar
-    // (resurrection by intent), leaving its partition un-rewritten would
-    // resurrect the STALE row beside the new one.
-    val physHot = readIndexVersion(spark, path, fromVersion)
-      .join(upIds, Seq(idCol), "left_semi")
-    val hot = physHot
-      .groupBy(col("centroid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => s"centroid=${r.get(0)}" -> r.getLong(1)).toMap
+      else footerCounts(spark, path, newFiles).values.sum
     // replaced = VISIBLE rows superseded (the caller-facing number;
     // purging a stale tombstoned or DV-deleted row is hygiene, not a
     // replacement) — visibility applies BOTH delete kinds
-    val nReplaced = readIndexVersionVisible(spark, path, fromVersion, idCol)
+    val nReplaced = visible(spark, from, idCol)
       .join(upIds, Seq(idCol), "left_semi").count()
-    // pending tombstones carry forward MINUS the upserted ids
-    val meta = readDeletes(spark, path, fromVersion) match {
-      case None => Map("op" -> "upsert")
-      case Some(d) =>
-        val kept = d.select(col("vid"))
-          .join(upIds.select(col(idCol).as("vid")), Seq("vid"), "left_anti")
-        if (kept.isEmpty) Map("op" -> "upsert")
-        else {
-          val rel = s"_deletes/v$toVersion"
-          kept.coalesce(1).write.mode("overwrite").parquet(s"$path/$rel")
-          Map("op" -> "upsert", "deletes" -> rel)
-        }
-    }
-    // a pending DV splits across the rewrite: entries in hot partitions
-    // apply physically (their files are being rewritten anyway), the
-    // rest carry; column mappings ride verbatim
-    val (dvMeta, _, dvApply) = splitDvForRewrite(spark,
-      snapshot(spark, path, fromVersion), toVersion,
-      f => hot.contains(f.takeWhile(_ != '/')))
-    val ddl = carriedMeta(spark, path, fromVersion,
-      except = Set("deletes", "dv", "dvcount"))
-    val (rewritten, _, _) =
-      rewriteVersioned(spark, path, fromVersion, toVersion, "upserted",
-        carryMeta = ddl ++ dvMeta ++ meta ++ extraMeta,
-        extraFiles = newFiles.toSeq) {
-        (part, _) => hot.contains(part)
-      } { df => dvApply(df).join(upIds, Seq(idCol), "left_anti") }
+    val rewritten = copyOnWrite(spark, from, toVersion, "upsert", "upserted",
+      upIds, upIds, idCol, newFiles, extraMeta)
     (rewritten, nReplaced, nStaged)
   }
 
@@ -2500,18 +2468,15 @@ object VectorOps {
                      path: String, idCol: String, vecCol: String,
                      batchId: Long, sink: String = "",
                      extraMeta: Map[String, String] = Map.empty)
-      : (Int, Boolean, Long) = {
-    if (committedBatchKeys(spark, path).contains(batchKey(sink, batchId)))
-      return (latestVersion(spark, path).get, true, 0L)
-    val head = latestVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"streaming upserts need an initial committed version under $path"))
-    val (_, nReplaced, _) = ivfUpsert(spark, path, head, head + 1, batch,
-      centroids, idCol, vecCol,
-      extraMeta = extraMeta ++ Map("batch" -> batchId.toString) ++
-        (if (sink.isEmpty) Map.empty else Map("sink" -> sink)))
-    (head + 1, false, nReplaced)
-  }
+      : (Int, Boolean, Long) =
+    unlessReplayed(spark, path, sink, batchId)((_, true, 0L)) { batchMeta =>
+      val head = latestVersion(spark, path).getOrElse(
+        throw new IllegalStateException(
+          s"streaming upserts need an initial committed version under $path"))
+      val (_, nReplaced, _) = ivfUpsert(spark, path, head, head + 1, batch,
+        centroids, idCol, vecCol, extraMeta = extraMeta ++ batchMeta)
+      (head + 1, false, nReplaced)
+    }
 
   // ------------------------------------------------- change feed (CDC)
 
@@ -3204,52 +3169,26 @@ object VectorOps {
   def reclusterVersioned(spark: org.apache.spark.sql.SparkSession,
                          path: String, fromVersion: Int, toVersion: Int,
                          rangeCol: String, numRanges: Int): (Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(numRanges >= 1, "reclusterVersioned: numRanges must be >= 1")
     require(!manifestExists(spark, path, toVersion),
       s"version $toVersion is already committed under $path")
-    val fs = new HPath(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val fromFiles = readManifest(spark, path, fromVersion)
-    requireLocalEntries(fromFiles, s"recluster to v$toVersion")
+    val from = snapshot(spark, path, fromVersion)
+    requireLocalEntries(from.files, s"recluster to v$toVersion")
     // a recluster rewrites EVERY file, so a pending DV (keyed by file,
     // pos) cannot carry — it is applied physically here and its pointer
     // dropped; the rows it named were already reported deleted at their
     // logical commit, so the dataChange-free op:recluster stays honest.
     // Id tombstones survive any rewrite and stay pending; column
-    // mappings ride along.
-    val carried = carriedMeta(spark, path, fromVersion,
-      except = Set("dv", "dvcount"))
-    val stageRel = s"_staging/recluster_$toVersion"
-    readIndexVersionDv(spark, path, fromVersion)
-      .repartitionByRange(numRanges, col(rangeCol))
-      .write.partitionBy("centroid").mode("overwrite")
-      .parquet(s"$path/$stageRel")
-    val newFiles = scala.collection.mutable.ArrayBuffer[String]()
-    fs.listStatus(new HPath(path, stageRel))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid="))
-      .sortBy(_.getPath.getName)
-      .foreach { part =>
-        val files = fs.listStatus(part.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        fs.mkdirs(new HPath(path, part.getPath.getName))
-        files.zipWithIndex.foreach { case (f, i) =>
-          val rel = s"${part.getPath.getName}/recluster$toVersion-$i.parquet"
-          val dst = new HPath(path, rel)
-          fs.delete(dst, false) // crash leftover: referenced by no manifest
-          require(fs.rename(f.getPath, dst), s"rename to $dst failed")
-          newFiles += rel
-        }
-      }
-    fs.delete(new HPath(path, stageRel), true)
-    // same constraint seam as every rewrite: the re-clustered output is
-    // this commit's new files, validated pre-manifest
-    enforceTableChecks(spark, path, fromVersion, newFiles.toSeq,
-      s"recluster commit of v$toVersion")
-    writeManifest(spark, path, toVersion, newFiles.sorted.toSeq,
-      carried + ("op" -> "recluster"))
-    (fromFiles.length, newFiles.length)
+    // mappings ride along. The re-clustered output is this commit's new
+    // files, validated pre-manifest
+    val newFiles = land(spark, path, s"_staging/recluster_$toVersion",
+      Some(toVersion), withoutDv(spark, from, scan(spark, from, from.files))
+        .repartitionByRange(numRanges, col(rangeCol))
+        .write.partitionBy("centroid"))(
+      (dir, i) => s"$dir/recluster$toVersion-$i.parquet")
+    commitVersion(spark, from, toVersion, newFiles.sorted, newFiles,
+      Set("dv", "dvcount"), Map("op" -> "recluster"))
+    (from.files.length, newFiles.length)
   }
 
   // ------------------------ point-lookup skipping (bloom sidecars)
@@ -3556,14 +3495,11 @@ object VectorOps {
     val pending = from.deletionVector(spark)
     val merged = pending.map(p => fresh.unionByName(
       p.select(col("file"), col("pos")))).getOrElse(fresh).distinct()
-    val sidecarRel = s"_dv/v$toVersion"
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/$sidecarRel")
+    val sidecarRel = writeVersionSidecar(spark, path, "_dv", toVersion, merged)
     // count from the COMMITTED sidecar (delete-sized), not the corpus
     val nTotal = spark.read.parquet(s"$path/$sidecarRel").count()
     val nPending = pending.map(_.count()).getOrElse(0L)
-    val carried = carriedMeta(spark, path, fromVersion,
-      except = Set("dv", "dvcount"))
+    val consumed = Set("dv", "dvcount")
     if (nTotal == 0L) {
       // zero-match predicate over a no-pending history (ADVICE r12): an
       // EMPTY DV pointer is not a DV — committing it would leave a
@@ -3571,8 +3507,8 @@ object VectorOps {
       // carries verbatim through every rewrite split). The commit still
       // lands (the caller asked for a version), just with no dv header;
       // the empty sidecar dir stays unreferenced and invisible.
-      writeManifest(spark, path, toVersion, files,
-        carried ++ Map("op" -> "dv-delete") ++ meta)
+      commitVersion(spark, from, toVersion, files, Nil, consumed,
+        Map("op" -> "dv-delete") ++ meta)
       return (0L, 0L)
     }
     // dvcount rides the header so metadata-only counts stay servable
@@ -3581,8 +3517,8 @@ object VectorOps {
     // the other carried-state keys (pending id tombstones, column
     // mappings) ride along — a DV delete on top of a tombstone delete
     // must not resurrect the tombstoned ids
-    writeManifest(spark, path, toVersion, files,
-      carried ++ Map("op" -> "dv-delete") ++ meta +
+    commitVersion(spark, from, toVersion, files, Nil, consumed,
+      Map("op" -> "dv-delete") ++ meta +
         ("dv" -> sidecarRel) + ("dvcount" -> nTotal.toString))
     (nTotal - nPending, nTotal)
   }
@@ -3618,10 +3554,9 @@ object VectorOps {
     // a restore reproduces restoreTo's WHOLE logical state — its DV,
     // its column mappings — not just its tombstone pointer: restoring
     // past a rename must restore the old schema too
-    val carried = carriedMeta(spark, path, restoreTo)
-    writeManifest(spark, path, head + 1,
-      readManifest(spark, path, restoreTo),
-      carried ++ Map("op" -> "restore", "restore_of" -> restoreTo.toString))
+    val from = snapshot(spark, path, restoreTo)
+    commitVersion(spark, from, head + 1, from.files, Nil, Set.empty,
+      Map("op" -> "restore", "restore_of" -> restoreTo.toString))
     head + 1
   }
 
@@ -3738,7 +3673,8 @@ object VectorOps {
       require(!p.contains('=') && !p.contains(',') &&
         !l.contains('=') && !l.contains(','),
         s"renameColumns: names must not contain '=' or ',': $p -> $l") }
-    val prior = columnMapping(spark, path, fromVersion)
+    val from = snapshot(spark, path, fromVersion)
+    val prior = from.columnMapping
     // compose with any existing mapping: rename the LOGICAL name a
     // reader sees, keyed back to its physical column
     val physOf = prior.map { case (phys, logical) => logical -> phys }
@@ -3747,12 +3683,10 @@ object VectorOps {
     val logicals = composed.values.toSeq
     require(logicals.distinct.length == logicals.length,
       s"renameColumns: logical-name collision in $composed")
-    writeManifest(spark, path, toVersion,
-      readManifest(spark, path, fromVersion),
-      carriedMeta(spark, path, fromVersion, except = Set("colmap")) ++
-        Map("op" -> "rename",
-          "colmap" -> composed.toSeq.sorted
-            .map { case (p, l) => s"$p=$l" }.mkString(",")))
+    commitVersion(spark, from, toVersion, from.files, Nil, Set("colmap"),
+      Map("op" -> "rename",
+        "colmap" -> composed.toSeq.sorted
+          .map { case (p, l) => s"$p=$l" }.mkString(",")))
   }
 
   /** DROP a column without touching a byte of data — the second half of
@@ -3773,17 +3707,14 @@ object VectorOps {
     require(physCols.nonEmpty, "dropColumns: need at least one column")
     physCols.foreach(c => require(!c.contains(',') && !c.contains('='),
       s"dropColumns: names must not contain ',' or '=': $c"))
-    val mapped = columnMapping(spark, path, fromVersion).keySet
-    val clash = physCols.toSet.intersect(mapped)
+    val from = snapshot(spark, path, fromVersion)
+    val clash = physCols.toSet.intersect(from.columnMapping.keySet)
     require(clash.isEmpty,
       s"dropColumns: $clash are renamed columns — drop the physical " +
         "name after removing its mapping, not both at once")
-    val prior = droppedColumns(spark, path, fromVersion)
-    writeManifest(spark, path, toVersion,
-      readManifest(spark, path, fromVersion),
-      carriedMeta(spark, path, fromVersion, except = Set("coldrop")) ++
-        Map("op" -> "dropcol",
-          "coldrop" -> (prior ++ physCols).distinct.sorted.mkString(",")))
+    commitVersion(spark, from, toVersion, from.files, Nil, Set("coldrop"),
+      Map("op" -> "dropcol", "coldrop" ->
+        (from.droppedColumns ++ physCols).distinct.sorted.mkString(",")))
   }
 
   /** The physical columns dropped as of `version` (empty when none). */
@@ -3949,16 +3880,12 @@ object VectorOps {
     checks.foreach { case (n, e) =>
       require(!n.contains('\t') && !n.contains('\n') && !e.contains('\n'),
         s"setTableChecks: no tabs in names / newlines anywhere: $n") }
-    val carried = carriedMeta(spark, path, fromVersion,
-      except = Set("checks"))
-    val meta =
-      if (checks.isEmpty) carried + ("op" -> "setcheck")
-      else carried + ("op" -> "setcheck") + ("checks" ->
+    val from = snapshot(spark, path, fromVersion)
+    commitVersion(spark, from, toVersion, from.files, Nil, Set("checks"),
+      Map("op" -> "setcheck") ++ (if (checks.isEmpty) Nil else Seq("checks" ->
         java.util.Base64.getEncoder.encodeToString(
           checks.map { case (n, e) => s"$n\t$e" }.mkString("\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    writeManifest(spark, path, toVersion,
-      readManifest(spark, path, fromVersion), meta)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)))))
   }
 
   /** The table's CHECK constraints as of `version` (name → parsed
@@ -3967,23 +3894,17 @@ object VectorOps {
                   version: Int): Seq[(String, Column)] =
     snapshot(spark, path, version).checks
 
-  /** Enforce `fromVersion`'s table checks over `newFiles` (the files a
-    * writer is ABOUT to commit — staged batches, rewritten partitions,
-    * binpack outputs; never the untouched re-listed corpus) and refuse
-    * loudly on any violation. The single validation seam every
-    * versioned writer runs pre-manifest: cost ∝ the new files' bytes,
-    * zero when the table has no checks. Refusal leaves the new files
-    * unreferenced and invisible (no manifest lists them; vacuum
-    * reclaims them like any crashed write).
+  /** Refuse `what` loudly (IllegalStateException naming each failed
+    * constraint with its exact row count) when any of `files` violates
+    * `constraints` ([[checkConstraints]]: one scan of only those files)
+    * — the one violation check behind [[commitVersion]]'s table checks
+    * and [[commitFilesChecked]]. Cost ∝ the files' bytes.
     */
-  private def enforceTableChecks(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, fromVersion: Int,
-                                 newFiles: Seq[String],
-                                 what: String): Unit = {
-    if (newFiles.isEmpty) return
-    val checks = tableChecks(spark, path, fromVersion)
-    if (checks.isEmpty) return
-    val violations = checkConstraints(spark, path, newFiles, checks)
+  private def requireChecks(spark: org.apache.spark.sql.SparkSession,
+                            path: String, files: Seq[String],
+                            constraints: Seq[(String, Column)],
+                            what: String): Unit = {
+    val violations = checkConstraints(spark, path, files, constraints)
       .filter(_._2 > 0L)
     if (violations.nonEmpty)
       throw new IllegalStateException(
@@ -4009,13 +3930,7 @@ object VectorOps {
                          path: String, newFiles: Seq[String],
                          constraints: Seq[(String, Column)],
                          meta: Map[String, String] = Map.empty): OccCommit = {
-    val violations = checkConstraints(spark, path, newFiles, constraints)
-      .filter(_._2 > 0L)
-    if (violations.nonEmpty)
-      throw new IllegalStateException(
-        "commit refused — CHECK constraint violations: " +
-          violations.toSeq.sortBy(_._1)
-            .map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
+    requireChecks(spark, path, newFiles, constraints, "commit")
     commitFilesOcc(spark, path, newFiles, meta)
   }
 
@@ -4118,10 +4033,11 @@ object VectorOps {
     * Pending tombstones carry forward minus the upserted ids
     * (resurrection by intent); matched deletes need no new tombstones —
     * they are physically gone from the rewritten partitions. Rewrites
-    * remove files, so this path is single-writer like [[ivfUpsert]]
-    * (the duplicate-version refusal keeps a race loud). Cost: the
-    * source's bytes + the hot partitions' bytes; a source of brand-new
-    * ids degenerates to a pure append.
+    * remove files, so this path is single-writer like [[ivfUpsert]],
+    * and like it a stale merge is refused ("already committed") without
+    * touching the version that won. Cost: the source's bytes + the hot
+    * partitions' bytes; a source of brand-new ids degenerates to a pure
+    * append.
     *
     * Returns (partitionsRewritten, nUpdated, nDeleted, nInserted) —
     * matched-visible updates, matched-visible deletes, and true inserts
@@ -4136,6 +4052,7 @@ object VectorOps {
     import org.apache.hadoop.fs.{Path => HPath}
     val fs = new HPath(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
+    val from = snapshot(spark, path, fromVersion)
     // ONE pass over the caller's plan: stage (id, vec, delete-flag)
     val srcRel = s"_staging/merge_src_$toVersion"
     source.select(col(idCol), col(vecCol),
@@ -4155,50 +4072,20 @@ object VectorOps {
     val upsIds = broadcast(staged.filter(!col("__del"))
       .select(col(idCol)).distinct())
     // land the insert/update rows as new files (nothing visible yet)
-    val newFiles = stageAssignedFiles(spark, path, upsRows, centroids,
-      idCol, vecCol, s"merge$toVersion", s"_staging/merge_$toVersion")
+    val newFiles = landAssigned(spark, path, upsRows, centroids, idCol,
+      vecCol, s"_staging/merge_$toVersion", s"merge$toVersion",
+      Some(toVersion))
     // visibility applies BOTH delete kinds — a DV-hidden row must not
     // count as updated or deleted (it is already gone to every reader)
-    val visible = readIndexVersionVisible(spark, path, fromVersion, idCol)
-    val nUpdated = visible.join(upsIds, Seq(idCol), "left_semi").count()
-    val nDeleted = visible.join(delIds, Seq(idCol), "left_semi").count()
+    val seen = visible(spark, from, idCol)
+    val nUpdated = seen.join(upsIds, Seq(idCol), "left_semi").count()
+    val nDeleted = seen.join(delIds, Seq(idCol), "left_semi").count()
     val nInserted = upsRows.count() - nUpdated
-    // hot partitions over the PHYSICAL read (a tombstoned row being
-    // re-inserted is invisible but on disk — its stale bytes must go)
-    val touched = broadcast(staged.select(col(idCol)).distinct())
-    val hot = readIndexVersion(spark, path, fromVersion)
-      .join(touched, Seq(idCol), "left_semi")
-      .groupBy(col("centroid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => s"centroid=${r.get(0)}").toSet
-    // pending tombstones carry forward minus the UPSERTED ids (the new
-    // row must not be subtracted); matched deletes are physical
-    val meta = readDeletes(spark, path, fromVersion) match {
-      case None => Map("op" -> "merge")
-      case Some(d) =>
-        val kept = d.select(col("vid"))
-          .join(upsIds.select(col(idCol).as("vid")), Seq("vid"), "left_anti")
-        if (kept.isEmpty) Map("op" -> "merge")
-        else {
-          val rel = s"_deletes/v$toVersion"
-          kept.coalesce(1).write.mode("overwrite").parquet(s"$path/$rel")
-          Map("op" -> "merge", "deletes" -> rel)
-        }
-    }
-    // a pending DV splits across the rewrite: entries in hot partitions
-    // apply physically, the rest carry — merging on a DV-carrying
-    // version must not resurrect DV-deleted rows in untouched
-    // partitions; column mappings ride verbatim
-    val (dvMeta, _, dvApply) = splitDvForRewrite(spark,
-      snapshot(spark, path, fromVersion), toVersion,
-      f => hot.contains(f.takeWhile(_ != '/')))
-    val ddl = carriedMeta(spark, path, fromVersion,
-      except = Set("deletes", "dv", "dvcount"))
-    val (rewritten, _, _) =
-      rewriteVersioned(spark, path, fromVersion, toVersion, "merged",
-        carryMeta = ddl ++ dvMeta ++ meta ++ extraMeta,
-        extraFiles = newFiles) {
-        (part, _) => hot.contains(part)
-      } { df => dvApply(df).join(touched, Seq(idCol), "left_anti") }
+    // every touched id leaves the hot partitions; only the UPSERTED ids
+    // leave the carried tombstones (matched deletes are physical)
+    val rewritten = copyOnWrite(spark, from, toVersion, "merge", "merged",
+      broadcast(staged.select(col(idCol)).distinct()), upsIds, idCol,
+      newFiles, extraMeta)
     fs.delete(new HPath(path, srcRel), true)
     (rewritten, nUpdated, nDeleted, nInserted)
   }
