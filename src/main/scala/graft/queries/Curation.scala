@@ -746,7 +746,7 @@ object Curation {
         .select(col("vid"), l2(col("embedding")).as("d2"))
         .orderBy(col("d2").asc, col("vid").asc).limit(10)
     val appended = rerankedTop10(
-      s.read.parquet(path).filter(col("centroid").isin(probes: _*)))
+      Tables.parquet(s, path).filter(col("centroid").isin(probes: _*)))
     val rebuilt = rerankedTop10(
       VectorOps.pqEncode(union, "vec_id", "embedding", model)
         .join(union.select(col("vec_id").as("vid"),
@@ -976,7 +976,7 @@ object Curation {
       .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))
     val probeCells = probes.withColumn("centroid",
       explode(VectorOps.ivfProbeCells(col("qv"), cents, nProbe = 3)))
-    val index = s.read.parquet(path)
+    val index = Tables.parquet(s, path)
     val topk = udaf(new TopKByScore(3))
     def top3(pairs: DataFrame): DataFrame = pairs
       .filter(col("vec_id") =!= col("probe_id"))
@@ -1057,8 +1057,8 @@ object Curation {
   private val ivfPqCompactQ: Q = (s, dir) => {
     val (path, out, nParts, rewritten, before, after) = stageIvfPqCompact(s, dir)
     val cols = Seq(col("vid"), col("codes"), col("centroid"))
-    val old = s.read.parquet(path).select(cols: _*)
-    val neu = s.read.parquet(out).select(cols: _*)
+    val old = Tables.parquet(s, path).select(cols: _*)
+    val neu = Tables.parquet(s, out).select(cols: _*)
     val mism = old.exceptAll(neu).union(neu.exceptAll(old))
       .agg(count(lit(1)).as("n_mism"))
     val nRows = neu.agg(count(lit(1)).as("n_rows"))
@@ -1120,13 +1120,13 @@ object Curation {
     val (newPath, newCents) = stageIvfRebalance(s, dir)
     val qv = Registry.queryVec(s, dir)
     val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-    val reassigned = s.read.parquet(newPath)
+    val reassigned = Tables.parquet(s, newPath)
       .filter(col("centroid") =!=
         VectorOps.ivfAssign(col("embedding"), newCents))
       .agg(count(lit(1)).as("n_frag"))
-    val moved = s.read.parquet(oldPath)
+    val moved = Tables.parquet(s, oldPath)
       .select(col("vec_id"), col("centroid").as("c_old"))
-      .join(s.read.parquet(newPath)
+      .join(Tables.parquet(s, newPath)
         .select(col("vec_id"), col("centroid").as("c_new")), "vec_id")
       .filter(col("c_old") =!= col("c_new"))
       .agg(count(lit(1)).as("n_moved"))
@@ -1135,7 +1135,7 @@ object Curation {
     val nHit = VectorOps.cosineTopK(emb, "vec_id", "embedding", qv, 10)
       .join(probed.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
-    val nRows = s.read.parquet(newPath).agg(count(lit(1)).as("n_rows"))
+    val nRows = Tables.parquet(s, newPath).agg(count(lit(1)).as("n_rows"))
     reassigned.crossJoin(moved).crossJoin(nHit).crossJoin(nRows) // 1-row frames
       .select(lit(10).as("k"), lit(7).as("n_probe"),
         (col("n_frag") === 0L).as("reassign_exact"),
@@ -3262,7 +3262,7 @@ object Curation {
         .coalesce(1).write.parquet(out)
       out
     }
-    s.read.parquet(p)
+    Tables.parquet(s, p)
   }
 
   /** [[lifecycleFeed]] for the row-image feed
@@ -3277,7 +3277,7 @@ object Curation {
         .coalesce(1).write.parquet(out)
       out
     }
-    s.read.parquet(p)
+    Tables.parquet(s, p)
   }
 
   // ------------------------------------------ chunked CDC consumption

@@ -663,7 +663,7 @@ object Mining {
     * O(table). The modulo split here simulates that partition boundary.
     */
   private val ivmAggQ: Q = (s, dir) => {
-    val base = s.read.parquet(stagedBaseAggDir(s, dir))
+    val base = Tables.parquet(s, stagedBaseAggDir(s, dir))
     val delta = Tables.orders(s, dir).filter(col("o_orderkey") % 10 === 0)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("cnt"),
@@ -1262,7 +1262,7 @@ object Mining {
       : (String, Array[Array[Double]], VectorOps.PqModel) =
     Staging.cached(s"ivfpq:$dir") { tmp =>
       val (ivfPath, centroids) = Registry.stageIvf(s, dir)
-      val assigned = s.read.parquet(ivfPath)
+      val assigned = Tables.parquet(s, ivfPath)
       val model = VectorOps.pqTrain(assigned, "vec_id", "embedding",
         m = 16, dim = 64, k = 16, iters = 3)
       val codes = VectorOps.pqEncode(assigned, "vec_id", "embedding", model)
@@ -1301,7 +1301,7 @@ object Mining {
     val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val probes = VectorOps.nearestCentroids(centroids, qv, nProbe = 7)
-    val codes = s.read.parquet(path)
+    val codes = Tables.parquet(s, path)
       .filter(col("centroid").isin(probes: _*))
     val budget = math.max(100L, base.count() / 10).toInt
     val shortlist = VectorOps.pqAdcTopK(codes, model, qv, k = budget)

@@ -1081,7 +1081,7 @@ object Registry {
       out
     }
   private val videoFrames: Q = (s, dir) => {
-    val media = s.read.parquet(stagedVideos(s, dir))
+    val media = Tables.parquet(s, stagedVideos(s, dir))
     Multimodal.sampleFrameStats(media, "media_id", "content", stride = 2)
       .orderBy(col("media_id"), col("frame_idx"))
   }
@@ -1125,7 +1125,7 @@ object Registry {
       out
     }
   private val audioStats: Q = (s, dir) => {
-    Multimodal.decodeAudioStats(s.read.parquet(stagedAudios(s, dir)),
+    Multimodal.decodeAudioStats(Tables.parquet(s, stagedAudios(s, dir)),
         "media_id", "content")
       .orderBy(col("media_id"))
   }
@@ -1153,7 +1153,7 @@ object Registry {
     * total` so no float ever reaches the oracle compare.
     */
   private val audioFeatures: Q = (s, dir) => {
-    Multimodal.audioWindowEnergies(s.read.parquet(stagedAudios(s, dir)),
+    Multimodal.audioWindowEnergies(Tables.parquet(s, stagedAudios(s, dir)),
         "media_id", "content", nWindows = 8)
       .select(col("media_id"),
         aggregate(col("sums"), lit(0L), (a, x) => a + x).as("total"),
@@ -1210,7 +1210,7 @@ object Registry {
       .select(col("media_id").as("doc_id"),
         (expr("width div 4") * expr("height div 4")).cast("long").as("n_patches"))
     val aud = Multimodal.decodeAudioStats(
-        s.read.parquet(stagedAudios(s, dir)), "media_id", "content")
+        Tables.parquet(s, stagedAudios(s, dir)), "media_id", "content")
       .select(col("media_id").as("doc_id"),
         expr("n_samples div 100").cast("long").as("n_frames"))
     val ex = kept.join(img, "doc_id").join(aud, "doc_id")

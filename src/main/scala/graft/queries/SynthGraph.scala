@@ -30,7 +30,7 @@ object SynthGraph {
       rawEdges(s, dir).write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The underlying derivation: N = distinct orderkeys as a broadcast

@@ -35,4 +35,10 @@ object GraftShim {
     val b = org.apache.spark.util.SerializableConfiguration.broadcast(sc)
     () => b.value.value
   }
+
+  /** Block until every event posted so far has reached the listeners
+    * (`listenerBus` is `private[spark]`): a listener that counts jobs
+    * reads its counts only after the bus is empty. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -278,8 +278,9 @@ class IndexStreamSpec extends SparkSpec {
       assert(head.exceptAll(expect).union(expect.exceptAll(head))
         .count() == 0)
       // replay across the compaction boundary: batch keys survive a
-      // rewrite commit (carriedMeta never carries `batch`, and the
-      // original manifests still name theirs). A checkpoint-free drain
+      // rewrite commit (Snapshot.carried never carries `batch`, because
+      // `batch` is not in CarriedKeys, and the original manifests still
+      // name theirs). A checkpoint-free drain
       // under the SAME sink id redelivers batchIds 0..2 from scratch —
       // every one must be recognized and skipped on both tables
       val re = IndexStream.runStreamUpsertsWithView(spark, inDir, cents,
