@@ -681,28 +681,15 @@ object Bench {
     s((s.length - 1) / 2)
   }
 
+  /** Bench's settings on top of [[SparkEntry.sessionSettings]]: shuffle
+    * files and broadcasts are reclaimed only after their dependency
+    * objects are GC'd, and 300+ sequential queries outrun the 30 min
+    * default badly (r12 item 1 — cleaner-debt accumulation). */
+  private[graft] val extraSettings = Seq("spark.cleaner.periodicGC.interval" -> "2min")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide-aggregate queries (q_bootstrap_ci: 130 agg fields) must stay
-      // inside whole-stage codegen; the 100-field default silently drops
-      // them to interpreted eval (measured 2x slower than the explode form)
-      .config("spark.sql.codegen.maxFields", "256")
-      // the sf files are single small parquets (lineitem sf0.1 ≈ 11 MB);
-      // the 128 MB default split makes every scan single-threaded
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // shuffle files / broadcasts are reclaimed only after their
-      // dependency objects are GC'd; 300+ sequential queries outrun the
-      // 30 min default badly (r12 item 1 — cleaner-debt accumulation)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(extraSettings: _*)
     spark.sparkContext.setLogLevel("WARN")
 
     def runToNoop(name: String): Unit =

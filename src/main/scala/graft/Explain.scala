@@ -19,15 +19,7 @@ import org.apache.spark.sql.graftshim.GraftShim
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide-aggregate queries (q_bootstrap_ci: 130 agg fields) must stay
-      // inside whole-stage codegen; the 100-field default silently drops
-      // them to interpreted eval (measured 2x slower than the explode form)
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     args.toList match {

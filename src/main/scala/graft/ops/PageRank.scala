@@ -31,8 +31,7 @@ object PageRank {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, microInit: Long = 1000000L,
                dampingNum: Long = 850L, dampingDen: Long = 1000L,
-               checkpointInterval: Int = 8,
-               broadcastRanks: Boolean = false): DataFrame = {
+               checkpointInterval: Int = 8): DataFrame = {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
     require(checkpointInterval >= 1,
       "pageRank: checkpointInterval must be >= 1")
@@ -48,12 +47,10 @@ object PageRank {
     for (i <- 1 to iterations) {
       // rank is node-count-sized, so AQE already converts this join to a
       // broadcast at runtime WITHOUT the per-iteration driver barrier an
-      // explicit broadcast() adds (measured ~1.5x slower forced). The
-      // flag forces the hint for engines/configs without AQE; for graphs
-      // whose node set outgrows the broadcast budget, pre-bucket edges
-      // by src so the join co-locates.
-      val rankSide = if (broadcastRanks) broadcast(rank) else rank
-      rank = edgesDeg.join(rankSide, edgesDeg("src") === rankSide("node"))
+      // explicit broadcast() adds (measured ~1.5x slower forced); for
+      // graphs whose node set outgrows the broadcast budget, pre-bucket
+      // edges by src so the join co-locates.
+      rank = edgesDeg.join(rank, edgesDeg("src") === rank("node"))
         .select(col("dst"), expr("pr div out_deg").as("contrib"))
         .groupBy(col("dst"))
         .agg(sum(col("contrib")).as("mass"))

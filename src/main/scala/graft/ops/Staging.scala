@@ -51,6 +51,23 @@ object Staging {
     } else ds.localCheckpoint()
   }
 
+  /** [[materialize]], sized by what it holds: Spark estimates a
+    * materialized frame by its origin plan, which for an origin with a
+    * join is the join's product, so a join against the frame would
+    * shuffle however few rows it holds. The result is estimated at its
+    * row count times its row width instead, and a join against it
+    * broadcasts or shuffles by Spark's own thresholds. The row count is
+    * observed in the materializing job: sizing starts no job.
+    */
+  def materializeSized(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val counted = df.observe("graft_materialized_rows",
+      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
+    val done = materialize(counted)
+    val rows = counted.queryExecution.observedMetrics("graft_materialized_rows")
+    org.apache.spark.sql.graftshim.GraftShim.sizedByRows(done, rows.getLong(0))
+  }
+
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Any]()
 
   // ONE shutdown hook draining every staged root (one Thread per key

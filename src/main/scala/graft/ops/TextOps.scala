@@ -120,27 +120,6 @@ object TextOps {
     }
   }
 
-  /** Quality score in [0,1]: blend of length, punctuation ratio, stopword
-    * ratio, and mean word length plausibility — the standard cheap
-    * pre-filter shape for LLM corpus cleaning.
-    */
-  def qualityScore(c: Column): Column =
-    bind(length(c).cast("double")) { nChars =>
-      bind(size(tokens(c)).cast("double")) { nTok =>
-        val meanWordLen = nChars / greatest(nTok, lit(1.0))
-        val punct = length(regexp_replace(c, "[^.,;:!?]", "")).cast("double")
-        val punctRatio = punct / greatest(nChars, lit(1.0))
-        val stopSet = typedLit(stopwords.values.flatten.toSeq.distinct)
-        val stopRatio = size(array_intersect(array_distinct(tokens(lower(c))), stopSet))
-          .cast("double") / greatest(nTok, lit(1.0))
-        val lenScore = least(nChars / lit(500.0), lit(1.0))
-        val wordLenScore = when(meanWordLen.between(3.0, 10.0), 1.0).otherwise(0.3)
-        val punctScore = when(punctRatio < 0.1, 1.0).otherwise(0.5)
-        round(lit(0.3) * lenScore + lit(0.2) * wordLenScore +
-          lit(0.2) * punctScore + lit(0.3) * least(stopRatio * 4, lit(1.0)), 4)
-      }
-    }
-
   /** Integer-exact quality points (the oracle-safe scoring used by BOTH
     * q_quality_score and q_corpus_pipeline — one definition so the
     * per-stage query and the end-to-end pipeline can't drift): length

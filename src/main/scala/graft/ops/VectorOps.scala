@@ -123,8 +123,8 @@ object VectorOps {
     * split, which loses cross-sub-bucket twins — and which exact
     * duplicates defeat entirely: identical vectors share every
     * signature). Cost: hot-block rows replicate R× and per-tag pair work
-    * is ~2·maxBlock²; cool blocks pay one broadcast-join probe against
-    * the (tiny) hot-block list. R is capped at 1024 — past that the
+    * is ~2·maxBlock²; cool blocks pay one join probe against the (tiny)
+    * hot-block list. R is capped at 1024 — past that the
     * replication itself is the bottleneck and a coarser split keeps the
     * quadratic term the dominant (intended) cost. Default = MaxValue
     * keeps the plain single-join plan with zero added shuffles.
@@ -150,7 +150,7 @@ object VectorOps {
           .select(col("block"),
             least(expr(s"(__cnt + ${maxBlock - 1}) div $maxBlock"), lit(1024L))
               .as("__r"))
-        withNorm.join(broadcast(hot), Seq("block"), "left")
+        withNorm.join(hot, Seq("block"), "left")
           .withColumn("__r", coalesce(col("__r"), lit(1L)))
           .withColumn("__g", pmod(xxhash64(col(idCol)), col("__r")))
           .withColumn("__k", explode(sequence(lit(0L), col("__r") - 1)))
@@ -1362,8 +1362,8 @@ object VectorOps {
     *    rewritten file holds a DV entry — the common case, zero
     *    sidecar I/O).
     * Returns (metaAdditions, filesWithAppliedEntries, transform). All
-    * driver-side work is delete-sized; the transform's anti-join side
-    * broadcasts.
+    * driver-side work is delete-sized, and so is the transform's
+    * anti-join side.
     */
   private def splitDvForRewrite(spark: org.apache.spark.sql.SparkSession,
                                 snap: Snapshot, toVersion: Int,
@@ -1411,16 +1411,16 @@ object VectorOps {
   /** `df` — a direct scan of data files — minus the `(file, pos)`
     * positions `dv` names. The anti-join key is scan metadata
     * (`_metadata.file_path` / `row_index`), never a data column, so rows
-    * with duplicate or absent keys delete correctly; `dv` broadcasts (it
-    * is delete-sized — past broadcastable, the same join repartitions by
-    * `file`, a tuning knob, not a semantic change).
+    * with duplicate or absent keys delete correctly; `dv` is
+    * delete-sized, so Spark's join selection broadcasts it, and past its
+    * threshold the same join shuffles.
     */
   private def subtractDv(df: DataFrame, dv: DataFrame): DataFrame = df
     .withColumn("__dv_file",
       substring_index(col("_metadata.file_path"), "/", -2))
     .withColumn("__dv_pos", col("_metadata.row_index").cast("long"))
-    .join(broadcast(dv.select(col("file").as("__dv_file"),
-        col("pos").cast("long").as("__dv_pos"))),
+    .join(dv.select(col("file").as("__dv_file"),
+        col("pos").cast("long").as("__dv_pos")),
       Seq("__dv_file", "__dv_pos"), "left_anti")
     .drop("__dv_file", "__dv_pos")
 
@@ -1429,13 +1429,13 @@ object VectorOps {
                         snap: Snapshot, df: DataFrame): DataFrame =
     snap.deletionVector(spark).fold(df)(subtractDv(df, _))
 
-  /** `df` (a scan of `snap`) minus `snap`'s id tombstones — a broadcast
-    * left-anti join on the id column (tombstone sets are id-sized). */
+  /** `df` (a scan of `snap`) minus `snap`'s id tombstones — a left-anti
+    * join on the id column (tombstone sets are id-sized). */
   private def withoutTombstones(spark: org.apache.spark.sql.SparkSession,
                                 snap: Snapshot, df: DataFrame,
                                 idCol: String): DataFrame =
     snap.tombstones(spark).fold(df)(d => df.join(
-      broadcast(d.select(col("vid").as(idCol))), Seq(idCol), "left_anti"))
+      d.select(col("vid").as(idCol)), Seq(idCol), "left_anti"))
 
   /** Every row `snap` serves: DV positions subtracted first, then id
     * tombstones. */
@@ -1797,7 +1797,7 @@ object VectorOps {
     }
 
   /** Merge-on-read: the pinned version's files minus its tombstones —
-    * a broadcast left-anti join on the id column (tombstone sets are
+    * a left-anti join on the id column (tombstone sets are
     * id-sized, orders of magnitude under the corpus; at the point they
     * rival the corpus the physical [[applyDeletes]] is overdue anyway).
     * A version with no sidecar reads exactly as [[readIndexVersion]].
@@ -1841,7 +1841,7 @@ object VectorOps {
       case Some(d) =>
         // which partitions hold tombstoned rows — over the PHYSICAL
         // read (a doomed row is on disk even when a DV already hides it)
-        val delSet = broadcast(d.select(col("vid").as(idCol)))
+        val delSet = d.select(col("vid").as(idCol))
         scan(spark, from, from.files)
           .join(delSet, Seq(idCol), "left_semi")
           .select(col("centroid")).distinct()
@@ -1857,7 +1857,7 @@ object VectorOps {
     val tombApply: DataFrame => DataFrame = delsOpt match {
       case None => identity
       case Some(d) =>
-        val delSet = broadcast(d.select(col("vid").as(idCol)))
+        val delSet = d.select(col("vid").as(idCol))
         df => df.join(delSet, Seq(idCol), "left_anti")
     }
     val nBefore = footerCounts(spark, path,
@@ -2387,9 +2387,9 @@ object VectorOps {
     * with the same id and INSERT where the id is new. Copy-on-write (the
     * Delta MERGE shape): the update batch is assigned under the frozen
     * coarse quantizer and landed as new files; only the partitions that
-    * actually hold a replaced id are rewritten (filtered through a
-    * broadcast anti-join on the id set — the id set is batch-sized,
-    * never corpus-sized); every other file is re-listed untouched. The
+    * actually hold a replaced id are rewritten (filtered through an
+    * anti-join on the id set — the id set is batch-sized, never
+    * corpus-sized); every other file is re-listed untouched. The
     * manifest create commits replace-old and insert-new TOGETHER — no
     * reader can observe the id missing, which is why this cannot be
     * composed from a delete commit followed by an append commit.
@@ -2430,11 +2430,11 @@ object VectorOps {
     // re-embedding join, a streaming micro-batch) and is consumed exactly
     // once — by the staging write above. The row count comes from the
     // staged files' footers (metadata-priced).
-    val upIds = broadcast(
+    val upIds =
       if (newFiles.isEmpty) // empty batch: a no-change commit, not a crash
         spark.range(0).select(col("id").cast("long").as(idCol))
       else readFiles(spark, path, newFiles)
-        .select(col(idCol).cast("long").as(idCol)).distinct())
+        .select(col(idCol).cast("long").as(idCol)).distinct()
     // TOTAL staged rows (replaced + inserted) — not just true inserts;
     // see the Scaladoc's return contract
     val nStaged =
@@ -2595,9 +2595,9 @@ object VectorOps {
         // content diff; visibility-masked (a row tombstoned at B was
         // never visible as an add; a row already dead at A is no delete)
         val insRows = addRows.exceptAll(remRows)
-          .join(broadcast(delsB), Seq("vid"), "left_anti")
+          .join(delsB, Seq("vid"), "left_anti")
         val delRows = remRows.exceptAll(addRows)
-          .join(broadcast(delsA), Seq("vid"), "left_anti")
+          .join(delsA, Seq("vid"), "left_anti")
         // an id with changed content on BOTH sides is an update
         val updIds = insRows.select(col("vid")).distinct()
           .intersect(delRows.select(col("vid")).distinct())
@@ -2644,7 +2644,7 @@ object VectorOps {
                   case _: java.io.IOException => prevFiles
                 }
               rowsOf(keep)
-                .join(broadcast(tombIds), Seq("vid"), "left_semi")
+                .join(tombIds, Seq("vid"), "left_semi")
                 .select(col("vid"), lit("delete").as("change_type"),
                   col("vec"))
             }
@@ -3888,12 +3888,6 @@ object VectorOps {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8)))))
   }
 
-  /** The table's CHECK constraints as of `version` (name → parsed
-    * Column), empty when none are registered. */
-  def tableChecks(spark: org.apache.spark.sql.SparkSession, path: String,
-                  version: Int): Seq[(String, Column)] =
-    snapshot(spark, path, version).checks
-
   /** Refuse `what` loudly (IllegalStateException naming each failed
     * constraint with its exact row count) when any of `files` violates
     * `constraints` ([[checkConstraints]]: one scan of only those files)
@@ -4027,7 +4021,7 @@ object VectorOps {
     *  - unmatched ∧ deleteCond  → no-op (DELETE only fires on a match).
     *
     * Copy-on-write like the upsert: hot partitions are those PHYSICALLY
-    * holding a touched id (batch-sized broadcast semi-join); each is
+    * holding a touched id (batch-sized semi-join); each is
     * rewritten dropping every touched id; insert/update rows land as
     * new files; ONE manifest commits removes+replaces+inserts together.
     * Pending tombstones carry forward minus the upserted ids
@@ -4066,11 +4060,9 @@ object VectorOps {
     require(nSrc == nSrcIds,
       s"ivfMerge: duplicate source ids (${nSrc - nSrcIds} extra rows) — " +
         "applying two MERGE clauses to one target row is undefined")
-    val delIds = broadcast(staged.filter(col("__del"))
-      .select(col(idCol)).distinct())
+    val delIds = staged.filter(col("__del")).select(col(idCol)).distinct()
     val upsRows = staged.filter(!col("__del")).select(col(idCol), col(vecCol))
-    val upsIds = broadcast(staged.filter(!col("__del"))
-      .select(col(idCol)).distinct())
+    val upsIds = staged.filter(!col("__del")).select(col(idCol)).distinct()
     // land the insert/update rows as new files (nothing visible yet)
     val newFiles = landAssigned(spark, path, upsRows, centroids, idCol,
       vecCol, s"_staging/merge_$toVersion", s"merge$toVersion",
@@ -4084,7 +4076,7 @@ object VectorOps {
     // every touched id leaves the hot partitions; only the UPSERTED ids
     // leave the carried tombstones (matched deletes are physical)
     val rewritten = copyOnWrite(spark, from, toVersion, "merge", "merged",
-      broadcast(staged.select(col(idCol)).distinct()), upsIds, idCol,
+      staged.select(col(idCol)).distinct(), upsIds, idCol,
       newFiles, extraMeta)
     fs.delete(new HPath(path, srcRel), true)
     (rewritten, nUpdated, nDeleted, nInserted)

@@ -21,8 +21,9 @@ object Corpus {
   /** Benchmark decontamination: flag training docs sharing any word
     * 4-gram with the held-out/benchmark set (here: every 20th doc). The
     * eval n-gram set is orders of magnitude smaller than the corpus, so
-    * it BROADCASTS — the training side never shuffles its text, only the
-    * exploded (doc_id, gram) pairs stream map-side through the hash join.
+    * Spark's size-based selection broadcasts it — the training side
+    * never shuffles its text, only the exploded (doc_id, gram) pairs
+    * stream map-side through the hash join.
     * The standard n-gram-overlap decontamination pass (WebText/C4-style),
     * sized to the fixture's ~54-token docs.
     */
@@ -34,7 +35,7 @@ object Corpus {
       .select(explode(col("grams")).as("g")).distinct()
     val tr = sh.filter(col("doc_id") % 20 =!= 0)
       .select(col("doc_id"), explode(col("grams")).as("g"))
-    tr.join(broadcast(ev), Seq("g"))
+    tr.join(ev, Seq("g"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits")) // grams are distinct per doc
       .orderBy(col("doc_id"))

@@ -2111,14 +2111,14 @@ object Curation {
       .select(col("vec_id"), col("embedding"))
     val expectUpd = updIds.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(1.0f)).as("embedding"))
-    val badUpd = v4.join(broadcast(updIds.select(col("vec_id"))),
+    val badUpd = v4.join(updIds.select(col("vec_id")),
         Seq("vec_id"), "left_semi")
       .exceptAll(expectUpd)
       .agg(count(lit(1)).as("n_bad_upd"))
     val newRows = emb.filter(col("vec_id") % 11 === 5)
       .select(col("vec_id"), col("embedding"))
     val badNew = newRows.exceptAll(
-        v4.join(broadcast(newRows.select(col("vec_id"))),
+        v4.join(newRows.select(col("vec_id")),
           Seq("vec_id"), "left_semi"))
       .agg(count(lit(1)).as("n_bad_new"))
     val nV4 = v4.agg(count(lit(1)).as("n_v4"),
@@ -2129,7 +2129,7 @@ object Curation {
     // pinned v3 still serves the ORIGINAL content for upserted ids
     val badPinned = VectorOps.readIndexVersionMor(s, path, 3, "vec_id")
       .select(col("vec_id"), col("embedding"))
-      .join(broadcast(updIds.select(col("vec_id"))), Seq("vec_id"), "left_semi")
+      .join(updIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .exceptAll(updIds.select(col("vec_id"), col("embedding")))
       .agg(count(lit(1)).as("n_bad_pin"))
     val nUpd = updIds.agg(count(lit(1)).as("n_upd"))
@@ -3191,7 +3191,7 @@ object Curation {
       VectorOps.listVersions(s, path) == Seq(6, 7) && nDel > 0
     val idsSurvive = ids == (30L to 35L).toSet
     val mor = VectorOps.readIndexLatest(s, path, "vec_id")
-    val nLeak = mor.join(broadcast(doomed), Seq("vec_id"), "left_semi")
+    val nLeak = mor.join(doomed, Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_leak"))
     val nMor = mor.agg(count(lit(1)).as("n_mor"))
     val nSurv = emb.filter(col("vec_id") % 7 =!= 3)

@@ -263,9 +263,8 @@ object Learners {
     * algorithm (the prune is lossless by support monotonicity: every
     * sub-pair of a frequent triple is frequent). The ORACLE pays the
     * naive 3-way join instead — the engine's lattice path must
-    * reproduce it exactly. F2 semi-joins broadcast at these sizes; past
-    * [[graft.ops.Hints]]' row gate the SAME joins plan SHUFFLE_HASH on
-    * the same keys — enforced in code, plan-locked in HintsSpec.
+    * reproduce it exactly. F2's semi-joins broadcast while F2 is small
+    * (see the note at F2 below).
     */
   private val aprioriQ: Q = (s, dir) => {
     val cp = Tables.orders(s, dir)
@@ -293,17 +292,21 @@ object Learners {
     val bp = baskets.select(col("cust"), explode(
         graft.expr.PackedPairs.packedPairs(col("ps"))).as("pk"))
     // F2 is DATA-SIZED (307k keys at sf0.1, growing with the basket
-    // fan-out) — the broadcast is size-GATED, not hard-hinted: past the
-    // row bound the same semi-joins degrade to SHUFFLE_HASH on the same
-    // keys instead of OOM'ing the build (r12 verdict item 2; the gate
-    // also materializes F2 once for its two consumers).
+    // fan-out), materialized once for its two semi-join consumers and
+    // sized by its rows: a plain materialized frame carries its origin
+    // plan's estimate, here the orders ⋈ lineitem product far past
+    // 10 MB, and the static plan would sort-merge, shuffling the 11M-row
+    // pair fan-out before AQE turned the join into a broadcast (one
+    // filtered Bench run each at sf0.1 on a 4-core VM: 8.7 → 10.6 s,
+    // task CPU 71 → 87 s). At 16 bytes a row, Spark broadcasts F2 up to
+    // ~650k rows and shuffles past that.
     // (A one-shuffle variant that carries collect_list(cust) through the
     // pair count to avoid the second bp shuffle re-measured SLOWER —
     // probe med 6.44 vs 5.68, first rep 21 s: 7M per-group list buffers
     // cost more than the semi-join it saves. §1.1 empirical loop.)
-    val f2 = graft.ops.Hints.sizeGatedBroadcast(
-      bp.groupBy(col("pk")).agg(count(lit(1)).as("co"))
-        .filter(col("co") >= 2).select(col("pk")), reuse = true)
+    val f2 = bp.groupBy(col("pk")).agg(count(lit(1)).as("co"))
+      .filter(col("co") >= 2).select(col("pk"))
+      .transform(graft.ops.Staging.materializeSized)
     // NOT materialized despite feeding both sides of the self-join:
     // both sides plan identical exchanges, so the fan-out + semi-join
     // subtree is computed once and reused (ReusedExchange — §2.4);

@@ -386,10 +386,9 @@ object Mining {
           (lit(100L) - round(col("l_discount") * 100).cast("long")))
           .as("rev"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      // customer scales with the corpus (unlike nation/region) — the
-      // broadcast is size-gated so a 100× segment degrades to a
-      // shuffle-hash join instead of failing the build
-      .join(graft.ops.Hints.sizeGatedBroadcast(cust),
+      // customer scales with the corpus (unlike nation/region) — no
+      // hint, so a 100× segment shuffles instead of failing the build
+      .join(cust,
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(sum(col("rev")).as("revenue"))

@@ -68,8 +68,10 @@ object Nonparam {
     }
     val dec: Column => Column = _.cast("decimal(38,0)")
     val ranked = f
+      // x (quantity 1..50) is a fixed domain; y (price cents) grows with
+      // the corpus, so its join is left to Spark's size-based selection
       .join(broadcast(midranks(f.select(col("x")), "x")), "x")
-      .join(broadcast(midranks(f.select(col("y")), "y")), "y")
+      .join(midranks(f.select(col("y")), "y"), "y")
     ranked.agg(count(lit(1)).as("n"),
         sum(dec(col("mr2_x"))).as("sx"), sum(dec(col("mr2_y"))).as("sy"),
         sum(dec(col("mr2_x")) * dec(col("mr2_x"))).as("sxx"),
@@ -130,9 +132,9 @@ object Nonparam {
     val f = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         col("o_custkey")), col("l_orderkey") === col("o_orderkey"))
-      // customer scales with the corpus — size-gated, not hard-hinted
-      .join(graft.ops.Hints.sizeGatedBroadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
+      // customer scales with the corpus — no hint, Spark picks the join
+      .join(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("segment"),
         col("l_quantity").cast("long").as("x"),

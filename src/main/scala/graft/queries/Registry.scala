@@ -124,10 +124,12 @@ object Registry {
        |JOIN lineitem ON o_orderkey = l_orderkey
        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  /** J5-shaped: fact ⋈ broadcast dim chain (supplier → nation → region). */
+  /** J5-shaped: fact ⋈ broadcast dim chain (supplier → nation → region).
+    * nation and region are fixed-size and hard-hinted; supplier scales
+    * with the corpus, so Spark's size-based selection picks its join. */
   private val broadcastDim: Q = (s, dir) => {
     Tables.lineitem(s, dir)
-      .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"))
@@ -601,9 +603,9 @@ object Registry {
        |FROM sc ORDER BY doc_id""".stripMargin
   }
 
-  /** Integer-exact document quality points (the oracle-safe variant of
-    * TextOps.qualityScore — ratio rounding diverges between engines, so
-    * the registry query scores in pure integer space).
+  /** Integer-exact document quality points (a ratio-based score's
+    * rounding diverges between engines, so the registry query scores in
+    * pure integer space).
     */
   private val qualityScoreQ: Q = (s, dir) => {
     spread(Tables.documents(s, dir))
@@ -1604,15 +1606,17 @@ object Registry {
     val open = Tables.orders(s, dir).filter(col("o_orderstatus") =!= "F")
     val branded = latest.join(open.select("o_orderkey"),
       col("l_orderkey") === col("o_orderkey"), "left_semi")
-    // dim label via broadcast (J5a): supplier → nation name. nation is
-    // FIXED-size (25 rows, hard broadcast is always right); supplier
-    // scales with the corpus, so its broadcast is size-GATED — past the
-    // row bound the label join degrades to shuffle-hash
-    val dim = graft.ops.Hints.sizeGatedBroadcast(Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
+    // dim label (J5a): supplier → nation name. supplier scales with the
+    // corpus, so its join carries no hint: Spark's size-based selection
+    // broadcasts its two projected columns. nation is FIXED-size (25
+    // rows, hard broadcast is always right) and labels the joined rows —
+    // joined into supplier first, the dim's size estimate is the product
+    // of both tables and the planner broadcast the fact side instead
+    val labeled = branded
+      .join(Tables.supplier(s, dir).select(col("s_suppkey"), col("s_nationkey")),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name")))
-    val labeled = branded.join(dim, col("l_suppkey") === col("s_suppkey"))
     // pivot-avg (A1+A2) with explicit values, per nation label
     val flags = Seq("A", "N", "R")
     val wide = labeled.groupBy(col("n_name"))

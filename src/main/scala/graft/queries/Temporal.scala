@@ -143,11 +143,10 @@ object Temporal {
       .groupBy(col("pk")).agg(sum(col("term_ppm")).as("aa_ppm"))
       .select(expr("pk div 4294967296").as("u"),
         pmod(col("pk"), lit(4294967296L)).as("v"), col("aa_ppm"))
-    // the edge set packs into the same key space → size-GATED broadcast
-    // anti-join (the edge set is data-sized; past the row gate the same
-    // anti-join degrades to SHUFFLE_HASH — r12 verdict item 2)
-    scored.join(graft.ops.Hints.sizeGatedBroadcast(e.select(
-        (col("u") * 4294967296L + col("v")).as("ek"))),
+    // the edge set packs into the same key space → anti-join; the edge
+    // set is data-sized, so Spark's size-based selection picks broadcast
+    // or shuffle
+    scored.join(e.select((col("u") * 4294967296L + col("v")).as("ek")),
         col("u") * 4294967296L + col("v") === col("ek"), "left_anti")
       .orderBy(col("aa_ppm").desc, col("u"), col("v"))
       .limit(20)
@@ -221,8 +220,7 @@ object Temporal {
     val surv = nall
       .filter(size(col("ns")).between(2, cap))
       .select(explode(packedNs).as("pk")).distinct()
-      .join(graft.ops.Hints.sizeGatedBroadcast(e.select(
-          (col("u") * 4294967296L + col("v")).as("pk"))),
+      .join(e.select((col("u") * 4294967296L + col("v")).as("pk")),
         Seq("pk"), "left_anti")
       .select(expr("pk div 4294967296").as("u"),
         pmod(col("pk"), lit(4294967296L)).as("v"))
@@ -254,8 +252,7 @@ object Temporal {
       .groupBy(col("pk")).agg(sum(col("term_ppm")).as("aa_ppm"))
       .select(expr("pk div 4294967296").as("u"),
         pmod(col("pk"), lit(4294967296L)).as("v"), col("aa_ppm"))
-      .join(graft.ops.Hints.sizeGatedBroadcast(e.select(
-          (col("u") * 4294967296L + col("v")).as("ek"))),
+      .join(e.select((col("u") * 4294967296L + col("v")).as("ek")),
         col("u") * 4294967296L + col("v") === col("ek"), "left_anti")
       .orderBy(col("aa_ppm").desc, col("u"), col("v"))
       .limit(k)

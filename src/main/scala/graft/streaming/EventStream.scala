@@ -42,6 +42,16 @@ object EventStream {
     }
   }
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n` and restores
+    * the session value after: a streaming query's state-store instances
+    * are its shuffle partitions, and its state here is small, so a few
+    * partitions beat the session default. */
+  private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** Canonical file-source schema for staged event files. Staging always
     * rewrites events through [[graft.Tables.events]] (which owns the
     * physical-type normalization — the fixture has shipped both
@@ -88,9 +98,7 @@ object EventStream {
     // state-store instances = shuffle partitions; the windowed state is
     // tiny (windows × types), so a handful of partitions beats the
     // session default (restored after the drain)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(spark, 8) {
       val q = windowedAgg(raw, windowDur)
         .writeStream
         .format("memory")
@@ -99,7 +107,7 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrain(q)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 
@@ -120,9 +128,7 @@ object EventStream {
       .parquet(inputDir)
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(spark, 8) {
       val q = raw.writeStream
         .format("memory")
         .queryName(queryName)
@@ -130,7 +136,7 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrain(q)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -165,9 +171,7 @@ object EventStream {
         col("p_ts") <= col("c_ts") + expr(s"interval $matchWindow"))
     // each shuffle partition = one state-store instance PER JOIN SIDE —
     // the join state here is tiny, so fewer stores beat more parallelism
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withShufflePartitions(spark, 4) {
       val q = joined.writeStream
         .format("memory")
         .queryName(queryName)
@@ -175,7 +179,7 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrain(q)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
       .groupBy(col("c_user").as("user_id"))
       .agg(count(lit(1)).as("pairs"))
@@ -221,9 +225,7 @@ object EventStream {
           .as("wsum_cents"))
       .select(col("window.start").as("bucket"), col("tier"),
         col("cnt"), col("wsum_cents"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(spark, 8) {
       val q = enriched.writeStream
         .format("memory")
         .queryName(queryName)
@@ -231,7 +233,7 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrain(q)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 
@@ -264,9 +266,7 @@ object EventStream {
     // which A/B slot holds the current target (-1 = none yet); plain var
     // is safe — foreachBatch bodies run sequentially on the stream thread
     var cur = -1
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    try withShufflePartitions(spark, 8) {
       val q = raw.writeStream
         .queryName(queryName)
         .trigger(Trigger.AvailableNow())
@@ -303,7 +303,6 @@ object EventStream {
           col("last_value_cents"))
         .transform(Staging.materialize)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
       import scala.jdk.CollectionConverters._
       val stream = java.nio.file.Files.walk(root)
       val paths = try stream.iterator().asScala.toSeq.reverse

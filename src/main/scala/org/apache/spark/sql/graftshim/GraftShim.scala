@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * Column API. `ExpressionUtils` is `private[sql]`, so this one-file shim
@@ -23,6 +26,22 @@ object GraftShim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A materialized frame (`checkpoint`/`localCheckpoint`) whose size
+    * estimate is `rows` rows of its output's width, in place of its
+    * origin plan's estimate (`LogicalRDD` and its statistics are
+    * internal, hence the shim). */
+  def sizedByRows(df: DataFrame, rows: Long): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[SparkSession]
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD =>
+        val stats = Statistics(EstimationUtils.getSizePerRow(r.output) * rows,
+          rowCount = Some(BigInt(rows)))
+        ofRows(session, r.copy()(session, Some(stats), Some(r.constraints)))
+      case p =>
+        throw new IllegalArgumentException(s"not a materialized frame: ${p.nodeName}")
+    }
+  }
 
   /** Executor-side access to the session's Hadoop configuration: returns
     * a serializable thunk wrapping a broadcast `SerializableConfiguration`

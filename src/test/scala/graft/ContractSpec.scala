@@ -30,6 +30,21 @@ class ContractSpec extends SparkSpec {
     println(s"QUERIES=${all.size} ORACLES=${SparkEntry.oracleSql.size}")
   }
 
+  test("Bench, Verify and Explain share one session definition") {
+    assert(SparkEntry.sessionSettings("4").toMap == Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.maxFields" -> "256",
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.files.openCostInBytes" -> "64k",
+      "spark.ui.enabled" -> "false"))
+    assert(SparkEntry.sessionSettings("7").toMap.filter(_._2.contains("7")) ==
+      Map("spark.master" -> "local[7]", "spark.sql.shuffle.partitions" -> "7"))
+    assert(Bench.extraSettings == Seq("spark.cleaner.periodicGC.interval" -> "2min"))
+  }
+
   test("COVERAGE.md sync: every registry query name appears in the " +
       "operator inventory") {
     // r7/r8 verdict item: COVERAGE.md rotted silently (q_maxsim was

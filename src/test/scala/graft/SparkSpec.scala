@@ -1,12 +1,30 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlCtx = spark
+
+  /** Jobs `body` starts, counted once the listener bus is drained. */
+  def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    GraftShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftShim.drainListenerBus(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
 
   /** Canonical-schema event files for stream-source tests: rewritten
     * through [[Tables.events]] (owner of the fixture's physical-type

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
 
 /** Pins the schema memo behind [[Tables.load]] and [[Tables.parquet]]: a
@@ -28,20 +24,6 @@ class TablesSpec extends SparkSpec {
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
-  }
-
-  /** Jobs `body` starts, counted once the listener bus is drained. */
-  private def jobsStarted(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
-    }
-    GraftShim.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; GraftShim.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
   }
 
   private def rows(df: DataFrame): Seq[String] =

@@ -83,4 +83,23 @@ class StagingSpec extends SparkSpec {
       Staging.deleteRecursively(ckptDir)
     }
   }
+
+  test("materializeSized: the rows of materialize, estimated at row count " +
+      "times row width instead of the origin's join product, in one job") {
+    import org.apache.spark.sql.functions._
+    val keys = spark.range(2000).select(col("id").as("k"))
+    // a join product estimate far past the rows it yields
+    def frame = keys.join(keys.select(col("k").as("k2")), col("k") === col("k2"))
+      .filter(col("k") % 5 === 0).select(col("k"))
+    def stats(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats
+    var sized: org.apache.spark.sql.DataFrame = null
+    assert(jobsStarted { sized = Staging.materializeSized(frame) } ==
+      jobsStarted { Staging.materialize(frame) })
+    assert(sized.collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 2000L by 5L))
+    assert(stats(sized).rowCount.contains(BigInt(400)))
+    assert(stats(sized).sizeInBytes == BigInt(400 * 16)) // 8-byte row + 8-byte long
+    assert(stats(Staging.materialize(frame)).sizeInBytes > BigInt(400 * 16))
+  }
 }
