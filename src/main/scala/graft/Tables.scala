@@ -37,30 +37,46 @@ object Tables {
     } else df
   }
 
-  /** `spark.read.parquet(path)` for one literal path, with Spark's schema
-    * inference (one job per call) run once per path per JVM.
+  /** `parquet(spark, Seq(path))`: one path, no reader options. */
+  def parquet(spark: SparkSession, path: String): DataFrame = parquet(spark, Seq(path))
+
+  /** graft's one parquet reader: `spark.read.options(options)
+    * .parquet(paths: _*)`, with Spark's schema inference (one job per
+    * call) run once per file set per JVM.
     *
-    * The memo keeps, per qualified path, the inferred schema and what the
-    * inference saw: the data files (path, length, modification time, from
-    * one metadata listing that runs no job) and the session confs that
-    * change parquet inference. When both still match, the read passes the
-    * remembered schema; otherwise it infers again and replaces the entry.
-    * The listing is taken before the inference, so a rewrite racing it
-    * can only cost a later re-inference, never a stale schema. A glob or
-    * a missing path goes straight to Spark's reader and fails as it does.
+    * The memo is keyed by the qualified paths, in the order given, and
+    * the reader options (`basePath`, `mergeSchema`). Each entry holds
+    * the inferred schema and a fixed-size digest of what the inference
+    * saw: the data files under every path (path, length, modification
+    * time, from one metadata listing that starts no job) and the session
+    * confs that change parquet inference. When the digest still matches,
+    * the read passes the remembered schema; otherwise it infers again
+    * and replaces the entry. The listing is taken before the inference,
+    * so a rewrite racing it can only cost a later re-inference, never a
+    * stale schema. The memo keeps the [[MemoCapacity]] most recently
+    * used file sets. A glob or a missing path goes straight to Spark's
+    * reader and fails as it does.
     */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (path.exists("{}[]*?\\".contains(_)) || !fs.exists(p)) spark.read.parquet(path)
+  def parquet(spark: SparkSession, paths: Seq[String],
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val read = spark.read.options(options)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val located = paths.map { path =>
+      val p = new Path(path)
+      (p.getFileSystem(conf), p)
+    }
+    if (paths.exists(_.exists("{}[]*?\\".contains(_))) ||
+        located.exists { case (fs, p) => !fs.exists(p) })
+      read.parquet(paths: _*)
     else {
-      val key = fs.makeQualified(p).toString
-      val seen = Seen(dataFiles(fs, p), InferenceConfs.map(spark.conf.getOption))
-      schemas.get(key) match {
-        case (`seen`, schema) => spark.read.schema(schema).parquet(path)
+      val key = (located.map { case (fs, p) => fs.makeQualified(p).toString }, options)
+      val seen = digest(located.flatMap { case (fs, p) => dataFiles(fs, p) },
+        InferenceConfs.map(spark.conf.getOption))
+      memo.synchronized(Option(memo.get(key))) match {
+        case Some((`seen`, schema)) => read.schema(schema).parquet(paths: _*)
         case _ =>
-          val df = spark.read.parquet(path)
-          schemas.put(key, (seen, df.schema))
+          val df = read.parquet(paths: _*)
+          memo.synchronized(memo.put(key, (seen, df.schema)))
           df
       }
     }
@@ -77,11 +93,26 @@ object Tables {
     "spark.sql.caseSensitive",
     "spark.sql.sources.partitionColumnTypeInference.enabled")
 
-  private final case class Seen(files: Seq[(String, Long, Long)],
-                                confs: Seq[Option[String]])
+  /** How many file sets the schema memo keeps, least recently used
+    * evicted first: about three times the 330 that `Explain
+    * --build-jobs` touches building the whole registry twice. */
+  private[graft] val MemoCapacity = 1024
 
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seen, StructType)]()
+  private type Key = (Seq[String], Map[String, String])
+
+  private val memo = new java.util.LinkedHashMap[Key, (String, StructType)](64, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[Key, (String, StructType)]): Boolean = size > MemoCapacity
+  }
+
+  /** SHA-256 of the listed data files and the inference confs, Base64. */
+  private def digest(files: Seq[(String, Long, Long)], confs: Seq[Option[String]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def add(s: String): Unit = md.update((s + "\u0000").getBytes("UTF-8"))
+    files.foreach { case (f, len, mtime) => add(f); add(len.toString); add(mtime.toString) }
+    confs.foreach(c => add(c.fold("-")("=" + _)))
+    java.util.Base64.getEncoder.encodeToString(md.digest())
+  }
 
   /** Sorted (path, length, modification time) of the data files under
     * `p`, skipping the `_`/`.` names Spark's file index skips (a

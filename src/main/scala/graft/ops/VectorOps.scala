@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Vector / similarity-search operators (SURVEY §2.7 — V2/V3; reference
   * surface: cosine top-k over 1024-dim embeddings,
@@ -449,7 +450,7 @@ object VectorOps {
                       nProbe: Int = 3): DataFrame = {
     val rows = latestVersion(spark, path) match {
       case Some(v) => readIndexVersionVisible(spark, path, v, idCol)
-      case None => spark.read.parquet(path)
+      case None => Tables.parquet(spark, path)
     }
     ivfTopK(IvfIndex(rows, centroids), idCol, vecCol, query, k, nProbe)
   }
@@ -649,7 +650,7 @@ object VectorOps {
       val dst = new HPath(outPath, part.getPath.getName)
       if (files.length > 1) {
         // hot partition: one coalesced rewrite of just this directory
-        spark.read.parquet(part.getPath.toString).coalesce(1)
+        Tables.parquet(spark, part.getPath.toString).coalesce(1)
           .write.mode("overwrite").parquet(dst.toString)
         rewritten += 1
       } else {
@@ -811,13 +812,13 @@ object VectorOps {
       * an orphaned sidecar (a crashed or version-race-losing commit)
       * must stay invisible. */
     def tombstones(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
-      meta.get("deletes").map(rel => spark.read.parquet(resolveRel(path, rel)))
+      meta.get("deletes").map(rel => Tables.parquet(spark, resolveRel(path, rel)))
 
     /** The deletion-vector sidecar `(file, pos)`, resolved like
       * [[tombstones]] via the `dv` header. */
     def deletionVector(spark: org.apache.spark.sql.SparkSession)
         : Option[DataFrame] =
-      meta.get("dv").map(rel => spark.read.parquet(resolveRel(path, rel)))
+      meta.get("dv").map(rel => Tables.parquet(spark, resolveRel(path, rel)))
 
     /** physical → logical column names, empty before any rename. */
     def columnMapping: Map[String, String] =
@@ -1186,11 +1187,11 @@ object VectorOps {
     val (ext, loc) = files.partition(isExternal)
     val parts =
       (if (loc.nonEmpty)
-         Seq(spark.read.option("basePath", path)
-           .parquet(loc.map(resolveRel(path, _)): _*))
+         Seq(Tables.parquet(spark, loc.map(resolveRel(path, _)),
+           Map("basePath" -> path)))
        else Nil) ++
       ext.groupBy(externalRoot).toSeq.sortBy(_._1).map { case (r, fs) =>
-        spark.read.option("basePath", r).parquet(fs: _*) }
+        Tables.parquet(spark, fs, Map("basePath" -> r)) }
     // allowMissingColumns: a single-root parquet read pads a column
     // absent from some files with nulls; a cross-root read must behave
     // identically or a clone's mixed manifest changes schema semantics
@@ -1389,18 +1390,20 @@ object VectorOps {
       return verbatim // dvcount > 0, checked above
     val dv = snap.deletionVector(spark).get
       .select(col("file"), col("pos").cast("long").as("pos"))
-    // no dvcount header (foreign writer): only the (delete-sized) read
-    // can tell an empty DV
-    if (!meta.contains("dvcount") && dv.isEmpty) return none
+    // ONE delete-sized job: the entry count of every file the DV names
+    val entries = dv.groupBy(col("file")).agg(count(lit(1)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // no dvcount header (foreign writer): only the read can tell an
+    // empty DV
+    if (!meta.contains("dvcount") && entries.isEmpty) return none
     if (files.isEmpty) return verbatim
     val inRewrite = col("file").isin(files: _*)
-    val applied = dv.filter(inRewrite)
-    val appliedFiles = applied.select(col("file")).distinct().collect()
-      .map(_.getString(0)).toSet
+    val appliedFiles = entries.keySet.filter(files.toSet)
     if (appliedFiles.isEmpty) return verbatim
-    val applier: DataFrame => DataFrame = subtractDv(_, applied)
+    val applier: DataFrame => DataFrame = subtractDv(_, dv.filter(inRewrite))
     val keptDv = dv.filter(!inRewrite)
-    val nKept = keptDv.count()
+    val nKept = entries.collect {
+      case (f, n) if f != null && !appliedFiles(f) => n }.sum
     if (nKept == 0L) (Map.empty, appliedFiles, applier)
     else {
       val rel = writeVersionSidecar(spark, snap.path, "_dv", toVersion, keptDv)
@@ -1932,8 +1935,8 @@ object VectorOps {
       // (q_schema_evolution's exact layout) — without the merge,
       // rewriting it silently DROPS the evolved column from the rows
       // whose files carried it
-      val base = spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => s"$path/$f"): _*)
+      val base = Tables.parquet(spark, files.map(f => s"$path/$f"),
+        Map("mergeSchema" -> "true"))
       land(spark, path, s"_rewrite_tmp/g$i", Some(toVersion),
         transform(if (files.exists(dvFiles)) dvApply(base) else base)
           .coalesce(1).write)((_, _) => dst)
@@ -2038,16 +2041,17 @@ object VectorOps {
     * version's files may carry DIFFERENT schemas (a later append added a
     * column; older files predate it) and the merged read unions them,
     * nulling the missing column on old rows — the backfill-free column
-    * add of q_schema_evolution. Merging costs a footer read per file at
-    * planning (metadata-scale, the same class as the fsck audit), which
-    * is why it is a separate entry point and not the default: a reader
-    * that knows its version is schema-uniform should not pay it.
+    * add of q_schema_evolution. Merging costs a footer read per file on
+    * the first read of a file set (metadata-scale, the same class as
+    * the fsck audit; [[Tables.parquet]] remembers the merged schema),
+    * which is why it is a separate entry point and not the default: a
+    * reader that knows its version is schema-uniform should not pay it.
     */
   def readIndexVersionMerged(spark: org.apache.spark.sql.SparkSession,
                              path: String, version: Int): DataFrame = {
     val files = readManifest(spark, path, version).map(f => s"$path/$f")
-    spark.read.option("basePath", path).option("mergeSchema", "true")
-      .parquet(files: _*)
+    Tables.parquet(spark, files,
+      Map("basePath" -> path, "mergeSchema" -> "true"))
   }
 
   // -------------------------------------------- servability audit (fsck)
@@ -3474,9 +3478,10 @@ object VectorOps {
     * reclaims it (same single-commit-point discipline as
     * [[commitDeletes]]).
     *
-    * Returns (nNewPositions, nTotalPositions) — counted from the
-    * written sidecar and the prior pending set (both delete-sized), not
-    * by re-scanning the corpus.
+    * Returns (nNewPositions, nTotalPositions) — the total observed in
+    * the sidecar write's own job, the pending count from `fromVersion`'s
+    * `dvcount` header (counted from its sidecar only without one): no
+    * re-read, and no re-scan of the corpus.
     */
   def commitDeletionVector(spark: org.apache.spark.sql.SparkSession,
                            path: String, fromVersion: Int, toVersion: Int,
@@ -3495,10 +3500,14 @@ object VectorOps {
     val pending = from.deletionVector(spark)
     val merged = pending.map(p => fresh.unionByName(
       p.select(col("file"), col("pos")))).getOrElse(fresh).distinct()
-    val sidecarRel = writeVersionSidecar(spark, path, "_dv", toVersion, merged)
-    // count from the COMMITTED sidecar (delete-sized), not the corpus
-    val nTotal = spark.read.parquet(s"$path/$sidecarRel").count()
-    val nPending = pending.map(_.count()).getOrElse(0L)
+    // the sidecar write's own job counts the committed positions; the
+    // pending count is from's dvcount header (counted only without one)
+    val written = org.apache.spark.sql.Observation()
+    val sidecarRel = writeVersionSidecar(spark, path, "_dv", toVersion,
+      merged.observe(written, count(lit(1)).as("n")))
+    val nTotal = written.get("n").asInstanceOf[Long]
+    val nPending = pending.fold(0L)(p =>
+      from.meta.get("dvcount").fold(p.count())(_.toLong))
     val consumed = Set("dv", "dvcount")
     if (nTotal == 0L) {
       // zero-match predicate over a no-pending history (ADVICE r12): an
@@ -4052,7 +4061,7 @@ object VectorOps {
     source.select(col(idCol), col(vecCol),
         coalesce(deleteCond, lit(false)).as("__del"))
       .write.mode("overwrite").parquet(s"$path/$srcRel")
-    val staged = spark.read.parquet(s"$path/$srcRel")
+    val staged = Tables.parquet(spark, s"$path/$srcRel")
     val (nSrc, nSrcIds) = {
       val r = staged.agg(count(lit(1)), countDistinct(col(idCol))).head()
       (r.getLong(0), r.getLong(1))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import graft.Tables
 import graft.ops.Staging
 
 /** Structured Streaming extension (SURVEY §2.10): the reference has no
@@ -282,7 +283,7 @@ object EventStream {
             col("event_type").as("last_type"),
             round(col("value") * 100).cast("long").as("last_value_cents"))
           val merged = (if (cur < 0) upd
-            else spark.read.parquet(dirs(cur)).unionByName(upd))
+            else Tables.parquet(spark, dirs(cur)).unionByName(upd))
             .groupBy(col("user_id"))
             .agg(max(struct(col("t"), col("last_event_id"),
               col("last_type"), col("last_value_cents"))).as("m"))
@@ -298,7 +299,7 @@ object EventStream {
       awaitDrain(q)
       require(cur >= 0, "stream upsert: no micro-batch ran")
       // materialize off the temp files, then drop them
-      spark.read.parquet(dirs(cur))
+      Tables.parquet(spark, dirs(cur))
         .select(col("user_id"), col("last_event_id"), col("last_type"),
           col("last_value_cents"))
         .transform(Staging.materialize)

@@ -125,6 +125,25 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("a file set evicted past the memo's capacity is inferred again") {
+    withTempDir { dir =>
+      spark.range(0, 11, 1, 11).toDF("v").write.parquet(s"$dir/t")
+      val files = new java.io.File(s"$dir/t").listFiles().map(_.getPath)
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(files.length == 11)
+      // every non-empty subset of the eleven files is its own file set
+      def subset(mask: Int): Seq[String] = files.indices.filter(i => (mask >> i & 1) == 1).map(files)
+      val first = subset(1)
+      Tables.parquet(spark, first)
+      assert(jobsStarted(Tables.parquet(spark, first)) == 0)
+      (2 to Tables.MemoCapacity + 1).foreach(m => Tables.parquet(spark, subset(m)))
+      var again: DataFrame = null
+      assert(jobsStarted { again = Tables.parquet(spark, first) } > 0)
+      assert(again.schema == spark.read.parquet(first: _*).schema)
+      assert(rows(again) == Seq("[0]"))
+    }
+  }
+
   test("a missing path and a glob fail exactly as spark.read.parquet does") {
     withTempDir { dir =>
       def failure(read: String => DataFrame, path: String): (Class[_], String) = {

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
@@ -57,6 +58,13 @@ class BroadcastPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def f2Joins(q: DataFrame): Seq[BaseJoinExec] =
     staticJoins(q.queryExecution.executedPlan).filter(j =>
       j.joinType == LeftSemi && j.right.output.map(_.name) == Seq("pk"))
+
+  /** A broadcast hash join that builds its right side, the id set alone. */
+  private def buildsIdSide(j: BaseJoinExec): Boolean = j match {
+    case b: BroadcastHashJoinExec =>
+      b.buildSide == BuildRight && b.right.output.map(_.name) == Seq("vec_id")
+    case _ => false
+  }
 
   /** The executed plans of the queries `body` runs. */
   private def plansRun(body: => Unit): Seq[SparkPlan] = {
@@ -174,11 +182,13 @@ class BroadcastPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       VectorOps.writeManifest(spark, path, 0, VectorOps.listIndexFiles(spark, path))
       VectorOps.commitDeletes(spark, path, 0, 1,
         embs.filter(col("vec_id") % 13 === 2).select(col("vec_id")))
-      // the merge-on-read tombstone subtraction (withoutTombstones)
+      // the merge-on-read tombstone subtraction (withoutTombstones), read
+      // a second time so that both sides scan with remembered schemas
+      VectorOps.readIndexVersionMor(spark, path, 1, "vec_id")
       val mor = staticJoins(VectorOps.readIndexVersionMor(spark, path, 1, "vec_id")
         .queryExecution.executedPlan).filter(_.joinType == LeftAnti)
       assert(mor.nonEmpty)
-      assert(mor.forall(_.isInstanceOf[BroadcastHashJoinExec]), mor.mkString("\n"))
+      assert(mor.forall(buildsIdSide), mor.mkString("\n"))
       // every join ivfUpsert runs, its id-set semi-join among them
       val upserted = embs.filter(col("vec_id") % 7 === 3).select(col("vec_id"),
         transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
@@ -188,6 +198,8 @@ class BroadcastPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }.flatMap(staticJoins)
       assert(joins.exists(_.joinType == LeftSemi), joins.mkString("\n"))
       assert(joins.forall(_.isInstanceOf[BroadcastHashJoinExec]), joins.mkString("\n"))
+      val idSet = joins.filter(_.joinType == LeftSemi)
+      assert(idSet.forall(buildsIdSide), idSet.mkString("\n"))
     } finally graft.ops.Staging.deleteRecursively(dir)
   }
 }

@@ -76,6 +76,29 @@ class DeletionVectorSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("a delete on top of a pending DV with no dvcount header counts " +
+      "the pending set, same numbers as with the header") {
+    val (dir, path) = freshIndex("nocount")
+    try {
+      val p1 = col("vec_id") % 3 === 0
+      val p2 = col("vec_id") % 2 === 0
+      VectorOps.commitDeletionVector(spark, path, 1, 2, p1)
+      // v3: v2's files and DV pointer, as a writer that records no count
+      val dvRel = VectorOps.readManifestMeta(spark, path, 2)("dv")
+      VectorOps.writeManifest(spark, path, 3,
+        VectorOps.readManifest(spark, path, 2),
+        Map("op" -> "dv-delete", "dv" -> dvRel))
+      val (nNew, nTot) = VectorOps.commitDeletionVector(spark, path, 3, 4, p2)
+      val nP1 = embs.filter(p1).count()
+      val nUnion = embs.filter(p1 || p2).count()
+      assert(nTot == nUnion && nNew == nUnion - nP1)
+      // the header path gives the same pair
+      assert(VectorOps.commitDeletionVector(spark, path, 2, 5, p2) == (nNew, nTot))
+      assert(VectorOps.readIndexVersionDv(spark, path, 4).count() ==
+        embs.count() - nUnion)
+    } finally rmrf(dir)
+  }
+
   test("orphaned _dv sidecars are invisible until the manifest commit " +
       "point; the retry overwrite reclaims them") {
     val (dir, path) = freshIndex("orphan")

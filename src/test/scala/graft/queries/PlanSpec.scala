@@ -933,19 +933,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("partial_sum") || p.contains("Partial"), p.take(2000))
   }
 
-  test("shipping priority: size-gated customer dim broadcasts over its " +
-      "recomputable pushed-down scan, fact filter reaches the scan, " +
-      "top-k has no sort") {
+  test("shipping priority: the unhinted customer dim broadcasts by size " +
+      "over its recomputable pushed-down scan, fact filter reaches the " +
+      "scan, top-k has no sort") {
     val p = miPlan("q_shipping_priority")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
     assert(p.contains("TakeOrderedAndProject"), "top-10 must not total-sort")
     assert(p.contains("GreaterThan(l_shipdate"), "date filter must reach the fact scan")
-    // the customer side is the GATE's single-consumer regime (r14): the
-    // frame stays on its recomputable lineage — the gate's count job and
-    // this broadcast build each run the pushed-down, column-pruned dim
-    // scan, and NO checkpoint parks the dim in executor storage (an
-    // executor loss must recompute, not fail). The segment filter
-    // reaching the parquet scan is what makes the re-scan dim-cheap.
+    // the customer join carries no hint: Spark's size-based join
+    // selection broadcasts the filtered dim. The frame stays on its
+    // recomputable lineage — the broadcast build runs the pushed-down,
+    // column-pruned dim scan, and NO checkpoint parks the dim in
+    // executor storage (an executor loss must recompute, not fail). The
+    // segment filter reaching the parquet scan is what keeps that scan
+    // dim-cheap.
     assert(p.contains("EqualTo(c_mktsegment,BUILDING)"),
       "segment filter must reach the customer scan")
     assert(!p.contains("CheckpointRDD"),
