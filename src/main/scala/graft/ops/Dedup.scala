@@ -142,30 +142,26 @@ object Dedup {
       .union(pairs.select(col(bCol).as("a"), col(aCol).as("b")))
       .distinct()
       .transform(Staging.materialize)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .transform(Staging.materialize)
     // labels only ever decrease, so Σ labels strictly decreases until the
-    // fixpoint — an O(1)-output scalar agg per round instead of a
-    // join-based diff (decimal sum: exact at any id magnitude/parallelism).
-    // coalesce: sum over an EMPTY frame is null — an empty pair set must
-    // converge on round 1 (0 == 0), not NPE in compareTo.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("cluster").cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0)))).head()
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
+    // fixpoint — an O(1)-output scalar observed in each round's
+    // materializing job instead of a join-based diff (decimal sum: exact
+    // at any id magnitude/parallelism). An empty pair set observes null
+    // twice and converges on round 1.
+    val labelSum = sum(col("cluster").cast(DecimalType(38, 0)))
+    var (labels, prevSum) = Staging.materializeObserving(
+      edges.select(col("a").as("id")).distinct().withColumn("cluster", col("id")),
+      labelSum)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       // push each node's label to its neighbors, keep the min seen
-      val prop = labels.join(edges, col("id") === col("a"))
-        .select(col("b").as("id"), col("cluster"))
-        .union(labels)
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-        .transform(Staging.materialize)
-      val s = labelSum(prop)
-      converged = s.compareTo(prevSum) == 0
+      val (prop, s) = Staging.materializeObserving(
+        labels.join(edges, col("id") === col("a"))
+          .select(col("b").as("id"), col("cluster"))
+          .union(labels)
+          .groupBy(col("id")).agg(min(col("cluster")).as("cluster")),
+        labelSum)
+      converged = s == prevSum
       prevSum = s
       labels = prop
       iter += 1
@@ -258,41 +254,35 @@ object Dedup {
         .filter(col("a") =!= col("b"))
         .distinct()
     }
-    // O(1) set checksum: (|E|, Σ xxhash64(a,b) as exact decimal) — labels
-    // don't monotonically shrink here (edges are rewritten, not relaxed),
-    // so the propagation variant's Σ-label test doesn't apply.
-    def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("a"), col("b")).cast(DecimalType(38, 0))),
-                 lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 0)))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
+    // O(1) set checksum: (|E|, Σ xxhash64(a,b) as exact decimal),
+    // observed in each round's materializing job — labels don't
+    // monotonically shrink here (edges are rewritten, not relaxed), so
+    // the propagation variant's Σ-label test doesn't apply.
+    val checksum = Seq(count(lit(1)),
+      sum(xxhash64(col("a"), col("b")).cast(DecimalType(38, 0))))
 
     val nodes = pairs.select(col(aCol).as("id"))
       .union(pairs.select(col(bCol).as("id")))
       .distinct()
       .transform(Staging.materialize)
-    var edges = pairs
+    var (edges, prev) = Staging.materializeObserving(pairs
       .select(col(aCol).as("a"), col(bCol).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .transform(Staging.materialize)
-    var prevEdges = edges
-    var prev = checksum(edges)
+      .distinct(), checksum: _*)
     var iter = 0
-    var converged = edges.isEmpty // all input pairs were self-loops
+    var converged = prev.getLong(0) == 0L // all input pairs were self-loops
     while (!converged && iter < maxIter) {
-      edges = smallStar(largeStar(edges)).transform(Staging.materialize)
-      val s = checksum(edges)
+      val (next, s) =
+        Staging.materializeObserving(smallStar(largeStar(edges)), checksum: _*)
       // checksum equality is necessary but not sufficient (a ~2^-64
       // 64-bit sum collision between distinct consecutive edge sets
       // would stop early with wrong labels) — confirm the fixpoint with
       // ONE exact set-difference check, paid only on the round the
       // checksum first repeats: counts match and both sides are distinct
       // sets, so one-sided emptiness ⇒ equality.
-      converged = s == prev && edges.exceptAll(prevEdges).isEmpty
+      converged = s == prev && next.exceptAll(edges).isEmpty
       prev = s
-      prevEdges = edges
+      edges = next
       iter += 1
     }
     // fixpoint is a star forest: (v, root) with root = component min.

@@ -850,7 +850,8 @@ object TextOps {
     * remaining members (one keyed min + one keyed join + the exact
     * verify); each round retires at least its elected exemplar per live
     * group, and empty residuals short-circuit, so clean data pays one
-    * round + one emptiness probe. Members still unresolved after
+    * round + one emptiness probe (later rounds count their failures in
+    * the verify frame's materializing job). Members still unresolved after
     * `maxRounds` end unpaired (documented approximation). The `verify`
     * callback is injected so specs can drive election/re-routing with a
     * deterministic fake verifier — real MinHash collisions between
@@ -876,8 +877,10 @@ object TextOps {
         .filter(col("id") =!= col("id_a"))
         .select(col("id_a"), col("id").as("id_b"),
           col("band"), col("bucket"), col("sig"))
-      // materialized once: the pass/fail split below reads it twice
-      val v = Staging.materialize(verify(star))
+      // materialized once: the pass/fail split below reads it twice, and
+      // the materializing job counts the failures the next round retries
+      val (v, failed) = Staging.materializeObserving(verify(star),
+        count_if(col("jaccard") < threshold))
       out = out.unionByName(
         v.filter(col("jaccard") >= threshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -886,7 +889,7 @@ object TextOps {
         .select(col("band"), col("bucket"), col("sig"),
           col("id_b").as("id"))
       round += 1
-      drained = residual.isEmpty
+      drained = failed.getLong(0) == 0L
     }
     out
   }

@@ -1412,20 +1412,24 @@ object VectorOps {
   }
 
   /** `df` — a direct scan of data files — minus the `(file, pos)`
-    * positions `dv` names. The anti-join key is scan metadata
+    * positions `dv` names. The key is scan metadata
     * (`_metadata.file_path` / `row_index`), never a data column, so rows
-    * with duplicate or absent keys delete correctly; `dv` is
-    * delete-sized, so Spark's join selection broadcasts it, and past its
-    * threshold the same join shuffles.
+    * with duplicate or absent keys delete correctly. A correlated
+    * NOT EXISTS filter, which the optimizer rewrites to the same left
+    * anti-join: unlike a join on added key columns, it leaves the
+    * result's `_metadata` resolvable for a caller. The outer references
+    * are qualified by an alias: unqualified, `_metadata` resolves against
+    * the sidecar's own scan and nothing is subtracted. `dv` is delete-sized,
+    * so Spark's join selection broadcasts it, and past its threshold the
+    * same join shuffles.
     */
-  private def subtractDv(df: DataFrame, dv: DataFrame): DataFrame = df
-    .withColumn("__dv_file",
-      substring_index(col("_metadata.file_path"), "/", -2))
-    .withColumn("__dv_pos", col("_metadata.row_index").cast("long"))
-    .join(dv.select(col("file").as("__dv_file"),
-        col("pos").cast("long").as("__dv_pos")),
-      Seq("__dv_file", "__dv_pos"), "left_anti")
-    .drop("__dv_file", "__dv_pos")
+  private def subtractDv(df: DataFrame, dv: DataFrame): DataFrame =
+    df.as("__dv_scan").filter(!dv.filter(
+      col("file") === substring_index(
+        col("__dv_scan._metadata.file_path").outer(), "/", -2) &&
+        col("pos").cast("long") ===
+          col("__dv_scan._metadata.row_index").outer().cast("long"))
+      .exists())
 
   /** `df` (a scan of `snap`) minus `snap`'s deletion-vector positions. */
   private def withoutDv(spark: org.apache.spark.sql.SparkSession,
@@ -2914,7 +2918,9 @@ object VectorOps {
 
   /** The one pruned read: the files of `version` that `keep` admits,
     * scanned through [[scan]] (an empty kept set reads as an empty frame
-    * with the version's schema). Returns (rows, keptFiles, filesTotal).
+    * with the version's schema), minus the version's deletion-vector
+    * positions (none to subtract from an empty kept set, whose frame has
+    * no resolvable `_metadata`). Returns (rows, keptFiles, filesTotal).
     */
   private def prunedScan(spark: org.apache.spark.sql.SparkSession,
                          path: String, version: Int)
@@ -2922,7 +2928,8 @@ object VectorOps {
       : (DataFrame, Seq[String], Int) = {
     val snap = snapshot(spark, path, version)
     val kept = snap.files.filter(keep)
-    (scan(spark, snap, kept), kept, snap.files.length)
+    val rows = scan(spark, snap, kept)
+    (if (kept.isEmpty) rows else withoutDv(spark, snap, rows), kept, snap.files.length)
   }
 
   /** Read a pinned version with FILE SKIPPING for the range predicate

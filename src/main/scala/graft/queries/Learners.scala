@@ -292,21 +292,21 @@ object Learners {
     val bp = baskets.select(col("cust"), explode(
         graft.expr.PackedPairs.packedPairs(col("ps"))).as("pk"))
     // F2 is DATA-SIZED (307k keys at sf0.1, growing with the basket
-    // fan-out), materialized once for its two semi-join consumers and
-    // sized by its rows: a plain materialized frame carries its origin
-    // plan's estimate, here the orders ⋈ lineitem product far past
-    // 10 MB, and the static plan would sort-merge, shuffling the 11M-row
-    // pair fan-out before AQE turned the join into a broadcast (one
-    // filtered Bench run each at sf0.1 on a 4-core VM: 8.7 → 10.6 s,
-    // task CPU 71 → 87 s). At 16 bytes a row, Spark broadcasts F2 up to
-    // ~650k rows and shuffles past that.
+    // fan-out), materialized once for its two semi-join consumers. The
+    // materializer sizes it by its rows: estimated by its origin plan,
+    // the orders ⋈ lineitem product far past 10 MB, the static plan
+    // would sort-merge, shuffling the 11M-row pair fan-out before AQE
+    // turned the join into a broadcast (one filtered Bench run each at
+    // sf0.1 on a 4-core VM: 8.7 → 10.6 s, task CPU 71 → 87 s). At 16
+    // bytes a row, Spark broadcasts F2 up to ~650k rows and shuffles
+    // past that.
     // (A one-shuffle variant that carries collect_list(cust) through the
     // pair count to avoid the second bp shuffle re-measured SLOWER —
     // probe med 6.44 vs 5.68, first rep 21 s: 7M per-group list buffers
     // cost more than the semi-join it saves. §1.1 empirical loop.)
     val f2 = bp.groupBy(col("pk")).agg(count(lit(1)).as("co"))
       .filter(col("co") >= 2).select(col("pk"))
-      .transform(graft.ops.Staging.materializeSized)
+      .transform(graft.ops.Staging.materialize)
     // NOT materialized despite feeding both sides of the self-join:
     // both sides plan identical exchanges, so the fan-out + semi-join
     // subtree is computed once and reused (ReusedExchange — §2.4);
@@ -315,8 +315,11 @@ object Learners {
     val bf2 = bp.join(f2, Seq("pk"), "left_semi")
       .select(col("cust"), expr("pk div 4294967296").as("p1"),
         pmod(col("pk"), lit(4294967296L)).as("p2"))
+    // sort-merge by hint: Spark estimates the generated pair fan-out at
+    // the size of the baskets it came from, far under its millions of
+    // rows, and would broadcast one side of this self-join
     bf2.as("a")
-      .join(bf2.as("b"), col("a.cust") === col("b.cust") &&
+      .join(bf2.as("b").hint("merge"), col("a.cust") === col("b.cust") &&
         col("a.p1") === col("b.p1") && col("a.p2") < col("b.p2"))
       .select(col("a.cust").as("cust"), col("a.p1").as("p1"),
         col("a.p2").as("p2"), col("b.p2").as("p3"))

@@ -40,13 +40,13 @@ object Nonparam {
       col("l_quantity").cast("long").as("x"),
       floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("y"))
     def midranks(df: DataFrame, c: String): DataFrame = {
-      // materialized: the distinct-value count frame feeds THREE
-      // separate jobs (min/max collect, bucket offsets collect, the
-      // final midrank pass) — unmaterialized, each re-scanned lineitem
-      // and re-paid the groupBy (same shape/fix as q_weighted_median)
-      val counts = graft.ops.Staging.materialize(
-        df.groupBy(col(c)).agg(count(lit(1)).as("cnt")))
-      val Array(stats) = counts.agg(min(col(c)), max(col(c))).collect()
+      // materialized: the distinct-value count frame feeds two separate
+      // jobs (bucket offsets collect, the final midrank pass), and its
+      // materializing job observes the min/max — unmaterialized, each
+      // re-scanned lineitem and re-paid the groupBy (same shape/fix as
+      // q_weighted_median)
+      val (counts, stats) = graft.ops.Staging.materializeObserving(
+        df.groupBy(col(c)).agg(count(lit(1)).as("cnt")), min(col(c)), max(col(c)))
       val (mn, mx) = (stats.getLong(0).toDouble, stats.getLong(1).toDouble)
       val bucket: Column =
         if (mn == mx) lit(1L)

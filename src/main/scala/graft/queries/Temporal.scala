@@ -786,16 +786,15 @@ object Temporal {
     * global cumulative window instead.
     */
   private val weightedMedianQ: Q = (s, dir) => {
-    // materialized once: the (price, weight) rollup feeds THREE
-    // consumers (min/max/total stats, per-bucket offsets, the final
-    // windowed pass) — unmaterialized, each re-scanned lineitem and
-    // re-paid the groupBy
-    val pw = graft.ops.Staging.materialize(Tables.lineitem(s, dir)
+    // materialized once: the (price, weight) rollup feeds two
+    // consumers (per-bucket offsets, the final windowed pass), and its
+    // materializing job observes the min/max/total stats — unmaterialized,
+    // each re-scanned lineitem and re-paid the groupBy
+    val (pw, stats) = graft.ops.Staging.materializeObserving(Tables.lineitem(s, dir)
       .select(floor(col("l_extendedprice") * 100 + 0.5).cast("long")
         .as("p"), col("l_quantity").cast("long").as("q"))
-      .groupBy(col("p")).agg(sum(col("q")).as("wt")))
-    val Array(stats) = pw.agg(min(col("p")).as("mn"), max(col("p")).as("mx"),
-      sum(col("wt")).as("w")).collect()
+      .groupBy(col("p")).agg(sum(col("q")).as("wt")),
+      min(col("p")), max(col("p")), sum(col("wt")))
     val (mn, mx, wTot) =
       (stats.getLong(0).toDouble, stats.getLong(1).toDouble, stats.getLong(2))
     val thr = (wTot + 1) / 2

@@ -27,16 +27,20 @@ object GraftShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** A materialized frame (`checkpoint`/`localCheckpoint`) whose size
-    * estimate is `rows` rows of its output's width, in place of its
-    * origin plan's estimate (`LogicalRDD` and its statistics are
-    * internal, hence the shim). */
-  def sizedByRows(df: DataFrame, rows: Long): DataFrame = {
+  /** A materialized frame (`checkpoint`/`localCheckpoint`) of `rows`
+    * rows, estimated at that many rows of its output's width, at most
+    * its origin plan's estimate, plus `elementBytes` (`LogicalRDD` and
+    * its statistics are internal, hence the shim). The cap keeps a frame
+    * derived from a parquet scan on the scale of the estimates it is
+    * compared with, which count compressed file bytes: in-memory bytes
+    * would make it look larger than the same rows on a join's other side.
+    */
+  def sizedByRows(df: DataFrame, rows: Long, elementBytes: Long): DataFrame = {
     val session = df.sparkSession.asInstanceOf[SparkSession]
     df.queryExecution.analyzed match {
       case r: LogicalRDD =>
-        val stats = Statistics(EstimationUtils.getSizePerRow(r.output) * rows,
-          rowCount = Some(BigInt(rows)))
+        val bytes = (EstimationUtils.getSizePerRow(r.output) * rows).min(r.stats.sizeInBytes)
+        val stats = Statistics(bytes + elementBytes, Some(BigInt(rows)))
         ofRows(session, r.copy()(session, Some(stats), Some(r.constraints)))
       case p =>
         throw new IllegalArgumentException(s"not a materialized frame: ${p.nodeName}")

@@ -20,9 +20,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * join to a broadcast at runtime once the materialized side is under
   * `spark.sql.adaptive.autoBroadcastJoinThreshold`, and past both the
   * same join shuffles instead of failing the build. Deciding costs no
-  * job, and the answer never depends on the choice. (Apriori's F2 is
-  * materialized with `Staging.materializeSized`, so Spark sizes it by its
-  * rows and not by its origin plan's join-product estimate.)
+  * job, and the answer never depends on the choice. A frame from
+  * `Staging.materialize` (Apriori's F2 among them) is sized by what it
+  * holds, not by its origin plan's join-product estimate.
   */
 class BroadcastPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -165,6 +165,32 @@ class BroadcastPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the check sees a checkpoint where there is one: Apriori's F2 has two
     // consumers and is materialized once on purpose
     assert(checkpointed("q_apriori_triples").nonEmpty)
+  }
+
+  /** A 20M-row fact joined to a materialized 400-row frame whose origin
+    * is a self-join of 2,000 keys, estimated by Spark as their product. */
+  private def onMaterialized: DataFrame = {
+    val keys = spark.range(2000).select(col("id").as("k"))
+    val few = Staging.materialize(keys
+      .join(keys.select(col("k").as("k2")), col("k") === col("k2"))
+      .filter(col("k") % 5 === 0).select(col("k")))
+    spark.range(20000000L).select((col("id") % 2000).as("k"), col("id"))
+      .join(few, "k")
+  }
+
+  test("a join on a materialized frame whose origin joins: BroadcastHashJoin " +
+      "building the frame under default thresholds, SortMergeJoin past both") {
+    val joins = staticJoins(onMaterialized.queryExecution.executedPlan)
+    assert(joins.length == 1, joins.mkString("\n"))
+    assert(joins.forall {
+      case b: BroadcastHashJoinExec => b.buildSide == BuildRight
+      case _ => false
+    }, joins.mkString("\n"))
+    withConfs(Static -> "-1", Adaptive -> "-1") {
+      val off = staticJoins(onMaterialized.queryExecution.executedPlan)
+      assert(off.length == 1 && off.forall(_.isInstanceOf[SortMergeJoinExec]),
+        off.mkString("\n"))
+    }
   }
 
   test("default thresholds: the versioned index's id-set joins plan " +

@@ -50,6 +50,38 @@ class DeletionVectorSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("pruned readers apply the deletion vector: point and range reads " +
+      "return no deleted id, and their frames still resolve _metadata") {
+    val (dir, path) = freshIndex("pruned")
+    try {
+      val ids = embs.select(col("vec_id")).collect().map(_.getLong(0)).sorted
+      val doomed = ids.filter(_ % 5 == 0)
+      VectorOps.commitDeletionVector(spark, path, 1, 2,
+        col("vec_id").isin(doomed: _*))
+      VectorOps.writeColStats(spark, path, 2, "vec_id")
+      VectorOps.writeBloomFilter(spark, path, 2, "vec_id")
+      def served(df: org.apache.spark.sql.DataFrame): Set[Long] =
+        df.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+      val (range, _, _) =
+        VectorOps.readIndexVersionPruned(spark, path, 2, "vec_id", ids.head, ids.last)
+      assert(served(range) == ids.toSet -- doomed)
+      val (point, _, _) =
+        VectorOps.readIndexVersionPoint(spark, path, 2, "vec_id", doomed.head)
+      assert(served(point).isEmpty)
+      val live = ids.find(_ % 5 != 0).get
+      assert(served(VectorOps.readIndexVersionPoint(spark, path, 2, "vec_id",
+        live)._1) == Set(live))
+      // an id no file can hold: every file pruned, an empty frame
+      val (absent, kept, _) =
+        VectorOps.readIndexVersionPoint(spark, path, 2, "vec_id", ids.last + 1000)
+      assert(served(absent).isEmpty && kept.isEmpty)
+      // a caller can still key the rows by file and row index
+      for (df <- Seq(range, point))
+        df.withColumn("f", col("_metadata.file_path"))
+          .withColumn("p", col("_metadata.row_index")).collect()
+    } finally rmrf(dir)
+  }
+
   test("a second wave folds into ONE cumulative sidecar with exact " +
       "new/total accounting, overlap deduplicated") {
     val (dir, path) = freshIndex("merge")
