@@ -37,6 +37,16 @@ object Bench {
       case None => default
     }
 
+  /** `SPARK_GRAFT_BENCH_SKIP_PRIME` parsed: unset or `0` primes, `1`
+    * skips; any other value is refused by name. */
+  private[graft] def skipPrimeFlag(value: Option[String]): Boolean =
+    value match {
+      case None | Some("0") => false
+      case Some("1") => true
+      case Some(v) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_SKIP_PRIME='$v' must be 0 or 1")
+    }
+
   /** Per-rep hard timeout. Generous: the slowest r4 query (q_pagerank)
     * ran 3.1 s at sf0.1; 60 s is 20× headroom, while still bounding a
     * 127-query run's worst case far under the driver's global limit.
@@ -135,7 +145,8 @@ object Bench {
                             = Map.empty,
                           scaling: Option[String] = None,
                           cpuMsByQuery: collection.Map[String, Long]
-                            = Map.empty)
+                            = Map.empty,
+                          prime: Option[Seq[(String, Double)]] = None)
       : String = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -174,14 +185,14 @@ object Bench {
     }.getOrElse("")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val jvmJson = jvm.map(j => s""","jvm":$j""").getOrElse("")
+    def ms3(sec: Double) = math.round(sec * 1000) / 1000.0
     // raw per-rep seconds per query (headline = lower median of these):
     // first-rep staging artifacts stay visible in the artifact without
     // distorting the total (r11 verdict item 6)
     val repsJson =
       if (repsMap.isEmpty) ""
       else repsMap.map { case (k, rs) =>
-        s"\"" + k + "\":" + rs.map(r => math.round(r * 1000) / 1000.0)
-          .mkString("[", ",", "]")
+        s"\"" + k + "\":" + rs.map(ms3).mkString("[", ",", "]")
       }.mkString(""","reps":{""", ",", "}")
     // per-query GC attribution, GC-heavy queries only (>500 ms across
     // the query's reps): the in-artifact evidence separating "this query
@@ -200,7 +211,12 @@ object Bench {
         .mkString(""","cpu_ms_by_query":{""", ",", "}")
     // cross-SF scaling block (r12 item 6), prebuilt by main
     val scalingJson = scaling.map(s => s""","scaling":$s""").getOrElse("")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"absorbed":$absJson$retriedJson$sentJson$calJson$jvmJson$repsJson$gcJson$cpuJson$scalingJson,"sf":"$sfDir"}"""
+    // untimed fixture priming: its total and each fixture's wall seconds
+    val primeJson = prime.map { p =>
+      s""","prime_s":${ms3(p.map(_._2).sum)}""" + p.map { case (l, sec) =>
+        s"\"" + l + "\":" + ms3(sec) }.mkString(""","prime_s_by_fixture":{""", ",", "}")
+    }.getOrElse("")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"absorbed":$absJson$retriedJson$sentJson$calJson$jvmJson$repsJson$gcJson$cpuJson$scalingJson$primeJson,"sf":"$sfDir"}"""
   }
 
   /** Fixed-cost host-speed probe: a deterministic, registry- and
@@ -710,19 +726,23 @@ object Bench {
     // local-dev knob: a FILTERED run of fixture-free queries pays ~9 min
     // of index staging it never touches — skip on request. Full-registry
     // runs (the driver's) ignore the knob: priming is load-bearing there.
-    val skipPrime = args.nonEmpty &&
-      sys.env.get("SPARK_GRAFT_BENCH_SKIP_PRIME").contains("1")
+    val skipPrime =
+      skipPrimeFlag(sys.env.get("SPARK_GRAFT_BENCH_SKIP_PRIME")) && args.nonEmpty
     if (!skipPrime)
     try graft.queries.Curation.primeProbeGuard(spark, sfDir)
     catch { case _: Throwable => () }
-    if (!skipPrime)
     // heavy index fixtures staged NOW, untimed (r9 postmortem: staging
     // the IVF-PQ fixture inside q_ivfpq_append's first timed rep costs
     // ~45 s at sf0.1 — one breath of box load pushes it over the 60 s
     // watchdog and records a healthy query as -1). Per-stager try/catch
-    // lives inside primeIndexFixtures.
-    try graft.queries.Fixtures.primeIndexFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    // lives inside primeIndexFixtures; its wall seconds ride the summary.
+    val prime =
+      if (skipPrime) None
+      else try Some(graft.queries.Fixtures.primeIndexFixtures(spark, sfDir))
+      catch { case _: Throwable => None }
+    prime.foreach(p => System.err.println(f"[bench] fixture prime: " +
+      f"${p.map(_._2).sum}%.1f s total; " +
+      p.map { case (l, sec) => f"$l $sec%.1f" }.mkString(", ")))
     // runtime side of the fixture-classification guard: any HEAVY-labeled
     // staging miss recorded after this point means a stager paid its
     // index build inside a timed rep — the exact r10 q_file_skipping
@@ -887,7 +907,7 @@ object Bench {
       sentFirst.zip(sentLast),
       Some(s"""{"start":$jvmStart,"end":${jvmSnapshot()}}"""),
       retried, calStart.zip(calEnd), repsByQuery, gcByQuery, scaling,
-      cpuByQuery)
+      cpuByQuery, prime)
     println(line)
     // Also persist the full line to the repo root: the driver's BENCH
     // tail window truncates long per-query maps, which makes exact

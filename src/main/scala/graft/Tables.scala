@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's synthetic parquet tables (TESTDATA.md).
@@ -141,4 +142,12 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "events")
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
+
+  /** The vector corpus: [[embeddings]] minus the `vec_id` 0 row. That row
+    * is the query vector of the ANN queries (`Registry.queryVec`), so it
+    * is never indexed, searched or counted as a corpus row. Oracle SQL
+    * states the same slice as `WHERE vec_id <> 0`.
+    */
+  def corpus(spark: SparkSession, sfDir: String): DataFrame =
+    embeddings(spark, sfDir).filter(col("vec_id") =!= 0)
 }

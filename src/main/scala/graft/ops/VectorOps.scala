@@ -2921,6 +2921,13 @@ object VectorOps {
     * with the version's schema), minus the version's deletion-vector
     * positions (none to subtract from an empty kept set, whose frame has
     * no resolvable `_metadata`). Returns (rows, keptFiles, filesTotal).
+    *
+    * Id tombstones ([[commitDeletes]]) are NOT subtracted: a tombstone
+    * sidecar names ids, not the id column, and the readers above this
+    * take only the column they prune on, which need not be the id. So
+    * every pruned reader is the pruned form of [[readIndexVersionDv]];
+    * [[readIndexVersionVisible]] (given the id column) is the visible
+    * read of a version that may carry tombstones.
     */
   private def prunedScan(spark: org.apache.spark.sql.SparkSession,
                          path: String, version: Int)
@@ -2943,6 +2950,8 @@ object VectorOps {
     * scan — correct either way, which is the zone-map contract. Returns
     * (rows, filesRead, filesTotal) so callers can audit the pruning
     * actually happened.
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionPruned(spark: org.apache.spark.sql.SparkSession,
                              path: String, version: Int, colName: String,
@@ -2957,6 +2966,8 @@ object VectorOps {
     * 1-D-clustered layout can only ever skip on its sort column —
     * q_zonemap_rect gates that contrast. The precise conjunctive filter
     * still applies on top. Returns (rows, filesRead, filesTotal).
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionPrunedRect(spark: org.apache.spark.sql.SparkSession,
                                  path: String, version: Int,
@@ -3135,6 +3146,8 @@ object VectorOps {
     * whose range covers the prefix; on an uncorrelated layout it
     * degrades to the full scan — correct either way. Returns
     * (rows, filesRead, filesTotal).
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionPrunedPrefix(spark: org.apache.spark.sql.SparkSession,
                                    path: String, version: Int,
@@ -3373,6 +3386,8 @@ object VectorOps {
     * (rows, filesKept, filesTotal) — the kept LIST, not just its count,
     * so audits can do exact false-positive accounting (kept minus
     * actually-containing).
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionPoint(spark: org.apache.spark.sql.SparkSession,
                             path: String, version: Int, colName: String,
@@ -3396,6 +3411,8 @@ object VectorOps {
     * executor-side probe of [[readIndexVersionSemiDist]]. Returns (rows
     * of kept files, keptList, filesTotal); the caller's join applies the
     * exact predicate on top — blooms prune, they never answer.
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionSemi(spark: org.apache.spark.sql.SparkSession,
                            path: String, version: Int, colName: String,
@@ -3427,6 +3444,8 @@ object VectorOps {
     * sidecar shards (the documented evolution) and this path reads the
     * shards as its RDD input directly. Returns
     * (rows of kept files, keptList, filesTotal).
+    * Subtracts the version's deletion-vector positions but not its id
+    * tombstones; [[readIndexVersionVisible]] is the visible read.
     */
   def readIndexVersionSemiDist(spark: org.apache.spark.sql.SparkSession,
                                path: String, version: Int, colName: String,

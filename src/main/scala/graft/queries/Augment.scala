@@ -244,7 +244,7 @@ object Augment {
     */
   private val promptContextQ: Q = (s, dir) => {
     val topk = graft.ops.VectorOps.cosineTopK(
-      Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+      Tables.corpus(s, dir),
       "vec_id", "embedding", Registry.queryVec(s, dir), 5)
     val w = Window.orderBy(col("score").desc, col("vec_id"))
     val lines = topk

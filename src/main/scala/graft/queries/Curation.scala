@@ -79,6 +79,15 @@ object Curation {
         "equi-join) instead of broadcasting the probes")
   }
 
+  /** The symmetric bag difference of two row sets: the rows of `a` that
+    * `b` does not match and the rows of `b` that `a` does not, duplicates
+    * counted (`exceptAll` both ways). Empty exactly when both hold the
+    * same rows the same number of times — the bit-exact parity check of
+    * every index scenario.
+    */
+  private[queries] def mismatches(a: DataFrame, b: DataFrame): DataFrame =
+    a.exceptAll(b).unionByName(b.exceptAll(a))
+
   // --------------------------------------------------- batch exact kNN join
   /** Exact k-nearest-neighbor JOIN: every probe vector (a deterministic
     * ~1% slice, `vec_id % 97 = 1`) gets its top-3 cosine neighbors from
@@ -613,15 +622,11 @@ object Curation {
   private[queries] def stageIvfAppend(s: org.apache.spark.sql.SparkSession,
                                       dir: String): (String, Array[Array[Double]]) =
     Staging.cached(s"ivfappend:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 5 =!= 2), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2),
-        idx.centroids, path, "vec_id", "embedding")
-      (path, idx.centroids)
+      val (path, centroids) =
+        Fixtures.baseIndex(s, dir, tmp, "index", col("vec_id") % 5 =!= 2)
+      VectorOps.ivfAppend(Tables.corpus(s, dir).filter(col("vec_id") % 5 === 2),
+        centroids, path, "vec_id", "embedding")
+      (path, centroids)
     }
 
   /** Incremental ANN index maintenance — the one 100 TB index artifact
@@ -651,7 +656,7 @@ object Curation {
   private val ivfAppendQ: Q = (s, dir) => {
     val (path, cents) = stageIvfAppend(s, dir)
     val qv = Registry.queryVec(s, dir)
-    val union = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val union = Tables.corpus(s, dir)
     val appended = VectorOps.ivfTopKFromPath(s, path, cents,
       "vec_id", "embedding", qv, k = 10, nProbe = 7)
     val rebuilt = VectorOps.ivfTopK(
@@ -691,10 +696,9 @@ object Curation {
                                         dir: String)
       : (String, Array[Array[Double]], VectorOps.PqModel) =
     Staging.cached(s"ivfpqappend:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val existing = emb.filter(col("vec_id") % 5 =!= 2)
-      val idx = VectorOps.ivfIndexDeterministic(existing, "vec_id",
-        "embedding", nCentroids = 8)
+      val idx = Fixtures.quantizer(s, dir, col("vec_id") % 5 =!= 2)
       val model = VectorOps.pqTrain(existing, "vec_id", "embedding",
         m = 16, dim = 64, k = 16, iters = 3)
       val path = tmp.resolve("ivfpq").toString
@@ -735,7 +739,7 @@ object Curation {
   private val ivfPqAppendQ: Q = (s, dir) => {
     val (path, cents, model) = stageIvfPqAppend(s, dir)
     val qv = Registry.queryVec(s, dir)
-    val union = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val union = Tables.corpus(s, dir)
     val probes = VectorOps.nearestCentroids(cents, qv, nProbe = 7)
     val budget = math.max(100L, union.count() / 10).toInt
     def l2(v: Column): Column =
@@ -795,13 +799,9 @@ object Curation {
       : (String, Array[Array[Double]],
          graft.streaming.IndexStream.DrainResult, Int) =
     Staging.cached(s"streamivf:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 5 =!= 2), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "index",
+        col("vec_id") % 5 =!= 2, v1 = Some(Map.empty))
       val inDir = tmp.resolve("incoming").toString
       emb.filter(col("vec_id") % 5 === 2)
         .select(col("vec_id"), col("embedding"))
@@ -810,13 +810,13 @@ object Curation {
       val nStaged = new java.io.File(inDir).listFiles()
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
       val drain = graft.streaming.IndexStream.runStreamIvfAppend(
-        s, inDir, idx.centroids, path,
+        s, inDir, centroids, path,
         checkpointDir = Some(tmp.resolve("ckpt").toString),
         // deterministic batch-keyed commit clock: batch b lands at
         // ts = 1000·(b+1) — streamed commits timestamp-resolve like
         // any batch commit (q_stream_time_travel)
         tsOfBatch = Some(b => 1000L * (b + 1)))
-      (path, idx.centroids, drain, nStaged)
+      (path, centroids, drain, nStaged)
     }
 
   /** Timestamp travel over a STREAMED index — the r11 gap: the
@@ -853,7 +853,7 @@ object Curation {
     val counts = Seq(1500L, 2000L, 1000L * nStaged + 500L)
       .map(ts => VectorOps.readIndexAsOf(s, path, ts, "vec_id").count())
     val monotone = counts.zip(counts.tail).forall { case (a, b) => a <= b }
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     emb.agg(
         count(lit(1)).as("n_full"),
         count(when(col("vec_id") % 5 =!= 2, 1)).as("n_base"))
@@ -900,7 +900,7 @@ object Curation {
   private val streamIvfQ: Q = (s, dir) => {
     val (path, cents, drain, nStaged) = stageStreamIvf(s, dir)
     val qv = Registry.queryVec(s, dir)
-    val union = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val union = Tables.corpus(s, dir)
     val probes = VectorOps.nearestCentroids(cents, qv, nProbe = 7)
     val streamed = VectorOps.readIndexVersion(s, path, drain.finalVersion)
       .filter(col("centroid").isin(probes: _*))
@@ -971,7 +971,7 @@ object Curation {
   private val knnIvfBatchQ: Q = (s, dir) => {
     import graft.expr.TopKByScore
     val (path, cents) = Registry.stageIvf(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val probes = emb.filter(col("vec_id") % 97 === 1)
       .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))
     val probeCells = probes.withColumn("centroid",
@@ -1059,7 +1059,7 @@ object Curation {
     val cols = Seq(col("vid"), col("codes"), col("centroid"))
     val old = Tables.parquet(s, path).select(cols: _*)
     val neu = Tables.parquet(s, out).select(cols: _*)
-    val mism = old.exceptAll(neu).union(neu.exceptAll(old))
+    val mism = mismatches(old, neu)
       .agg(count(lit(1)).as("n_mism"))
     val nRows = neu.agg(count(lit(1)).as("n_rows"))
     mism.crossJoin(nRows) // 1-row frames
@@ -1087,12 +1087,7 @@ object Curation {
       : (String, Array[Array[Double]]) =
     Staging.cached(s"ivfrebalance:$dir") { tmp =>
       stageIvfAppend(s, dir) // the pre-rebalance layout must exist first
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("rebalanced").toString
-      VectorOps.ivfWrite(idx, path)
-      (path, idx.centroids)
+      Fixtures.baseIndex(s, dir, tmp, "rebalanced", lit(true))
     }
 
   /** Index rebalance — the decision the append docs defer ("re-training
@@ -1119,7 +1114,7 @@ object Curation {
     val (oldPath, _) = stageIvfAppend(s, dir)
     val (newPath, newCents) = stageIvfRebalance(s, dir)
     val qv = Registry.queryVec(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val reassigned = Tables.parquet(s, newPath)
       .filter(col("centroid") =!=
         VectorOps.ivfAssign(col("embedding"), newCents))
@@ -1159,19 +1154,15 @@ object Curation {
                                          dir: String)
       : (String, Array[Array[Double]]) =
     Staging.cached(s"ivfversioned:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 5 =!= 2)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("versioned").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "versioned",
+        col("vec_id") % 5 =!= 2, v1 = Some(Map.empty))
       VectorOps.writeStats(s, path, 1)
-      VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2), idx.centroids,
+      VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2), centroids,
         path, "vec_id", "embedding")
       VectorOps.writeManifest(s, path, 2, VectorOps.listIndexFiles(s, path))
       VectorOps.writeStats(s, path, 2)
-      (path, idx.centroids)
+      (path, centroids)
     }
 
   /** Manifest-pinned index versions — the commit protocol the whole
@@ -1197,7 +1188,7 @@ object Curation {
     */
   private val indexVersionsQ: Q = (s, dir) => {
     val (path, _) = stageIvfVersioned(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val base = emb.filter(col("vec_id") % 5 =!= 2)
     val batchIds = emb.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
     val v1 = VectorOps.readIndexVersion(s, path, 1)
@@ -1214,8 +1205,7 @@ object Curation {
     val n2 = v2.agg(count(lit(1)).as("n_v2"))
     val nBase = base.agg(count(lit(1)).as("n_base"))
     val nAll = emb.agg(count(lit(1)).as("n_all"))
-    val parity = top5(v1).exceptAll(top5(base))
-      .union(top5(base).exceptAll(top5(v1)))
+    val parity = mismatches(top5(v1), top5(base))
       .agg(count(lit(1)).as("n_mism"))
     n1.crossJoin(n2).crossJoin(nBase).crossJoin(nAll).crossJoin(leak)
       .crossJoin(parity) // 1-row frames
@@ -1255,7 +1245,7 @@ object Curation {
     */
   private val indexLatestQ: Q = (s, dir) => {
     val (path, _) = stageIvfVersioned(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val versions = VectorOps.listVersions(s, path)
     val latestResolves = versions == Seq(1, 2) &&
       VectorOps.latestVersion(s, path).contains(2)
@@ -1293,22 +1283,18 @@ object Curation {
                                       dir: String)
       : (String, Array[Array[Double]], VectorOps.OccCommit) =
     Staging.cached(s"occcommit:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 5 =!= 2 && col("vec_id") % 5 =!= 4)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("occ").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "occ",
+        col("vec_id") % 5 =!= 2 && col("vec_id") % 5 =!= 4, v1 = Some(Map.empty))
       val (vA, _, _) = VectorOps.ivfAppendBatch(s,
-        emb.filter(col("vec_id") % 5 === 2), idx.centroids, path,
+        emb.filter(col("vec_id") % 5 === 2), centroids, path,
         "vec_id", "embedding", batchId = 1L)
       require(vA == 2, s"appender A must land v2, got $vA")
       // B stages its files, then commits believing HEAD is still 1
       val (vB, _, attemptsB) = VectorOps.ivfAppendBatch(s,
-        emb.filter(col("vec_id") % 5 === 4), idx.centroids, path,
+        emb.filter(col("vec_id") % 5 === 4), centroids, path,
         "vec_id", "embedding", batchId = 2L, assumeHead = Some(1))
-      (path, idx.centroids, VectorOps.OccCommit(vB, attemptsB))
+      (path, centroids, VectorOps.OccCommit(vB, attemptsB))
     }
 
   /** Optimistic-concurrency commit — the protocol two independent
@@ -1339,12 +1325,12 @@ object Curation {
     */
   private val concurrentCommitQ: Q = (s, dir) => {
     val (path, cents, occB) = stageOccCommit(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val head = VectorOps.readIndexVersion(s, path, 3)
       .select(col("vec_id"), col("centroid"))
     val truth = emb.select(col("vec_id"),
       VectorOps.ivfAssign(col("embedding"), cents).as("centroid"))
-    val mism = head.exceptAll(truth).union(truth.exceptAll(head))
+    val mism = mismatches(head, truth)
       .agg(count(lit(1)).as("n_mism"))
     val v2 = VectorOps.readIndexVersion(s, path, 2)
     val v2Leak = v2.filter(col("vec_id") % 5 === 4)
@@ -1382,20 +1368,16 @@ object Curation {
                                         dir: String)
       : (String, Array[Array[Double]], Int, Int, Int, Int, Int) =
     Staging.cached(s"ivfvacuumed:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 5 =!= 2)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("vacuumed").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
-      VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2), idx.centroids,
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "vacuumed",
+        col("vec_id") % 5 =!= 2, v1 = Some(Map.empty))
+      VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2), centroids,
         path, "vec_id", "embedding")
       VectorOps.writeManifest(s, path, 2, VectorOps.listIndexFiles(s, path))
       val (rewritten, filesV2, filesV3) =
         VectorOps.ivfCompactVersioned(s, path, fromVersion = 2, toVersion = 3)
       val (deleted, kept) = VectorOps.ivfVacuum(s, path, Seq(3))
-      (path, idx.centroids, rewritten, filesV2, filesV3, deleted, kept)
+      (path, centroids, rewritten, filesV2, filesV3, deleted, kept)
     }
 
   /** Versioned GC — the step that makes the manifest layout SUSTAINABLE:
@@ -1473,12 +1455,12 @@ object Curation {
   private val indexVacuumQ: Q = (s, dir) => {
     val (path, cents, rewritten, filesV2, filesV3, deleted, kept) =
       stageIvfVacuumed(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val v3 = VectorOps.readIndexVersion(s, path, 3)
       .select(col("vec_id"), col("centroid"))
     val truth = emb.select(col("vec_id"),
       VectorOps.ivfAssign(col("embedding"), cents).as("centroid"))
-    val mism = v3.exceptAll(truth).union(truth.exceptAll(v3))
+    val mism = mismatches(v3, truth)
       .agg(count(lit(1)).as("n_mism"))
     val nRows = VectorOps.readIndexVersion(s, path, 3)
       .agg(count(lit(1)).as("n_rows"))
@@ -1507,12 +1489,9 @@ object Curation {
                                          dir: String)
       : (String, graft.streaming.IndexStream.DrainResult) =
     Staging.cached(s"streamdelete:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, _) = Fixtures.baseIndex(s, dir, tmp, "index",
+        lit(true), v1 = Some(Map.empty))
       val inDir = tmp.resolve("tombstones").toString
       emb.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
         .repartition(4, col("vec_id"))
@@ -1542,7 +1521,7 @@ object Curation {
   private val streamDeleteQ: Q = (s, dir) => {
     val (path, drain) = stageStreamDelete(s, dir)
     val (nb, finalV) = (drain.nCommitted, drain.finalVersion)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val doomed = emb.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
     val mor = VectorOps.readIndexVersionMor(s, path, finalV, "vec_id")
     val logicalCheap = VectorOps.readManifest(s, path, finalV) ==
@@ -1587,20 +1566,16 @@ object Curation {
                                        dir: String)
       : (String, Array[Array[Double]]) =
     Staging.cached(s"ivfevolved:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 5 =!= 2)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("evolved").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "evolved",
+        col("vec_id") % 5 =!= 2, v1 = Some(Map.empty))
       emb.filter(col("vec_id") % 5 === 2)
         .select(col("vec_id"), col("embedding"),
           (col("vec_id") % 100).cast("long").as("quality"),
-          VectorOps.ivfAssign(col("embedding"), idx.centroids).as("centroid"))
+          VectorOps.ivfAssign(col("embedding"), centroids).as("centroid"))
         .write.partitionBy("centroid").mode("append").parquet(path)
       VectorOps.writeManifest(s, path, 2, VectorOps.listIndexFiles(s, path))
-      (path, idx.centroids)
+      (path, centroids)
     }
 
   /** Schema evolution across pinned versions — the backfill-free column
@@ -1625,7 +1600,7 @@ object Curation {
     */
   private val schemaEvolutionQ: Q = (s, dir) => {
     val (path, _) = stageIvfEvolved(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val v1 = VectorOps.readIndexVersion(s, path, 1)
     val merged = VectorOps.readIndexVersionMerged(s, path, 2)
     val oldSchemaStable = !v1.columns.contains("quality")
@@ -1673,7 +1648,7 @@ object Curation {
     val (path, _) = stageIvfVersioned(s, dir)
     val (p1, i1, n1, rows1) = VectorOps.indexFsck(s, path, 1)
     val (p2, i2, n2, rows2) = VectorOps.indexFsck(s, path, 2)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val nBase = emb.filter(col("vec_id") % 5 =!= 2)
       .agg(count(lit(1)).as("n_rows_v1"))
     val nAll = emb.agg(count(lit(1)).as("n_rows_v2"))
@@ -1706,12 +1681,9 @@ object Curation {
                                          dir: String)
       : (String, Boolean, Int, Long) =
     Staging.cached(s"ivfmordelete:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("mor").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val emb = Tables.corpus(s, dir)
+      val (path, _) = Fixtures.baseIndex(s, dir, tmp, "mor",
+        lit(true), v1 = Some(Map.empty))
       VectorOps.commitDeletes(s, path, fromVersion = 1, toVersion = 2,
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
       // the logical commit must move ZERO data files — audit it here,
@@ -1748,7 +1720,7 @@ object Curation {
     */
   private val morDeleteQ: Q = (s, dir) => {
     val (path, logicalCheap, rewritten, rowsDeleted) = stageIvfMorDelete(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val doomed = emb.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
     val v1 = VectorOps.readIndexVersion(s, path, 1)
     val mor = VectorOps.readIndexVersionMor(s, path, 2, "vec_id")
@@ -1759,10 +1731,8 @@ object Curation {
       .agg(count(lit(1)).as("n_leak"))
     val morN = mor.agg(count(lit(1)).as("n_mor"))
     val v1N = v1.agg(count(lit(1)).as("n_v1"))
-    val parity = v3.select(col("vec_id"), col("centroid"))
-      .exceptAll(mor.select(col("vec_id"), col("centroid")))
-      .union(mor.select(col("vec_id"), col("centroid"))
-        .exceptAll(v3.select(col("vec_id"), col("centroid"))))
+    val parity = mismatches(v3.select(col("vec_id"), col("centroid")),
+        mor.select(col("vec_id"), col("centroid")))
       .agg(count(lit(1)).as("n_mism"))
     nAll.crossJoin(nDel).crossJoin(morLeak).crossJoin(morN).crossJoin(v1N)
       .crossJoin(parity) // 1-row frames
@@ -1805,7 +1775,7 @@ object Curation {
     */
   private val pqDriftQ: Q = (s, dir) => {
     val (_, _, model) = stageIvfPqAppend(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val base = emb.filter(col("vec_id") % 5 =!= 2)
     val batch = emb.filter(col("vec_id") % 5 === 2)
     def sums(df: DataFrame, shift: Int, sumName: String, nName: String) =
@@ -1930,7 +1900,7 @@ object Curation {
   private val annRecallCurveQ: Q = (s, dir) => {
     val (path, cents) = Registry.stageIvf(s, dir)
     val qv = Registry.queryVec(s, dir)
-    val base = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val base = Tables.corpus(s, dir)
     val exact = VectorOps.cosineTopK(base, "vec_id", "embedding", qv, 10)
     def hits(p: Int): DataFrame =
       exact.join(
@@ -2047,14 +2017,11 @@ object Curation {
                                       dir: String)
       : (String, (Int, Long, Long), Int, Boolean) =
     Staging.cached(s"lifecycle:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 11 =!= 5)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("lifecycle").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val baseRows = col("vec_id") % 11 =!= 5
+      val base = emb.filter(baseRows)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "lifecycle",
+        baseRows, v1 = Some(Map("op" -> "append")))
       VectorOps.commitDeletes(s, path, 1, 2,
         base.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
       VectorOps.ivfCompactVersioned(s, path, 2, 3)
@@ -2064,7 +2031,7 @@ object Curation {
           transform(col("embedding"), x => x + lit(1.0f)).as("embedding"))
         .unionByName(emb.filter(col("vec_id") % 11 === 5)
           .select(col("vec_id"), col("embedding")))
-      val up = VectorOps.ivfUpsert(s, path, 3, 4, updates, idx.centroids,
+      val up = VectorOps.ivfUpsert(s, path, 3, 4, updates, centroids,
         "vec_id", "embedding")
       val nParts = VectorOps.readManifest(s, path, 4)
         .map(_.takeWhile(_ != '/')).distinct.length
@@ -2104,7 +2071,7 @@ object Curation {
     */
   private val indexUpsertQ: Q = (s, dir) => {
     val (path, up, _, _) = stageLifecycle(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val updIds = emb.filter(col("vec_id") % 11 =!= 5 &&
       col("vec_id") % 7 =!= 3 && col("vec_id") % 11 === 2)
     val v4 = VectorOps.readIndexVersionMor(s, path, 4, "vec_id")
@@ -2220,12 +2187,12 @@ object Curation {
     */
   private val indexRestoreQ: Q = (s, dir) => {
     val (path, _, _, metadataOnly) = stageLifecycle(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val head = VectorOps.readIndexLatest(s, path, "vec_id")
       .select(col("vec_id"), col("embedding"))
     val v3 = VectorOps.readIndexVersionMor(s, path, 3, "vec_id")
       .select(col("vec_id"), col("embedding"))
-    val nDiff = head.exceptAll(v3).unionByName(v3.exceptAll(head))
+    val nDiff = mismatches(head, v3)
       .agg(count(lit(1)).as("n_diff"))
     val nV4 = VectorOps.readIndexVersionMor(s, path, 4, "vec_id")
       .agg(count(lit(1)).as("n_v4"))
@@ -2270,14 +2237,9 @@ object Curation {
                                          dir: String)
       : (String, graft.streaming.IndexStream.DrainResult, Int) =
     Staging.cached(s"streamupsert:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 11 =!= 5)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "index",
+        col("vec_id") % 11 =!= 5, v1 = Some(Map("op" -> "append")))
       val queue = emb.filter(col("vec_id") % 11 =!= 5 &&
           col("vec_id") % 7 =!= 3 && col("vec_id") % 11 === 2)
         .select(col("vec_id"),
@@ -2290,7 +2252,7 @@ object Curation {
       val nFiles = new java.io.File(inDir).listFiles()
         .count(_.getName.endsWith(".parquet"))
       val drain = graft.streaming.IndexStream.runStreamUpserts(
-        s, inDir, idx.centroids, path,
+        s, inDir, centroids, path,
         checkpointDir = Some(tmp.resolve("ckpt").toString),
         checkpointEvery = 2)
       (path, drain, nFiles)
@@ -2319,7 +2281,7 @@ object Curation {
     */
   private val streamUpsertQ: Q = (s, dir) => {
     val (path, drain, nFiles) = stageStreamUpsert(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val isUpd = col("vec_id") % 11 =!= 5 && col("vec_id") % 7 =!= 3 &&
       col("vec_id") % 11 === 2
     val expected = emb.select(col("vec_id"),
@@ -2327,7 +2289,7 @@ object Curation {
         .otherwise(col("embedding")).as("embedding"))
     val head = VectorOps.readIndexLatest(s, path, "vec_id")
       .select(col("vec_id"), col("embedding"))
-    val nDiff = head.exceptAll(expected).unionByName(expected.exceptAll(head))
+    val nDiff = mismatches(head, expected)
       .agg(count(lit(1)).as("n_diff"))
     val nHead = head.agg(count(lit(1)).as("n_head"))
     val nAll = emb.agg(count(lit(1)).as("n_all"))
@@ -2367,14 +2329,9 @@ object Curation {
       : (String, String, graft.streaming.IndexStream.ViewDrainResult, Int,
          Boolean) =
     Staging.cached(s"streamcdc:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 11 =!= 5)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "index",
+        col("vec_id") % 11 =!= 5, v1 = Some(Map("op" -> "append")))
       val viewPath = tmp.resolve("view").toString
       VectorOps.commitSnapshotVersion(s, viewPath, 1, "init",
         graft.streaming.IndexStream.bucketStats(
@@ -2392,7 +2349,7 @@ object Curation {
       val nFiles = new java.io.File(inDir).listFiles()
         .count(_.getName.endsWith(".parquet"))
       val res = graft.streaming.IndexStream.runStreamUpsertsWithView(
-        s, inDir, idx.centroids, path, viewPath,
+        s, inDir, centroids, path, viewPath,
         checkpointDir = Some(tmp.resolve("ckpt").toString),
         checkpointEvery = 2)
       // a TOMBSTONE-ONLY delete batch consumed by the same maintainer —
@@ -2437,14 +2394,13 @@ object Curation {
     */
   private val streamCdcQ: Q = (s, dir) => {
     val (path, viewPath, res, nFiles, delConsumed) = stageStreamCdc(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val viewHead = VectorOps.latestVersion(s, viewPath).get
     val maintained = VectorOps.readIndexVersion(s, viewPath, viewHead)
       .select(col("bucket"), col("n"), col("s"))
     val recomputed = graft.streaming.IndexStream.bucketStats(
       VectorOps.readIndexLatest(s, path, "vec_id"), "vec_id", "embedding")
-    val nDiff = maintained.exceptAll(recomputed)
-      .unionByName(recomputed.exceptAll(maintained))
+    val nDiff = mismatches(maintained, recomputed)
       .agg(count(lit(1)).as("n_diff"))
     // + 1 on both heads: the tombstone-only delete batch and its view
     // consumption (the r11 CDC-preimage gap, closed)
@@ -2493,14 +2449,9 @@ object Curation {
       : (String, String, graft.streaming.IndexStream.ViewDrainResult, Int,
          Int, Boolean) =
     Staging.cached(s"streamrace:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 11 =!= 5)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("raceidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "raceidx",
+        col("vec_id") % 11 =!= 5, v1 = Some(Map("op" -> "append")))
       val viewPath = tmp.resolve("raceview").toString
       VectorOps.commitSnapshotVersion(s, viewPath, 1, "init",
         graft.streaming.IndexStream.bucketStats(
@@ -2521,7 +2472,7 @@ object Curation {
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
       val compactedAt = new java.util.concurrent.atomic.AtomicInteger(-1)
       val res = graft.streaming.IndexStream.runStreamUpsertsWithView(
-        s, inDir, idx.centroids, path, viewPath,
+        s, inDir, centroids, path, viewPath,
         checkpointDir = Some(ckpt),
         afterIndexCommit = _ =>
           if (fired.compareAndSet(false, true)) {
@@ -2533,7 +2484,7 @@ object Curation {
       // every batch key must survive the compaction commit and skip on
       // BOTH tables
       val re = graft.streaming.IndexStream.runStreamUpsertsWithView(
-        s, inDir, idx.centroids, path, viewPath, checkpointDir = None,
+        s, inDir, centroids, path, viewPath, checkpointDir = None,
         queryName = graft.streaming.IndexStream.replaySinkIdOf(ckpt))
       val replayOk = re.index.nCommitted == 0 &&
         re.index.nSkipped == nFiles &&
@@ -2562,14 +2513,13 @@ object Curation {
   private val streamCompactRaceQ: Q = (s, dir) => {
     val (path, viewPath, res, nFiles, compactV, replayOk) =
       stageStreamRace(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val viewHead = VectorOps.latestVersion(s, viewPath).get
     val maintained = VectorOps.readIndexVersion(s, viewPath, viewHead)
       .select(col("bucket"), col("n"), col("s"))
     val recomputed = graft.streaming.IndexStream.bucketStats(
       VectorOps.readIndexLatest(s, path, "vec_id"), "vec_id", "embedding")
-    val nDiff = maintained.exceptAll(recomputed)
-      .unionByName(recomputed.exceptAll(maintained))
+    val nDiff = mismatches(maintained, recomputed)
       .agg(count(lit(1)).as("n_diff"))
     val compactInside = compactV > 2 &&
       compactV < VectorOps.latestVersion(s, path).get &&
@@ -2614,16 +2564,11 @@ object Curation {
                                          dir: String)
       : (String, graft.streaming.IndexStream.SourceDrainResult, Boolean) =
     Staging.cached(s"streamsource:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("srcidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "srcidx",
+        col("vec_id") % 3 === 1, v1 = Some(Map("op" -> "append")))
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 3 === 2),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       VectorOps.writeManifest(s, path, 2, VectorOps.listIndexFiles(s, path),
         Map("op" -> "append"))
       VectorOps.ivfCompactVersioned(s, path, 2, 3)
@@ -2632,7 +2577,7 @@ object Curation {
       // re-list the directory
       val before = VectorOps.listIndexFiles(s, path).toSet
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 3 === 0),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       val newFiles = VectorOps.listIndexFiles(s, path)
         .filterNot(before.contains)
       VectorOps.commitFilesOcc(s, path, newFiles, Map("op" -> "append"))
@@ -2683,12 +2628,11 @@ object Curation {
     */
   private val streamSourceQ: Q = (s, dir) => {
     val (down, res, strictRefused) = stageStreamSource(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val downstream = s.read.parquet(s"$down/commit_v*")
       .select(col("vec_id"), col("embedding"))
     val expected = emb.select(col("vec_id"), col("embedding"))
-    val nDiff = downstream.exceptAll(expected)
-      .unionByName(expected.exceptAll(downstream))
+    val nDiff = mismatches(downstream, expected)
       .agg(count(lit(1)).as("n_diff"))
     val stats = expected.agg(count(lit(1)).as("n_rows"),
       sum(col("vec_id")).cast("long").as("sum_ids"))
@@ -2748,20 +2692,15 @@ object Curation {
                                       dir: String)
       : (String, Boolean, Boolean, Boolean, Boolean) =
     Staging.cached(s"vacuumpin:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val expected = emb
         .filter(col("vec_id") % 5 === 1 || col("vec_id") % 5 === 2)
         .select(col("vec_id"), col("embedding"))
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 5 === 1), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("pinidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "pinidx",
+        col("vec_id") % 5 === 1, v1 = Some(Map("op" -> "append")))
       def occAppend(slice: org.apache.spark.sql.DataFrame): Unit = {
         val before = VectorOps.listIndexFiles(s, path).toSet
-        VectorOps.ivfAppend(slice, idx.centroids, path, "vec_id", "embedding")
+        VectorOps.ivfAppend(slice, centroids, path, "vec_id", "embedding")
         VectorOps.commitFilesOcc(s, path,
           VectorOps.listIndexFiles(s, path).filterNot(before.contains),
           Map("op" -> "append")): Unit
@@ -2775,9 +2714,7 @@ object Curation {
       val pinnedOutside = VectorOps.readIndexVersion(s, path, 2)
         .select(col("vec_id"), col("embedding"))
       val (nDeleted, _) = VectorOps.ivfVacuum(s, path, keepVersions = Seq(3, 4))
-      def bitExact(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.exceptAll(expected).unionByName(expected.exceptAll(df)).isEmpty
-      val pinnedDuringExact = bitExact(pinnedInside)
+      val pinnedDuringExact = mismatches(pinnedInside, expected).isEmpty
       // loud means THROWN — a caught empty frame would be the bug
       val outsideFailsLoudly =
         (try { pinnedOutside.count(); false }
@@ -2785,9 +2722,8 @@ object Curation {
         (try {
           VectorOps.readIndexVersion(s, path, 2).count(); false
         } catch { case scala.util.control.NonFatal(_) => true })
-      val rereadExact = bitExact(
-        VectorOps.readIndexVersion(s, path, 3)
-          .select(col("vec_id"), col("embedding")))
+      val rereadExact = mismatches(VectorOps.readIndexVersion(s, path, 3)
+        .select(col("vec_id"), col("embedding")), expected).isEmpty
       (path, nDeleted > 0, pinnedDuringExact, outsideFailsLoudly, rereadExact)
     }
 
@@ -2860,21 +2796,16 @@ object Curation {
                                           dir: String)
       : (String, Boolean, Boolean, Boolean, Boolean) =
     Staging.cached(s"dvcompactrace:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val slice = emb
         .filter(col("vec_id") % 7 === 1 || col("vec_id") % 7 === 2)
         .select(col("vec_id"), col("embedding"))
       val expected = slice.filter(col("vec_id") % 3 =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 7 === 1), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("raceidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "raceidx",
+        col("vec_id") % 7 === 1, v1 = Some(Map("op" -> "append")))
       val before = VectorOps.listIndexFiles(s, path).toSet
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 7 === 2),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       VectorOps.commitFilesOcc(s, path,
         VectorOps.listIndexFiles(s, path).filterNot(before.contains),
         Map("op" -> "append")): Unit
@@ -2889,8 +2820,6 @@ object Curation {
         try { VectorOps.ivfCompactVersioned(s, path, 2, 3); false }
         catch { case e: java.io.IOException =>
           e.getMessage.contains("already committed") }
-      def bitExact(df: DataFrame, vs: DataFrame): Boolean =
-        df.exceptAll(vs).unionByName(vs.exceptAll(df)).isEmpty
       // no fsck here: a DV delete is a metadata-only commit (no stats
       // sidecar to audit against) — presence of every manifest file plus
       // the bit-exact DV read is the orphan-invisibility proof
@@ -2898,20 +2827,20 @@ object Curation {
         s.sparkContext.hadoopConfiguration)
       val allPresent = VectorOps.readManifest(s, path, 3).forall(f =>
         fs.exists(new org.apache.hadoop.fs.Path(path, f)))
-      val orphanInvisible = allPresent && bitExact(
+      val orphanInvisible = allPresent && mismatches(
         VectorOps.readIndexVersionDv(s, path, 3)
-          .select(col("vec_id"), col("embedding")), expected)
+          .select(col("vec_id"), col("embedding")), expected).isEmpty
       // the loser re-runs from the head its refusal points at; the
       // retry's rewrite applies v3's DV positions physically (the
       // apply-while-rewriting compaction), so the final state equals the
       // serial delete-then-compact execution
       val (rewritten, _, _) = VectorOps.ivfCompactVersioned(s, path, 3, 4)
-      val retrySerialEqual = rewritten > 0 && bitExact(
+      val retrySerialEqual = rewritten > 0 && mismatches(
         VectorOps.readIndexVersionDv(s, path, 4)
-          .select(col("vec_id"), col("embedding")), expected)
-      val pinnedPredeleteIntact = bitExact(
+          .select(col("vec_id"), col("embedding")), expected).isEmpty
+      val pinnedPredeleteIntact = mismatches(
         VectorOps.readIndexVersion(s, path, 2)
-          .select(col("vec_id"), col("embedding")), slice)
+          .select(col("vec_id"), col("embedding")), slice).isEmpty
       (path, raceRefused, orphanInvisible, retrySerialEqual,
         pinnedPredeleteIntact)
     }
@@ -2985,21 +2914,16 @@ object Curation {
       : (String, Boolean, Boolean, Boolean, Boolean) =
     Staging.cached(s"vacappendrace:$dir") { tmp =>
       import org.apache.hadoop.fs.{Path => HPath}
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val expected = emb
         .filter(col("vec_id") % 5 === 1 || col("vec_id") % 5 === 2 ||
           col("vec_id") % 5 === 3)
         .select(col("vec_id"), col("embedding"))
-      val idx = VectorOps.ivfIndexDeterministic(
-        emb.filter(col("vec_id") % 5 === 1), "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("vacraceidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "vacraceidx",
+        col("vec_id") % 5 === 1, v1 = Some(Map("op" -> "append")))
       val beforeB = VectorOps.listIndexFiles(s, path).toSet
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 2),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       VectorOps.commitFilesOcc(s, path,
         VectorOps.listIndexFiles(s, path).filterNot(beforeB.contains),
         Map("op" -> "append")): Unit
@@ -3007,7 +2931,7 @@ object Curation {
       // the in-flight appender: files land, commit comes later
       val beforeStage = VectorOps.listIndexFiles(s, path).toSet
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 5 === 3),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       val staged = VectorOps.listIndexFiles(s, path)
         .filterNot(beforeStage.contains)
       val (plan0, _) = VectorOps.vacuumPlan(s, path, Seq(3))
@@ -3031,8 +2955,7 @@ object Curation {
       VectorOps.commitFilesOcc(s, path, staged, Map("op" -> "append")): Unit
       val v4 = VectorOps.readIndexVersion(s, path, 4)
         .select(col("vec_id"), col("embedding"))
-      val commitLandsExact = v4.exceptAll(expected)
-        .unionByName(expected.exceptAll(v4)).isEmpty
+      val commitLandsExact = mismatches(v4, expected).isEmpty
       (path, hazardInDryrun, retentionSparesStaged, vacuumEngaged,
         commitLandsExact)
     }
@@ -3072,19 +2995,18 @@ object Curation {
                                  dir: String)
       : (String, (Set[Long], Int, Option[Int]), Boolean) =
     Staging.cached(s"ckptlog:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
+      val emb = Tables.corpus(s, dir)
+      val centroids = Fixtures.quantizer(s, dir, lit(true)).centroids
       val path = tmp.resolve("ckptlog").toString
       (0 until 6).foreach { i =>
         VectorOps.ivfAppendBatch(s, emb.filter(col("vec_id") % 6 === i),
-          idx.centroids, path, "vec_id", "embedding", batchId = 10L + i)
+          centroids, path, "vec_id", "embedding", batchId = 10L + i)
         if (i == 3) VectorOps.writeBatchIdCheckpoint(s, path, 4)
       }
       // end-to-end replay guard: a re-delivered batch id now resolved
       // THROUGH the checkpoint must still be skipped
       val (_, skipped, _) = VectorOps.ivfAppendBatch(s,
-        emb.filter(col("vec_id") % 6 === 0), idx.centroids, path,
+        emb.filter(col("vec_id") % 6 === 0), centroids, path,
         "vec_id", "embedding", batchId = 10L)
       (path, VectorOps.committedBatchIdsAudit(s, path), skipped)
     }
@@ -3111,7 +3033,7 @@ object Curation {
     */
   private val commitCheckpointQ: Q = (s, dir) => {
     val (path, audit, skipped) = stageCkpt(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val (ids, manifestsRead, ckptVersion) = audit
     val naive = VectorOps.listVersions(s, path).flatMap(v =>
       VectorOps.readManifestMeta(s, path, v).get("batch").map(_.toLong)).toSet
@@ -3147,19 +3069,18 @@ object Curation {
                                          dir: String)
       : (String, Set[Long], Boolean, Int) =
     Staging.cached(s"logretention:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
+      val emb = Tables.corpus(s, dir)
+      val centroids = Fixtures.quantizer(s, dir, lit(true)).centroids
       val path = tmp.resolve("logret").toString
       (0 until 6).foreach { i =>
         VectorOps.ivfAppendBatch(s, emb.filter(col("vec_id") % 6 === i),
-          idx.centroids, path, "vec_id", "embedding", batchId = 30L + i)
+          centroids, path, "vec_id", "embedding", batchId = 30L + i)
       }
       VectorOps.commitDeletes(s, path, 6, 7,
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
       val (nDel, _) = VectorOps.vacuumLog(s, path, Seq(6, 7))
       val (_, skipped, _) = VectorOps.ivfAppendBatch(s,
-        emb.filter(col("vec_id") % 6 === 0), idx.centroids, path,
+        emb.filter(col("vec_id") % 6 === 0), centroids, path,
         "vec_id", "embedding", batchId = 30L)
       (path, VectorOps.committedBatchIds(s, path), skipped, nDel)
     }
@@ -3185,7 +3106,7 @@ object Curation {
     */
   private val logRetentionQ: Q = (s, dir) => {
     val (path, ids, ancientSkipped, nDel) = stageLogRetention(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val doomed = emb.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
     val historyPruned =
       VectorOps.listVersions(s, path) == Seq(6, 7) && nDel > 0
@@ -3299,7 +3220,7 @@ object Curation {
     // lifecycleFeed); the multi-consumer audits below read them directly
     val chunked = feed(1, 3).unionByName(feed(3, 5))
     val whole = feed(1, 5)
-    val seam = chunked.exceptAll(whole).unionByName(whole.exceptAll(chunked))
+    val seam = mismatches(chunked, whole)
       .agg(count(lit(1)).as("n_seam"))
     val counts = whole.groupBy(col("version"))
       .agg(count(lit(1)).as("n")).orderBy(col("version"))
@@ -3400,16 +3321,11 @@ object Curation {
   private[queries] def stageTimeline(s: org.apache.spark.sql.SparkSession,
                                      dir: String): String =
     Staging.cached(s"timetravel:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 3 =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("timeline").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append", "ts" -> "1000"))
+      val emb = Tables.corpus(s, dir)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "timeline",
+        col("vec_id") % 3 =!= 0, v1 = Some(Map("op" -> "append", "ts" -> "1000")))
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 3 === 0),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       VectorOps.writeManifest(s, path, 2, VectorOps.listIndexFiles(s, path),
         Map("op" -> "append", "ts" -> "2000"))
       VectorOps.commitDeletes(s, path, 2, 3,
@@ -3446,13 +3362,14 @@ object Curation {
     val vMid = VectorOps.versionAsOf(s, path, 2500L)
     val vHead = VectorOps.versionAsOf(s, path, 999999L)
     def rows(df: DataFrame) = df.select(col("vec_id"), col("embedding"))
-    def nDiff(a: DataFrame, b: DataFrame, as: String) =
-      rows(a).exceptAll(rows(b)).unionByName(rows(b).exceptAll(rows(a)))
-        .agg(count(lit(1)).as(as))
-    val parityMid = nDiff(VectorOps.readIndexAsOf(s, path, 2500L, "vec_id"),
-      VectorOps.readIndexVersionMor(s, path, 2, "vec_id"), "n_diff_mid")
-    val parityHead = nDiff(VectorOps.readIndexAsOf(s, path, 999999L, "vec_id"),
-      VectorOps.readIndexVersionMor(s, path, 3, "vec_id"), "n_diff_head")
+    val parityMid = mismatches(
+        rows(VectorOps.readIndexAsOf(s, path, 2500L, "vec_id")),
+        rows(VectorOps.readIndexVersionMor(s, path, 2, "vec_id")))
+      .agg(count(lit(1)).as("n_diff_mid"))
+    val parityHead = mismatches(
+        rows(VectorOps.readIndexAsOf(s, path, 999999L, "vec_id")),
+        rows(VectorOps.readIndexVersionMor(s, path, 3, "vec_id")))
+      .agg(count(lit(1)).as("n_diff_head"))
     val nStart = VectorOps.readIndexAsOf(s, path, 1000L, "vec_id")
       .agg(count(lit(1)).as("n_start"))
     val nMid = VectorOps.readIndexAsOf(s, path, 2500L, "vec_id")
@@ -3532,9 +3449,8 @@ object Curation {
                                       dir: String)
       : (String, Long) =
     Staging.cached(s"clustered:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
+      val emb = Tables.corpus(s, dir)
+      val idx = Fixtures.quantizer(s, dir, lit(true))
       val path = tmp.resolve("clustered").toString
       idx.assigned
         .repartitionByRange(8, col("vec_id"))
@@ -3574,13 +3490,13 @@ object Curation {
     val (path, maxId) = stageClustered(s, dir)
     val lo = maxId / 3
     val hi = maxId / 3 + maxId / 8
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val (pruned, filesRead, filesTotal) =
       VectorOps.readIndexVersionPruned(s, path, 1, "vec_id", lo, hi)
     val full = emb.filter(col("vec_id") >= lo && col("vec_id") <= hi)
       .select(col("vec_id"), col("embedding"))
     val p = pruned.select(col("vec_id"), col("embedding"))
-    val nDiff = p.exceptAll(full).unionByName(full.exceptAll(p))
+    val nDiff = mismatches(p, full)
       .agg(count(lit(1)).as("n_diff"))
     val stats = full.agg(count(lit(1)).as("n_range"),
       sum(col("vec_id")).as("sum_range"))
@@ -3627,7 +3543,7 @@ object Curation {
     */
   private val bloomSkippingQ: Q = (s, dir) => {
     val (path, maxId) = stageClustered(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val absent = maxId + 987654321L
     val (rowsP, keptP, total) =
       VectorOps.readIndexVersionPoint(s, path, 1, "vec_id", maxId)
@@ -3636,7 +3552,7 @@ object Curation {
     val full = emb.filter(col("vec_id") === maxId)
       .select(col("vec_id"), col("embedding"))
     val p = rowsP.select(col("vec_id"), col("embedding"))
-    val nDiff = p.exceptAll(full).unionByName(full.exceptAll(p))
+    val nDiff = mismatches(p, full)
       .agg(count(lit(1)).as("n_diff"))
     val trueFiles = VectorOps.readIndexVersion(s, path, 1)
       .filter(col("vec_id") === maxId)
@@ -3718,8 +3634,7 @@ object Curation {
       .select(col("vec_id"), col("embedding"))
     val dstRows = VectorOps.readIndexVersion(s, dst, 3)
       .select(col("vec_id"), col("embedding"))
-    val nDiff = dstRows.exceptAll(srcRows)
-      .unionByName(srcRows.exceptAll(dstRows))
+    val nDiff = mismatches(dstRows, srcRows)
       .agg(count(lit(1)).as("n_diff"))
     val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(
       s.sparkContext.hadoopConfiguration)
@@ -3764,11 +3679,10 @@ object Curation {
       : (String, ((Int, Int), (Int, Int), (Int, Int), (Int, Int),
                   (Int, Int), (Int, Int))) =
     Staging.cached(s"statsinc:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val base = emb.filter(col("vec_id") % 10 =!= 7)
       val batch = emb.filter(col("vec_id") % 10 === 7)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id",
-        "embedding", nCentroids = 4)
+      val idx = Fixtures.quantizer(s, dir, col("vec_id") % 10 =!= 7, k = 4)
       val path = tmp.resolve("statsinc").toString
       idx.assigned.repartition(3)
         .write.partitionBy("centroid").mode("overwrite").parquet(path)
@@ -3848,8 +3762,8 @@ object Curation {
       cs4 == ((f4.count(f3set), f4.count(f => !f3set(f)))) &&
         bl4 == ((f4.count(f3set), f4.count(f => !f3set(f)))) &&
         f4.exists(f => !f3set(f)) // the merge actually created files
-    val probeId = Tables.embeddings(s, dir)
-      .filter(col("vec_id") =!= 0 && col("vec_id") % 10 === 7)
+    val probeId = Tables.corpus(s, dir)
+      .filter(col("vec_id") % 10 === 7)
       .agg(max(col("vec_id"))).head().getLong(0)
     val (rowsP, keptP, total) =
       VectorOps.readIndexVersionPoint(s, path, 4, "vec_id", probeId)
@@ -3857,8 +3771,8 @@ object Curation {
     val pointPruned = keptP.nonEmpty && keptP.length < total
     val nIndex = VectorOps.readIndexVersion(s, path, 4)
       .agg(count(lit(1)).as("n_index_rows"))
-    val nBatch = Tables.embeddings(s, dir)
-      .filter(col("vec_id") =!= 0 && col("vec_id") % 10 === 7)
+    val nBatch = Tables.corpus(s, dir)
+      .filter(col("vec_id") % 10 === 7)
       .agg(count(lit(1)).as("n_batch"))
     nIndex.crossJoin(nBatch) // 1-row frames
       .select(
@@ -3895,9 +3809,8 @@ object Curation {
                                       dir: String)
       : (String, Long) =
     Staging.cached(s"recluster:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
+      val emb = Tables.corpus(s, dir)
+      val idx = Fixtures.quantizer(s, dir, lit(true))
       val path = tmp.resolve("recluster").toString
       idx.assigned
         .repartitionByRange(8, col("vec_id"))
@@ -3938,7 +3851,7 @@ object Curation {
     */
   private val reclusterQ: Q = (s, dir) => {
     val (path, maxId) = stageRecluster(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val lo = maxId / 5
     val hi = maxId / 5 + maxId / 9
     val full = emb.filter(col("vec_id") >= lo && col("vec_id") <= hi)
@@ -3947,7 +3860,7 @@ object Curation {
       val (rows, r, t) =
         VectorOps.readIndexVersionPruned(s, path, v, "vec_id", lo, hi)
       val p = rows.select(col("vec_id"), col("embedding"))
-      val nDiff = p.exceptAll(full).unionByName(full.exceptAll(p)).count()
+      val nDiff = mismatches(p, full).count()
       (nDiff, r, t)
     }
     val (d1, r1, t1) = probe(1)
@@ -3987,7 +3900,7 @@ object Curation {
                                      dir: String)
       : (String, String, Long) =
     Staging.cached(s"zonerect:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
         .select(col("vec_id"), col("label"))
       val zPath = tmp.resolve("zorder").toString
       Layout.zorderWrite(emb, "vec_id", "label",
@@ -4029,7 +3942,7 @@ object Curation {
     */
   private val zonemapRectQ: Q = (s, dir) => {
     val (zPath, linPath, maxId) = stageZoneRect(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
       .select(col("vec_id"), col("label"))
     val (xLo, xHi) = (maxId / 4, maxId / 2)
     val rect = Seq(("vec_id", xLo, xHi), ("label", 0L, 1L))
@@ -4038,7 +3951,7 @@ object Curation {
     val full = emb.filter(col("vec_id") >= xLo && col("vec_id") <= xHi &&
       col("label") >= 0 && col("label") <= 1)
     val p = zRect.select(col("vec_id"), col("label"))
-    val nDiff = p.exceptAll(full).unionByName(full.exceptAll(p))
+    val nDiff = mismatches(p, full)
       .agg(count(lit(1)).as("n_diff"))
     val (_, zYRead, _) = VectorOps.readIndexVersionPrunedRect(
       s, zPath, 1, Seq(("label", 0L, 1L)))
@@ -4077,12 +3990,8 @@ object Curation {
                                      dir: String)
       : (String, Boolean, Long, Long, Long, Long) =
     Staging.cached(s"dvdelete:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("dv").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path))
+      val (path, _) = Fixtures.baseIndex(s, dir, tmp, "dv",
+        lit(true), v1 = Some(Map.empty))
       val (n1New, n1Tot) = VectorOps.commitDeletionVector(s, path,
         fromVersion = 1, toVersion = 2,
         element_at(col("embedding"), 1) < lit(0f))
@@ -4128,7 +4037,7 @@ object Curation {
   private val dvDeleteQ: Q = (s, dir) => {
     val (path, logicalCheap, n1New, n1Tot, n2New, n2Tot) =
       stageDvDelete(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val d1 = emb.filter(element_at(col("embedding"), 1) < lit(0f))
       .select(col("vec_id"))
     val d2 = emb.filter(col("vec_id") % 13 === 4).select(col("vec_id"))
@@ -4138,9 +4047,9 @@ object Curation {
     val v3 = VectorOps.readIndexVersionDv(s, path, 3).select(col("vec_id"))
     val exp2 = emb.join(d1, Seq("vec_id"), "left_anti").select(col("vec_id"))
     val exp3 = emb.join(dd, Seq("vec_id"), "left_anti").select(col("vec_id"))
-    val m2 = v2.exceptAll(exp2).unionByName(exp2.exceptAll(v2))
+    val m2 = mismatches(v2, exp2)
       .agg(count(lit(1)).as("m2"))
-    val m3 = v3.exceptAll(exp3).unionByName(exp3.exceptAll(v3))
+    val m3 = mismatches(v3, exp3)
       .agg(count(lit(1)).as("m3"))
     val counts = emb.agg(count(lit(1)).as("n_all"))
       .crossJoin(d1.agg(count(lit(1)).as("n_d1")))
@@ -4184,14 +4093,9 @@ object Curation {
                                 dir: String)
       : (String, String, Boolean, Boolean, Int) =
     Staging.cached(s"wap:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 4 =!= 1)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val main = tmp.resolve("main").toString
-      VectorOps.ivfWrite(idx, main)
-      VectorOps.writeManifest(s, main, 1,
-        VectorOps.listIndexFiles(s, main))
+      val emb = Tables.corpus(s, dir)
+      val (main, centroids) = Fixtures.baseIndex(s, dir, tmp, "main",
+        col("vec_id") % 4 =!= 1, v1 = Some(Map.empty))
       val branch = tmp.resolve("branch").toString
       VectorOps.cloneIndex(s, main, branch, srcVersion = 1)
       // zero-copy audit at the clone point: the branch dir holds ONLY
@@ -4199,7 +4103,7 @@ object Curation {
       val zeroCopy = VectorOps.listIndexFiles(s, branch).isEmpty
       // write-audit: the batch lands on the branch, invisible to main
       val batch = emb.filter(col("vec_id") % 4 === 1)
-      VectorOps.ivfAppend(batch, idx.centroids, branch,
+      VectorOps.ivfAppend(batch, centroids, branch,
         "vec_id", "embedding")
       VectorOps.writeManifest(s, branch, 2,
         VectorOps.readManifest(s, branch, 1) ++
@@ -4234,17 +4138,17 @@ object Curation {
     */
   private val indexCloneQ: Q = (s, dir) => {
     val (main, branch, zeroCopy, _, _) = stageWap(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val base = emb.filter(col("vec_id") % 4 =!= 1).select(col("vec_id"))
     val m1 = VectorOps.readIndexVersion(s, main, 1).select(col("vec_id"))
     val b1 = VectorOps.readIndexVersion(s, branch, 1).select(col("vec_id"))
     val b2 = VectorOps.readIndexVersion(s, branch, 2).select(col("vec_id"))
     val all = emb.select(col("vec_id"))
-    val cp = b1.exceptAll(m1).unionByName(m1.exceptAll(b1))
+    val cp = mismatches(b1, m1)
       .agg(count(lit(1)).as("n_cp"))
-    val bh = b2.exceptAll(all).unionByName(all.exceptAll(b2))
+    val bh = mismatches(b2, all)
       .agg(count(lit(1)).as("n_bh"))
-    val mp = m1.exceptAll(base).unionByName(base.exceptAll(m1))
+    val mp = mismatches(m1, base)
       .agg(count(lit(1)).as("n_mp"))
     val stats = b2.agg(count(lit(1)).as("n_branch"),
       sum(col("vec_id")).as("sum_branch"))
@@ -4285,16 +4189,16 @@ object Curation {
     */
   private val indexWapQ: Q = (s, dir) => {
     val (main, branch, _, publishMetaOnly, promoted) = stageWap(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val base = emb.filter(col("vec_id") % 4 =!= 1).select(col("vec_id"))
     val batch = emb.filter(col("vec_id") % 4 === 1).select(col("vec_id"))
     val m1 = VectorOps.readIndexVersion(s, main, 1).select(col("vec_id"))
     val mHead = VectorOps.readIndexVersion(s, main, promoted)
       .select(col("vec_id"))
     val b2 = VectorOps.readIndexVersion(s, branch, 2).select(col("vec_id"))
-    val pp = mHead.exceptAll(b2).unionByName(b2.exceptAll(mHead))
+    val pp = mismatches(mHead, b2)
       .agg(count(lit(1)).as("n_pp"))
-    val hi = m1.exceptAll(base).unionByName(base.exceptAll(m1))
+    val hi = mismatches(m1, base)
       .agg(count(lit(1)).as("n_hi"))
     val staged = m1.join(batch, Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_staged_in_v1"))
@@ -4372,7 +4276,7 @@ object Curation {
     val full = docs.filter(col("source").startsWith("src1"))
       .select(col("doc_id"), col("source"))
     val p = pruned.select(col("doc_id"), col("source"))
-    val nDiff = p.exceptAll(full).unionByName(full.exceptAll(p))
+    val nDiff = mismatches(p, full)
       .agg(count(lit(1)).as("n_diff"))
     val nAbsent = absent.count()
     val stats = full.agg(count(lit(1)).as("n_prefix"),
@@ -4471,9 +4375,7 @@ object Curation {
                                     dir: String)
       : (String, (Int, Int, Int, Long), Long) =
     Staging.cached(s"binpackidx:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(emb, "vec_id", "embedding",
-        nCentroids = 8)
+      val idx = Fixtures.quantizer(s, dir, lit(true))
       val path = tmp.resolve("binpack").toString
       idx.assigned.repartition(12)
         .write.partitionBy("centroid").mode("overwrite").parquet(path)
@@ -4509,11 +4411,11 @@ object Curation {
   private val compactSmallQ: Q = (s, dir) => {
     val (path, res, target) = stageBinpack(s, dir)
     val (bins, filesFrom, filesTo, maxBin) = res
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val v2 = VectorOps.readIndexVersion(s, path, 2)
       .select(col("vec_id"), col("embedding"))
     val expected = emb.select(col("vec_id"), col("embedding"))
-    val nDiff = v2.exceptAll(expected).unionByName(expected.exceptAll(v2))
+    val nDiff = mismatches(v2, expected)
       .agg(count(lit(1)).as("n_diff"))
     val pinned = VectorOps.readIndexVersion(s, path, 1)
       .agg(count(lit(1)).as("n_v1"))
@@ -4732,13 +4634,12 @@ object Curation {
     val (rows, kept, total) =
       VectorOps.readIndexVersionSemi(s, path, 1, "vec_id", keys)
     val dim = s.createDataFrame(keys.map(Tuple1(_))).toDF("vec_id")
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val prunedJoin = rows.join(broadcast(dim), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"))
     val fullJoin = emb.join(broadcast(dim), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"))
-    val nDiff = prunedJoin.exceptAll(fullJoin)
-      .unionByName(fullJoin.exceptAll(prunedJoin))
+    val nDiff = mismatches(prunedJoin, fullJoin)
       .agg(count(lit(1)).as("n_diff"))
     val trueFiles = VectorOps.readIndexVersion(s, path, 1)
       .join(broadcast(dim), Seq("vec_id"), "left_semi")
@@ -4804,13 +4705,12 @@ object Curation {
     val (_, keptDriver, _) =
       VectorOps.readIndexVersionSemi(s, path, 1, "vec_id", keySeq,
         maxKeys = keySeq.length)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val prunedJoin = rows.join(broadcast(dim), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"))
     val fullJoin = emb.join(broadcast(dim), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"))
-    val nDiff = prunedJoin.exceptAll(fullJoin)
-      .unionByName(fullJoin.exceptAll(prunedJoin))
+    val nDiff = mismatches(prunedJoin, fullJoin)
       .agg(count(lit(1)).as("n_diff"))
     val stats = fullJoin.agg(count(lit(1)).as("n_match"),
       sum(col("vec_id")).cast("long").as("sum_match"))
@@ -4845,7 +4745,7 @@ object Curation {
   private[queries] def stageMips(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String =
     Staging.cached(s"mipsidx:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+      val emb = Tables.corpus(s, dir)
       val path = tmp.resolve("mips").toString
       // 2^(id % 8) — exact in double for exponents 0..7, and exact as
       // DuckDB's (1 << (vec_id % 8)) integer on the oracle side
@@ -4924,14 +4824,11 @@ object Curation {
                                        dir: String)
       : (String, Long, Boolean, Boolean, Boolean) =
     Staging.cached(s"constraintidx:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 2 === 1)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("constraintidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val baseRows = col("vec_id") % 2 === 1
+      val base = emb.filter(baseRows)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "constraintidx",
+        baseRows, v1 = Some(Map("op" -> "append")))
       val dim = emb.select(size(col("embedding"))).head().getInt(0)
       val constraints = Seq(
         "id_not_null" -> col("vec_id").isNotNull,
@@ -4941,7 +4838,7 @@ object Curation {
       val bad = emb.filter(col("vec_id") % 2 === 0)
         .select(when(col("vec_id") % 13 === 1, -col("vec_id"))
           .otherwise(col("vec_id")).as("vec_id"), col("embedding"))
-      VectorOps.ivfAppend(bad, idx.centroids, path, "vec_id", "embedding")
+      VectorOps.ivfAppend(bad, centroids, path, "vec_id", "embedding")
       val badFiles = VectorOps.listIndexFiles(s, path)
         .filterNot(before.contains)
       val nViol = VectorOps.checkConstraints(s, path, badFiles,
@@ -4958,7 +4855,7 @@ object Curation {
         .count() == base.count()
       val before2 = VectorOps.listIndexFiles(s, path).toSet
       VectorOps.ivfAppend(emb.filter(col("vec_id") % 2 === 0),
-        idx.centroids, path, "vec_id", "embedding")
+        centroids, path, "vec_id", "embedding")
       val goodFiles = VectorOps.listIndexFiles(s, path)
         .filterNot(before2.contains)
       VectorOps.commitFilesChecked(s, path, goodFiles, constraints,
@@ -5034,14 +4931,10 @@ object Curation {
                                        dir: String)
       : (String, Boolean, (Int, Long, Long, Long)) =
     Staging.cached(s"checkmerge:$dir") { tmp =>
-      val slice = Tables.embeddings(s, dir)
-        .filter(col("vec_id") =!= 0 && col("vec_id") % 50 === 1)
-      val idx = VectorOps.ivfIndexDeterministic(slice, "vec_id",
-        "embedding", nCentroids = 2)
-      val path = tmp.resolve("checkmerge").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1,
-        VectorOps.listIndexFiles(s, path), Map("op" -> "append"))
+      val sliceRows = col("vec_id") % 50 === 1
+      val slice = Tables.corpus(s, dir).filter(sliceRows)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "checkmerge",
+        sliceRows, k = 2, v1 = Some(Map("op" -> "append")))
       VectorOps.setTableChecks(s, path, 1, 2, Seq(
         "id_positive" -> "vec_id > 0",
         "vec_64d" -> "size(embedding) = 64"))
@@ -5050,7 +4943,7 @@ object Curation {
       val refused =
         try {
           VectorOps.ivfMerge(s, path, 2, 3, bad, lit(false),
-            idx.centroids, "vec_id", "embedding")
+            centroids, "vec_id", "embedding")
           false
         } catch { case _: IllegalStateException => true }
       val refusedCleanly = refused && !VectorOps.manifestExists(s, path, 3)
@@ -5064,7 +4957,7 @@ object Curation {
       // (unmatched ∧ delete is a no-op, which would flip n_ins to 0)
       val res = VectorOps.ivfMerge(s, path, 2, 3, src,
         col("vec_id") % 7 === 2 && col("vec_id") <= mx,
-        idx.centroids, "vec_id", "embedding")
+        centroids, "vec_id", "embedding")
       (path, refusedCleanly, (res._1, res._2, res._3, res._4))
     }
 
@@ -5125,14 +5018,11 @@ object Curation {
                                   dir: String)
       : (String, (Int, Long, Long, Long)) =
     Staging.cached(s"mergeidx:$dir") { tmp =>
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
-      val base = emb.filter(col("vec_id") % 4 =!= 0)
-      val idx = VectorOps.ivfIndexDeterministic(base, "vec_id", "embedding",
-        nCentroids = 8)
-      val path = tmp.resolve("mergeidx").toString
-      VectorOps.ivfWrite(idx, path)
-      VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path),
-        Map("op" -> "append"))
+      val emb = Tables.corpus(s, dir)
+      val baseRows = col("vec_id") % 4 =!= 0
+      val base = emb.filter(baseRows)
+      val (path, centroids) = Fixtures.baseIndex(s, dir, tmp, "mergeidx",
+        baseRows, v1 = Some(Map("op" -> "append")))
       VectorOps.commitDeletes(s, path, 1, 2,
         base.filter(col("vec_id") % 9 === 2).select(col("vec_id")))
       val source = emb
@@ -5142,7 +5032,7 @@ object Curation {
             transform(col("embedding"), x => x + lit(1.0f)))
             .otherwise(col("embedding")).as("embedding"))
       val res = VectorOps.ivfMerge(s, path, 2, 3, source,
-        col("vec_id") % 6 === 3, idx.centroids, "vec_id", "embedding")
+        col("vec_id") % 6 === 3, centroids, "vec_id", "embedding")
       (path, res)
     }
 
@@ -5175,7 +5065,7 @@ object Curation {
     */
   private val indexMergeQ: Q = (s, dir) => {
     val (path, res) = stageMerge(s, dir)
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val emb = Tables.corpus(s, dir)
     val expectKeep = emb.filter(col("vec_id") % 4 =!= 0 &&
         col("vec_id") % 9 =!= 2 &&
         col("vec_id") % 6 =!= 1 && col("vec_id") % 6 =!= 3)
@@ -5186,7 +5076,7 @@ object Curation {
     val expected = expectKeep.unionByName(expectUps)
     val v3 = VectorOps.readIndexVersionMor(s, path, 3, "vec_id")
       .select(col("vec_id"), col("embedding"))
-    val nDiff = v3.exceptAll(expected).unionByName(expected.exceptAll(v3))
+    val nDiff = mismatches(v3, expected)
       .agg(count(lit(1)).as("n_diff"))
     val nPinned = VectorOps.readIndexVersionMor(s, path, 2, "vec_id")
       .agg(count(lit(1)).as("n_pinned"))

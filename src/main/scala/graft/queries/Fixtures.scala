@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.Tables
+import graft.ops.{Staging, VectorOps}
 
 /** Untimed priming of the EXPENSIVE staged fixtures (the written
   * vector indexes) for Bench warmup.
@@ -22,9 +25,53 @@ import org.apache.spark.sql.SparkSession
   * Each stager runs in its OWN try (the ADVICE-r8 primeProbeGuard
   * lesson: one shared try means the first failure silently skips the
   * rest): a failed prime logs loudly and the query's first timed rep
-  * re-stages — degraded, never wrong.
+  * re-stages — degraded, never wrong. Each stager's wall seconds are
+  * returned, and Bench records them (`prime_s`).
+  *
+  * The index stagers share one base-index step: [[quantizer]] trains
+  * each deterministic IVF model once per (dir, slice, k) and JVM (31
+  * stagers, 13 distinct models), and [[baseIndex]] writes it and commits
+  * v1. Each scenario still writes its own base index, since scenarios
+  * expose file counts and DV positions.
   */
 object Fixtures {
+
+  /** The deterministic IVF quantizer of the corpus rows `slice` admits
+    * ([[graft.Tables.corpus]]), with `k` centroids. The model is
+    * bit-identical at any parallelism, so its centroids are trained once
+    * per JVM ([[VectorOps.ivfIndexDeterministic]]) and memoized under
+    * `ivfmodel:<dir>:<slice SQL>:<k>`: every index fixture on the same
+    * slice shares that one training. `assigned` is the slice with
+    * [[VectorOps.ivfAssign]] under those centroids, the expression a fresh
+    * build ends with, so what a caller writes from it is what a fresh
+    * build would write. `lit(true)` slices the whole corpus.
+    */
+  def quantizer(s: SparkSession, dir: String, slice: Column,
+                k: Int = 8): VectorOps.IvfIndex = {
+    val rows = Tables.corpus(s, dir).filter(slice)
+    val centroids = Staging.cached(s"ivfmodel:$dir:$slice:$k") { _ =>
+      VectorOps.ivfIndexDeterministic(rows, "vec_id", "embedding", k).centroids
+    }
+    VectorOps.IvfIndex(
+      rows.withColumn("centroid", VectorOps.ivfAssign(col("embedding"), centroids)),
+      centroids)
+  }
+
+  /** The base index of an index fixture: [[quantizer]]'s rows written
+    * `partitionBy(centroid)` under `tmp/name` ([[VectorOps.ivfWrite]]),
+    * then committed as manifest v1 with exactly the `v1` headers, if the
+    * caller passes them. Returns (path, centroids).
+    */
+  def baseIndex(s: SparkSession, dir: String, tmp: java.nio.file.Path,
+                name: String, slice: Column, k: Int = 8,
+                v1: Option[Map[String, String]] = None)
+      : (String, Array[Array[Double]]) = {
+    val idx = quantizer(s, dir, slice, k)
+    val path = tmp.resolve(name).toString
+    VectorOps.ivfWrite(idx, path)
+    v1.foreach(VectorOps.writeManifest(s, path, 1, VectorOps.listIndexFiles(s, path), _))
+    (path, idx.centroids)
+  }
 
   /** (label, stager) for every fixture whose build is heavy enough to
     * threaten a rep watchdog. Cheap dir stagers (csv/json/orc/text
@@ -130,9 +177,12 @@ object Fixtures {
     "renameidx",                     // zero-copy clone + metadata rename
                                      // (its heavy dependency 'timetravel'
                                      // is primed separately)
-    "localize")                      // clone + one fixture-sized byte copy
+    "localize",                      // clone + one fixture-sized byte copy
                                      // + binpack (heavy dep 'clustered'
                                      // primed separately)
+    "ivfmodel")                      // the quantizer memo: only primed
+                                     // stagers reach it, so priming
+                                     // trains every model
 
   /** Names of the primed fixtures, in prime order (tested: every heavy
     * index stager must be listed here or its first timed rep pays the
@@ -140,14 +190,17 @@ object Fixtures {
   def primedFixtureNames: Seq[String] = heavy.map(_._1)
 
   /** Build every heavy index fixture now, on the caller's (untimed)
-    * clock. Failures are per-stager, loud, and non-fatal. */
-  def primeIndexFixtures(s: SparkSession, dir: String): Unit =
-    heavy.foreach { case (label, stage) =>
+    * clock. Failures are per-stager, loud, and non-fatal. Returns each
+    * label's wall seconds, in prime order (a failed stager's included). */
+  def primeIndexFixtures(s: SparkSession, dir: String): Seq[(String, Double)] =
+    heavy.map { case (label, stage) =>
+      val t0 = System.nanoTime()
       try stage(s, dir)
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] fixture prime '$label' failed — " +
             s"its first timed rep will re-stage under the watchdog: $e")
       }
+      label -> (System.nanoTime() - t0) / 1e9
     }
 }

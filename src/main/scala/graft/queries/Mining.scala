@@ -1168,7 +1168,7 @@ object Mining {
     * 100 drops to 7/10 once the corpus quadruples (sf0.1).
     */
   private val annPqQ: Q = (s, dir) => {
-    val base = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val base = Tables.corpus(s, dir)
     val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val model = VectorOps.pqTrain(base, "vec_id", "embedding",
@@ -1296,7 +1296,7 @@ object Mining {
     */
   private val annIvfPqQ: Q = (s, dir) => {
     val (path, centroids, model) = stageIvfPq(s, dir)
-    val base = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val base = Tables.corpus(s, dir)
     val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val probes = VectorOps.nearestCentroids(centroids, qv, nProbe = 7)

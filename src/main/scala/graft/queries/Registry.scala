@@ -396,7 +396,7 @@ object Registry {
     */
   private val cosineTopk: Q = (s, dir) => {
     VectorOps.cosineTopK(
-      Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+      Tables.corpus(s, dir),
       "vec_id", "embedding", queryVec(s, dir), 10)
   }
   private val cosineTopkSql =
@@ -410,7 +410,7 @@ object Registry {
     */
   private val vectorRetrieve: Q = (s, dir) => {
     val topk = VectorOps.cosineTopK(
-      Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+      Tables.corpus(s, dir),
       "vec_id", "embedding", queryVec(s, dir), 10)
     topk.join(Tables.documents(s, dir), col("vec_id") === col("doc_id"))
       .select(col("vec_id"), col("score"), col("lang"), col("source"), col("n_chars"))
@@ -486,7 +486,7 @@ object Registry {
     * of the corpus.
     */
   private val annTopk: Q = (s, dir) => {
-    val base = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)
+    val base = Tables.corpus(s, dir)
     val qv = queryVec(s, dir)
     val ann = VectorOps.annTopK(base, "vec_id", "embedding", qv,
       k = 10, dim = 64, nBits = 8, tables = 16)
@@ -505,19 +505,15 @@ object Registry {
     */
   private[queries] def stageIvf(s: SparkSession, dir: String): (String, Array[Array[Double]]) =
     Staging.cached(s"ivf:$dir") { tmp =>
-      // ivfIndexDeterministic, NOT Spark ML KMeans: k-means|| init samples
+      // the deterministic quantizer (Fixtures.quantizer, trained by
+      // ivfIndexDeterministic), NOT Spark ML KMeans: k-means|| init samples
       // depend on partitioning, so ML-trained cells differ per session
       // shape — which flipped downstream recall booleans (r10: sf0.001
       // recall_ge_06 measured under one environment, failed under
       // another). The deterministic Lloyd builder pins the centroids at
       // any parallelism; every recall/pruning threshold downstream is now
       // a constant of the fixture, not of the box.
-      val idx = VectorOps.ivfIndexDeterministic(
-        Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", nCentroids = 8)
-      val path = tmp.resolve("index").toString
-      VectorOps.ivfWrite(idx, path)
-      (path, idx.centroids)
+      Fixtures.baseIndex(s, dir, tmp, "index", lit(true))
     }
   // 7-of-8 probes: isotropic fixture vectors spread true neighbors nearly
   // uniformly over cells (recall ≈ probed fraction; ≥ 0.8 needs ≥ 7
@@ -534,7 +530,7 @@ object Registry {
     val qv = queryVec(s, dir)
     val ivf = VectorOps.ivfTopKFromPath(s, path, centroids, "vec_id",
       "embedding", qv, k = 10, nProbe = 7)
-    VectorOps.cosineTopK(Tables.embeddings(s, dir).filter(col("vec_id") =!= 0),
+    VectorOps.cosineTopK(Tables.corpus(s, dir),
         "vec_id", "embedding", qv, 10)
       .join(ivf.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))

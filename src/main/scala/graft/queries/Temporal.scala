@@ -291,8 +291,7 @@ object Temporal {
     // parity on the hub-free slice: exact row equality, both directions
     val cappedHf = aaCappedTop(eb, 64, 20).transform(Staging.materialize)
     val uncappedHf = aaTop(eb, 20).transform(Staging.materialize)
-    val parity = cappedHf.exceptAll(uncappedHf)
-      .unionByName(uncappedHf.exceptAll(cappedHf)).isEmpty
+    val parity = Curation.mismatches(cappedHf, uncappedHf).isEmpty
     val degh = eh.select(col("u").as("w")).unionByName(
         eh.select(col("v").as("w")))
       .groupBy(col("w")).agg(count(lit(1)).as("deg"))

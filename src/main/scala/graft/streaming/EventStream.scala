@@ -23,7 +23,14 @@ object EventStream {
     * environmental stall into a lost whole-run bench artifact (r4).
     */
   val DrainTimeoutMs: Long =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_TIMEOUT_MS", "120000").toLong
+    drainTimeoutMs(sys.env.get("SPARK_GRAFT_STREAM_TIMEOUT_MS"))
+
+  /** `SPARK_GRAFT_STREAM_TIMEOUT_MS` parsed: unset means 120 s; anything
+    * but a positive whole number of milliseconds is refused by name. */
+  private[graft] def drainTimeoutMs(value: Option[String]): Long =
+    value.fold(120000L)(v => v.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_TIMEOUT_MS='$v' must be a positive number of milliseconds")))
 
   /** Await an AvailableNow drain with a hard timeout: on expiry the query
     * is stopped (releasing its state stores) and a loud exception names

@@ -247,6 +247,29 @@ class BenchSpec extends SparkSpec {
     assert(cpuMs.contains("q_cpu") && cpuMs("q_cpu") > 0, cpuMs.toString)
   }
 
+  test("fixture priming rides the summary: prime_s is the total and " +
+      "prime_s_by_fixture each fixture's wall seconds") {
+    val line = Bench.summaryLine(Seq("q_a" -> 1.0), Map.empty, Map.empty,
+      "/d/sf0.1", prime = Some(Seq("ivf" -> 1.25, "lifecycle" -> 2.5)))
+    assert(line.contains(""""prime_s":3.75,"prime_s_by_fixture":{"ivf":1.25,"lifecycle":2.5}"""), line)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("prime_s").asDouble() == 3.75, line)
+    // a run that skipped priming carries no field
+    assert(!Bench.summaryLine(Seq("q_a" -> 1.0), Map.empty, Map.empty,
+      "/d/sf0.1").contains("prime_s"))
+  }
+
+  test("SPARK_GRAFT_BENCH_SKIP_PRIME accepts only 0 or 1") {
+    assert(!Bench.skipPrimeFlag(None))
+    assert(!Bench.skipPrimeFlag(Some("0")))
+    assert(Bench.skipPrimeFlag(Some("1")))
+    for (v <- Seq("true", "yes", "", " 1", "2")) {
+      val e = intercept[IllegalArgumentException](Bench.skipPrimeFlag(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_SKIP_PRIME") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("gc_ms_by_query: only GC-heavy queries ride the summary") {
     val line = Bench.summaryLine(Seq("q_a" -> 1.0), Map.empty, Map.empty,
       "/d/sf0.1", gcMsByQuery = Map("q_a" -> 1200L, "q_b" -> 30L))

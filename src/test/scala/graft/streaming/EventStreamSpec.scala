@@ -127,6 +127,18 @@ class EventStreamSpec extends SparkSpec {
     assert(!q.isActive, "awaitDrain must stop the wedged query")
   }
 
+  test("SPARK_GRAFT_STREAM_TIMEOUT_MS: unset is 120 s, a positive number " +
+      "is taken, anything else is refused by name") {
+    assert(EventStream.drainTimeoutMs(None) == 120000L)
+    assert(EventStream.drainTimeoutMs(Some("1500")) == 1500L)
+    for (v <- Seq("abc", "", "0", "-5", "1.5", "12s")) {
+      val e = intercept[IllegalArgumentException](
+        EventStream.drainTimeoutMs(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_TIMEOUT_MS") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("runStreamDedup removes cross-batch duplicates (first arrival wins)") {
     val sf = "/root/testdata/sf0.001"
     // duplicate the whole fixture across two files = two micro-batches
