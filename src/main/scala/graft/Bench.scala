@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: every registry query against
@@ -257,34 +257,23 @@ object Bench {
     */
   private[graft] def parseHistoryMedians(lines: Seq[String],
                                          sfDir: String,
-                                         lastN: Int = 6): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val perRun: Seq[Seq[(String, Double)]] = lines.flatMap { l =>
-      try {
-        val n = mapper.readTree(l)
-        if (n.path("sf").asText() == sfDir && n.has("queries"))
-          Some(n.get("queries").properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble())
-            .filter(_._2 > 0).toSeq)
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+                                         lastN: Int = 6): Map[String, Double] =
     // window to the LAST lastN runs (r8 verdict item 6): medians pooled
     // over all history never age out — after a genuine algorithmic
     // improvement a stale slow median keeps the retry rule blind to
     // regressions of the improved query
-    perRun.takeRight(lastN).flatten.groupBy(_._1).map { case (k, vs) =>
-      val s = vs.map(_._2).sorted
-      val med =
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      k -> med
-    }
-  }
+    parseHistoryRuns(lines).collect { case (sf, qs) if sf == sfDir => qs }
+      .takeRight(lastN).flatten.groupBy(_._1).map { case (k, vs) =>
+        val s = vs.map(_._2).sorted
+        val med =
+          if (s.size % 2 == 1) s(s.size / 2)
+          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+        k -> med
+      }
 
   /** Every parseable history run as (sfDir, per-query seconds), in file
-    * order. Shared by the scaling baseline and the exponent fit. */
+    * order. Shared by the outlier medians, the scaling baseline and the
+    * exponent fit. */
   private[graft] def parseHistoryRuns(lines: Seq[String])
       : Seq[(String, Map[String, Double])] = {
     import scala.jdk.CollectionConverters._
@@ -821,16 +810,18 @@ object Bench {
     // per-rep times included — so the artifact shows what was
     // re-measured, why, and what each re-measurement actually said.
     val retried = scala.collection.mutable.LinkedHashMap[String, RetryRecord]()
-    val medians =
+    // prior runs, read once for the outlier medians and the scaling audit
+    val historyPath = java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"))
+    val history: Option[Seq[String]] =
       try {
-        val p = java.nio.file.Paths.get(sys.env.getOrElse(
-          "SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"))
-        if (java.nio.file.Files.exists(p)) {
+        if (java.nio.file.Files.exists(historyPath)) {
           import scala.jdk.CollectionConverters._
-          parseHistoryMedians(
-            java.nio.file.Files.readAllLines(p).asScala.toSeq, sfDir)
-        } else Map.empty[String, Double]
-      } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
+          Some(java.nio.file.Files.readAllLines(historyPath).asScala.toSeq)
+        } else None
+      } catch { case scala.util.control.NonFatal(_) => None }
+    val medians = history.fold(Map.empty[String, Double])(
+      parseHistoryMedians(_, sfDir))
     val finalResults = if (args.nonEmpty) results else {
       val toRetry = outliersToRetry(results, medians)
       if (toRetry.isEmpty) results
@@ -892,17 +883,8 @@ object Bench {
     // history run at a smaller SF, superlinear queries flagged
     val scaling =
       if (args.nonEmpty) None
-      else try {
-        val p = java.nio.file.Paths.get(sys.env.getOrElse(
-          "SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"))
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
-          scalingBlock(recoveredResults, sfDir,
-            parseHistoryOtherSf(lines, sfDir),
-            parseHistorySfPoints(lines, sfDir))
-        } else None
-      } catch { case scala.util.control.NonFatal(_) => None }
+      else history.flatMap(lines => scalingBlock(recoveredResults, sfDir,
+        parseHistoryOtherSf(lines, sfDir), parseHistorySfPoints(lines, sfDir)))
     val line = summaryLine(recoveredResults, finalErrors, absorbed, sfDir,
       sentFirst.zip(sentLast),
       Some(s"""{"start":$jvmStart,"end":${jvmSnapshot()}}"""),
@@ -918,9 +900,7 @@ object Bench {
     // first, which made r6's run-to-run variance unauditable. The JSONL
     // keeps every full-registry run, in order, across rounds.
     if (args.isEmpty)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(sys.env.getOrElse(
-          "SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl")),
+      try java.nio.file.Files.write(historyPath,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)

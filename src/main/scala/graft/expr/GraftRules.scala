@@ -106,7 +106,7 @@ object GraftRules {
       else rewrite(plan)
 
     private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-      case f @ Filter(cond,
+      case Filter(cond,
           Window(Seq(alias @ Alias(
             WindowExpression(_: RowNumber, WindowSpecDefinition(part, order, _)),
             rnName)), _, _, rawChild, _))

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Exact top-k aggregate (SURVEY §7.6's optional TypedImperativeAggregate

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -11,30 +10,17 @@ import org.apache.spark.sql.types.DecimalType
   * (`usda_branded_food_data_pipeline.py:68-69`: sort by (gtin_upc asc,
   * fdc_id desc), keep first per gtin_upc == keep max fdc_id per key).
   *
-  * Scale notes: both forms are a single hash shuffle on the key columns.
-  * `latestPerKey` uses a window `row_number`; at 100 TB prefer the
-  * `max_by`-aggregate form (`latestPerKeyAgg`) when only a bounded set of
-  * payload columns is needed — it map-side combines, the window form does
-  * a full sort within partitions.
+  * Scale notes: [[latestPerKeyAgg]] is a `max_by` hash aggregate — one
+  * shuffle on the key columns with a map-side combine, where a window
+  * `row_number` form would sort every partition. The window form is kept
+  * only as the test-side reference it is compared against.
   */
 object Dedup {
 
-  /** Keep the single row per key that maximizes `orderCol` (deterministic,
-    * unlike `dropDuplicates`). Ties broken by the tieBreaker columns.
-    */
-  def latestPerKey(df: DataFrame, keys: Seq[String], orderCol: String,
-                   tieBreakers: Seq[Column] = Nil): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(orderCol).desc +: tieBreakers: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** Aggregate form: keeps (key, max-by payload) with map-side combine —
-    * a hash aggregate instead of the window form's shuffle+sort, so it's
-    * the preferred shape at scale. `orderCols` is the lexicographic
-    * keep-rule (struct comparison), same as the window form's ORDER BY.
+  /** Keep the single row per key that maximizes `orderCols` — the
+    * lexicographic keep-rule (struct comparison); deterministic, unlike
+    * `dropDuplicates`, whenever `orderCols` is unique within a key — as a
+    * `max_by` hash aggregate: (key, max-by payload) with map-side combine.
     */
   def latestPerKeyAgg(df: DataFrame, keys: Seq[String],
                       orderCols: Seq[Column]): DataFrame = {

@@ -59,14 +59,6 @@ object Layout {
       s"END AS BIGINT)"
   }
 
-  /** De-interleave: recover dimension 0 (or 1) from a z-value — the
-    * round-trip inverse used by the layout invariant tests.
-    */
-  def unInterleave(z: Column, dim: Int, bits: Int): Column =
-    (0 until bits).map { i =>
-      shiftright(z.bitwiseAND(lit(1L << (2 * i + dim))), i + dim)
-    }.reduce(_ bitwiseOR _)
-
   /** Hilbert-curve index of a quantized (x, y) cell (the xy2d walk —
     * public-domain standard formulation, e.g. Hamilton, CMU-CS-06-101):
     * like [[zValue]] it linearizes two dimensions for layout, but with

@@ -475,41 +475,6 @@ object Multimodal {
             (s.cast("double") / total.cast("double")).cast("float")))
         }.as("features"))
 
-  /** Byte-offset frame sampling (no decode): deterministic offsets into
-    * the raw stream — the cheap shape for formats without an index.
-    */
-  def sampleFrames(df: DataFrame, idCol: String, contentCol: String,
-                   nFrames: Int = 4): DataFrame = {
-    df.select(col(idCol), col(contentCol),
-        length(col(contentCol)).as("n_bytes"))
-      .withColumn("frame_idx", explode(sequence(lit(0), lit(nFrames - 1))))
-      .withColumn("frame_offset",
-        (col("frame_idx") * col("n_bytes") / nFrames).cast(LongType))
-      .withColumn("frame_byte", // one sampled byte per "frame"
-        col(contentCol).substr(col("frame_offset").cast("int") + 1, lit(1)))
-      .drop(contentCol)
-  }
-
-  /** Pools a feature histogram down to `outDim` bins (adjacent-bin sums —
-    * mass-preserving, like area-averaging an image down). The column
-    * contract — array in, smaller array out — is what downstream sees.
-    */
-  def resizeFeatures(df: DataFrame, featuresCol: String, outDim: Int,
-                     outCol: String = "features_resized"): DataFrame = {
-    val inSize = size(col(featuresCol))
-    // integer bin width; the LAST bin absorbs the remainder so every
-    // source element is pooled exactly once (mass conservation holds for
-    // any inSize >= outDim, not just exact multiples)
-    val factor = floor(inSize / lit(outDim)).cast("int")
-    df.withColumn(outCol,
-      transform(sequence(lit(0), lit(outDim - 1)), b =>
-        aggregate(
-          slice(col(featuresCol), b * factor + 1,
-            when(b === outDim - 1, inSize - factor * (outDim - 1))
-              .otherwise(factor)),
-          lit(0.0f), (acc, x) => acc + x)))
-  }
-
   /** Media table with REAL PNG payloads, one per document id: content is
     * `synthPng(doc_id)` (encoded on executors, partition-batched), meta
     * carries the true decoded dimensions.

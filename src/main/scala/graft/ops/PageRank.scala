@@ -127,7 +127,7 @@ object PageRank {
       .write.bucketBy(buckets, "node").sortBy("node")
       .mode("overwrite").saveAsTable(cur)
     tagStaged(spark, cur)
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       // alternate between two iteration tables: the write target is
       // always a table no live read depends on
       val next = s"${namePrefix}_rank_${if (cur.endsWith("_1")) 2 else 1}"

@@ -29,33 +29,6 @@ object Sampling {
   def exactSample(df: DataFrame, n: Int, seed: Long = 42L): DataFrame =
     df.orderBy(rand(seed)).limit(n)
 
-  /** Exact-N sample with a scale path. The plain form's
-    * TakeOrderedAndProject holds an N-row heap per partition and merges
-    * P·N rows in one task — fine for small N, hostile for N in the
-    * millions. Past `directLimit`, switch to filter-then-sort: keep only
-    * rows whose rand() falls below an oversampled cutoff
-    * (n/total · oversample — map-side, no heap), then take the n smallest
-    * within that sliver. Both paths select exactly the n globally
-    * smallest rand values, so results are IDENTICAL (property-tested);
-    * the filter is a Chernoff bound away from ever under-producing, and
-    * a count-check falls back to the direct path if it somehow does.
-    * Costs one extra count() pass — the price of bounding executor
-    * memory at scale.
-    */
-  def exactSampleScalable(df: DataFrame, n: Int, seed: Long = 42L,
-                          directLimit: Int = 100000,
-                          oversample: Double = 4.0): DataFrame = {
-    if (n <= directLimit) return exactSample(df, n, seed)
-    val total = df.count()
-    if (n >= total) return df
-    val cutoff = math.min(1.0, (n.toDouble / total) * oversample)
-    val sliver = df.withColumn("__r", rand(seed)).filter(col("__r") < cutoff)
-    val picked =
-      if (sliver.count() >= n) sliver.orderBy(col("__r")).limit(n)
-      else df.withColumn("__r", rand(seed)).orderBy(col("__r")).limit(n)
-    picked.drop("__r")
-  }
-
   /** Null-safe hash key: concat_ws SKIPS nulls, so ('a', null, 'b') and
     * ('a', 'b') would hash identically; coalescing every key to a NUL
     * sentinel keeps distinct key tuples distinct. For non-null keys the

@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
   * language-ID, quality scoring, token counting, fingerprinting, MinHash/
   * SimHash/n-gram-Jaccard near-dup).
   *
-  * Everything is Catalyst higher-order-function expressions — per-row
-  * linear work, no UDFs, no shuffle until an explicit groupBy/join. The
-  * LSH paths are the 100 TB story: candidate generation is an equi-join
-  * on (band, band-hash), never an O(n²) cross product.
+  * Everything is Catalyst expressions — built-in higher-order functions
+  * or compiled custom kernels (`graft.expr`) — per-row linear work, no
+  * UDFs, no shuffle until an explicit groupBy/join. The composed-builtins
+  * forms each kernel is parity-tested against live test-side
+  * (`graft.ops.ReferenceForms`). The LSH paths are the 100 TB story:
+  * candidate generation is an equi-join on (band, band-hash), never an
+  * O(n²) cross product.
   */
 object TextOps {
 
@@ -79,47 +82,6 @@ object TextOps {
     GraftShim.column(graft.expr.LangId(GraftShim.expression(tokens(lower(c)))))
   }
 
-  /** Composed-builtins formulation — kept as the reference the custom
-    * expression is parity-tested against.
-    */
-  def langIdHof(c: Column): Column =
-    bind(array_distinct(tokens(lower(c)))) { toks =>
-      val scored = stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
-        struct(size(array_intersect(toks, typedLit(words))).as("score"),
-          lit(lang).as("lang"))
-      }
-      val best = greatest(scored: _*)
-      when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-    }
-
-  /** Character trigrams of a string (the n-gram alternative to token
-    * features): `"abcd"` → `["abc","bcd"]`.
-    */
-  def charTrigrams(c: Column): Column =
-    bind(c) { s =>
-      when(length(s) < 3, array(s))
-        .otherwise(transform(sequence(lit(1), length(s) - 2),
-          i => s.substr(i, lit(3))))
-    }
-
-  /** Language-ID via character n-gram profiles — the classic heuristic
-    * when token-level stopwords are unreliable (agglutinative languages,
-    * no spaces). Profile = trigram set of the language's stopword list;
-    * same argmax/tie rules as [[langId]].
-    */
-  def charNgramLangId(c: Column): Column = {
-    def trigramsOf(words: Seq[String]): Seq[String] =
-      words.flatMap(w => ("  " + w + "  ").sliding(3)).distinct
-    bind(array_distinct(charTrigrams(lower(c)))) { tris =>
-      val scored = stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
-        struct(size(array_intersect(tris, typedLit(trigramsOf(words)))).as("score"),
-          lit(lang).as("lang"))
-      }
-      val best = greatest(scored: _*)
-      when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-    }
-  }
-
   /** Integer-exact quality points (the oracle-safe scoring used by BOTH
     * q_quality_score and q_corpus_pipeline — one definition so the
     * per-stage query and the end-to-end pipeline can't drift): length
@@ -151,44 +113,15 @@ object TextOps {
   /** Content fingerprint (md5 — stable across engines, so oracle-able). */
   def fingerprint(c: Column): Column = md5(c.cast("binary"))
 
-  /** Polynomial rolling hash over tokens (order-sensitive fingerprint;
-    * engine-local — use `fingerprint` when oracle parity is needed).
-    * Modular arithmetic keeps the accumulator bounded — a raw long
-    * multiply overflows under ANSI mode.
-    */
-  def rollingHash(c: Column): Column = {
-    val p = lit(1000000007L)
-    aggregate(tokens(c), lit(0L),
-      (acc, t) => pmod(acc * lit(1000003L) + pmod(xxhash64(t), p), p))
-  }
-
   /** Word n-gram shingles: `["a b c", "b c d", ...]` — one compiled pass
-    * over the token array ([[graft.expr.WordGrams]]; the HOF form below
-    * pays an interpreted slice+concat per window). Documents shorter
+    * over the token array ([[graft.expr.WordGrams]]; the HOF form pays
+    * an interpreted slice+concat per window). Documents shorter
     * than `n` yield the single whole-document gram, as before.
     */
   def shingles(c: Column, n: Int): Column = {
     import org.apache.spark.sql.graftshim.GraftShim
     GraftShim.column(graft.expr.WordGrams(GraftShim.expression(tokens(c)), n))
   }
-
-  /** Composed-builtins formulation — kept as the reference
-    * [[shingles]]'s compiled kernel is parity-tested against.
-    */
-  def shinglesHof(c: Column, n: Int): Column =
-    bind(tokens(c)) { toks =>
-      when(size(toks) < n, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-    }
-
-  /** Jaccard similarity of two token-set columns — composed-builtins
-    * form, kept as the reference [[jaccardSets]]'s compiled kernel is
-    * parity-tested against.
-    */
-  def jaccardHof(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
 
   /** Jaccard similarity of two element-DISTINCT (set) array<string>
     * columns — one compiled hash-set build per pair instead of
@@ -222,16 +155,6 @@ object TextOps {
     GraftShim.column(
       graft.expr.MinHashSig(GraftShim.expression(shinglesCol), k))
   }
-
-  /** Composed-builtins formulation — kept as the reference
-    * [[minHashSignature]]'s custom expression is parity-tested against
-    * (k full byte-hashes per element vs the kernel's one).
-    */
-  def minHashSignatureHof(shinglesCol: Column, k: Int): Column =
-    bind(shinglesCol) { sh =>
-      transform(sequence(lit(0), lit(k - 1)),
-        s => array_min(transform(sh, x => xxhash64(x, s))))
-    }
 
   /** LSH band keys from a MinHash signature: `bands` groups of `rowsPerBand`
     * signature entries, each hashed to one bucket key. Documents sharing
@@ -623,10 +546,6 @@ object TextOps {
     }
     cur
   }
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** End-to-end MinHash-LSH near-dup candidate pairs over a corpus,
     * verified by exact shingle-Jaccard >= `threshold`.

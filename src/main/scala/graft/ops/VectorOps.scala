@@ -48,15 +48,6 @@ object VectorOps {
     GraftShim.column(graft.expr.L2Squared(
       GraftShim.expression(a), GraftShim.expression(b)))
 
-  /** The same fold expressed only with built-ins — kept as the reference
-    * formulation the kernel is parity-tested against.
-    */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
-        (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
-
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** L2-normalize a vector (divide by its norm; zero vectors pass
@@ -348,20 +339,6 @@ object VectorOps {
     GraftShim.column(graft.expr.NearestCode(
       GraftShim.expression(vecCol),
       centroids.map(_.toSeq).toSeq))
-
-  /** The HOF formulation [[ivfAssign]]'s compiled kernel is parity-tested
-    * against (PqKernelsSpec): k interpreted lambda folds + a k-wide
-    * distance array per row vs one compiled argmin loop.
-    */
-  def ivfAssignHof(vecCol: Column, centroids: Array[Array[Double]]): Column = {
-    val lit2 = typedLit(centroids.map(_.toSeq).toSeq)
-    val dists = transform(sequence(lit(0), lit(centroids.length - 1)), ci =>
-      aggregate(
-        zip_with(vecCol, element_at(lit2, ci + 1),
-          (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-        lit(0.0), (acc, x) => acc + x))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
 
   /** The nProbe nearest centroid indexes of each ROW's vector, as a pure
     * column expression — [[nearestCentroids]] is the driver-side form for
@@ -1506,8 +1483,7 @@ object VectorOps {
   def localizeClone(spark: org.apache.spark.sql.SparkSession, path: String,
                     fromVersion: Int, toVersion: Int): (Int, Int) = {
     import org.apache.hadoop.fs.{Path => HPath, FileUtil}
-    require(!manifestExists(spark, path, toVersion),
-      s"version $toVersion is already committed under $path")
+    refuseCommitted(spark, path, toVersion)
     val conf = spark.sparkContext.hadoopConfiguration
     val dstFs = new HPath(path).getFileSystem(conf)
     val from = snapshot(spark, path, fromVersion)
@@ -1596,8 +1572,7 @@ object VectorOps {
   def commitDeletes(spark: org.apache.spark.sql.SparkSession, path: String,
                     fromVersion: Int, toVersion: Int, ids: DataFrame,
                     meta: Map[String, String] = Map.empty): Unit = {
-    require(!manifestExists(spark, path, toVersion),
-      s"version $toVersion is already committed under $path")
+    refuseCommitted(spark, path, toVersion)
     val from = snapshot(spark, path, fromVersion)
     val pending = from.tombstones(spark)
       .map(d => d.select(col("vid")))
@@ -2009,8 +1984,7 @@ object VectorOps {
                       targetBytes: Long): (Int, Int, Int, Long) = {
     import org.apache.hadoop.fs.{Path => HPath}
     require(targetBytes > 0, "ivfCompactSmall: targetBytes must be > 0")
-    require(!manifestExists(spark, path, toVersion),
-      s"version $toVersion is already committed under $path")
+    refuseCommitted(spark, path, toVersion)
     val fs = new HPath(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val from = snapshot(spark, path, fromVersion)
@@ -3194,8 +3168,7 @@ object VectorOps {
                          path: String, fromVersion: Int, toVersion: Int,
                          rangeCol: String, numRanges: Int): (Int, Int) = {
     require(numRanges >= 1, "reclusterVersioned: numRanges must be >= 1")
-    require(!manifestExists(spark, path, toVersion),
-      s"version $toVersion is already committed under $path")
+    refuseCommitted(spark, path, toVersion)
     val from = snapshot(spark, path, fromVersion)
     requireLocalEntries(from.files, s"recluster to v$toVersion")
     // a recluster rewrites EVERY file, so a pending DV (keyed by file,
@@ -3514,8 +3487,7 @@ object VectorOps {
                            doomed: Column,
                            meta: Map[String, String] = Map.empty)
       : (Long, Long) = {
-    require(!manifestExists(spark, path, toVersion),
-      s"version $toVersion is already committed under $path")
+    refuseCommitted(spark, path, toVersion)
     val from = snapshot(spark, path, fromVersion)
     val files = from.files
     val fresh = scan(spark, from, files)

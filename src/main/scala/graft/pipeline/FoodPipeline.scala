@@ -2,8 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType}
-import graft.ops.{Cleaning, Dedup, Thresholds}
+import org.apache.spark.sql.types.StringType
+import graft.ops.{Cleaning, Dedup, PivotAgg, Thresholds}
 import graft.schema.Schemas
 
 /** The reference's batch ETL, re-expressed as ONE lazy Spark plan
@@ -29,19 +29,18 @@ object FoodPipeline {
     * +rename, string normalize, serving-size coercion + unit concat.
     */
   def cleanBranded(brandedFood: DataFrame): DataFrame = {
-    val deduped = Dedup.latestPerKey(brandedFood, Seq("gtin_upc"), "fdc_id")
-    val projected = deduped.select(
-      col("fdc_id").as("FOOD_RECORD_ID"),
-      col("gtin_upc").as("FOOD_ID"),
-      col("ingredients").as("FOOD_INGREDIENTS"),
-      col("serving_size"),
-      col("serving_size_unit"))
-    Cleaning.normalizeStrings(projected)
-      .withColumn("serving_size",
-        round(col("serving_size").try_cast(DoubleType), 2))
-      .withColumn("FOOD_SERVING_SIZE",
-        concat(col("serving_size").cast(StringType), lit(" "),
-          col("serving_size_unit")))
+    val deduped = Dedup.latestPerKeyAgg(brandedFood, Seq("gtin_upc"),
+      Seq(col("fdc_id")))
+    val projected = Cleaning.projectRename(deduped, Seq(
+      "fdc_id" -> "FOOD_RECORD_ID",
+      "gtin_upc" -> "FOOD_ID",
+      "ingredients" -> "FOOD_INGREDIENTS",
+      "serving_size" -> "serving_size",
+      "serving_size_unit" -> "serving_size_unit"))
+    val coerced = Cleaning.castCoerceDouble(
+      Cleaning.normalizeStrings(projected), "serving_size")
+    Cleaning.concatWithSep(coerced, "FOOD_SERVING_SIZE", "serving_size",
+        "serving_size_unit")
       .drop("serving_size", "serving_size_unit")
   }
 
@@ -82,9 +81,8 @@ object FoodPipeline {
         col("amount").as("NUTRIENT_QUANTITY"))
       .join(branded.select("FOOD_RECORD_ID"), Seq("FOOD_RECORD_ID"), "left_semi")
       .join(broadcast(nutrientDim), Seq("NUTRIENT_ID"))
-      .groupBy(col("FOOD_RECORD_ID"))
-      .pivot("NUTRIENT_LABEL", pivotLabels)
-      .agg(avg(col("NUTRIENT_QUANTITY")))
+      .transform(PivotAgg.pivotAvg(_, "FOOD_RECORD_ID", "NUTRIENT_LABEL",
+        "NUTRIENT_QUANTITY", pivotLabels))
   }
 
   /** `merge_dataframes` + cleanup + export shape (`:108-129,152-160`). */
@@ -97,10 +95,10 @@ object FoodPipeline {
     val filtered = Cleaning.dropNullRows(
       Cleaning.filterNotContains(cleaned, "FOOD_SERVING_SIZE", "IU"),
       Seq("FOOD_SERVING_SIZE"))
-    val tail = filtered.columns.diff(keyCols).sorted
-    filtered
-      .withColumn("FOOD_RECORD_ID", col("FOOD_RECORD_ID").cast(StringType))
-      .select((keyCols ++ tail).map(col): _*)
+    PivotAgg.reorderColumns(
+        filtered.withColumn("FOOD_RECORD_ID",
+          col("FOOD_RECORD_ID").cast(StringType)),
+        keyCols)
       .orderBy(col("FOOD_RECORD_ID"))
   }
 

@@ -264,8 +264,6 @@ object Nonparam {
     * (round 4, the q_grouped_quantiles contract).
     */
   private val gapQuantilesQ: Q = (s, dir) => {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
     val gaps = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts"), unix_micros(col("ts")).as("t"))

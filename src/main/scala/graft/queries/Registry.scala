@@ -847,8 +847,7 @@ object Registry {
     val wide = Tables.events(s, dir)
       .groupBy(col("user_id")).pivot("event_type", types)
       .agg(sum(col("value").cast(DecimalType(18, 2))).cast("double"))
-    val nullCount = types.map(t => when(col(t).isNull, 1).otherwise(0)).reduce(_ + _)
-    wide.select(col("user_id"), nullCount.as("null_count"))
+    wide.select(col("user_id"), PivotAgg.nullCount(wide.drop("user_id")))
       .orderBy(col("null_count").asc, col("user_id").asc)
       .limit(10)
   }
@@ -1444,9 +1443,9 @@ object Registry {
       |WHERE CAST(o_totalprice AS DECIMAL(18,2)) * n > total
       |ORDER BY o_orderkey""".stripMargin
 
-  /** Gap sessionization (batch form — integer epoch-µs math on both
-    * engines; the streaming flatMapGroupsWithState form is
-    * equivalence-tested in SessionizeSpec).
+  /** Gap sessionization (lag/cumsum window form — integer epoch-µs
+    * math on both engines; q_session_window is the built-in
+    * `session_window` form of the same session assignment).
     */
   private val sessionize: Q = (s, dir) =>
     graft.streaming.Sessionize.batchSessions(Tables.events(s, dir))
@@ -1463,11 +1462,10 @@ object Registry {
       |ORDER BY user_id, session_start_us""".stripMargin
 
   /** Built-in `session_window` (gap-based session aggregation as a
-    * native windowed groupBy) — complements the custom
-    * flatMapGroupsWithState sessionizer (q_sessionize): same session
-    * ASSIGNMENT, so the same lag/cumsum oracle applies; the output keeps
-    * session start (first event) and drops `window.end`, which
-    * session_window defines as last event + gap.
+    * native windowed groupBy) — complements the lag/cumsum sessionizer
+    * (q_sessionize): same session ASSIGNMENT, so the same lag/cumsum
+    * oracle applies; the output keeps session start (first event) and
+    * drops `window.end`, which session_window defines as last event + gap.
     */
   private val sessionWindowQ: Q = (s, dir) => {
     Tables.events(s, dir)
@@ -1688,8 +1686,7 @@ object Registry {
     * q_topk_order_limit, so it shares that oracle shape.
     */
   private val topkAgg: Q = (s, dir) => {
-    import graft.expr.{ScoredRow, TopKByScore}
-    import s.implicits._
+    import graft.expr.TopKByScore
     val topk = udaf(new TopKByScore(20))
     Tables.lineitem(s, dir)
       .agg(topk(

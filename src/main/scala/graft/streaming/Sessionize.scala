@@ -1,19 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
-/** Gap-based sessionization — the canonical custom-state streaming
-  * operator (builder-prompt §2.10 extension: `flatMapGroupsWithState`
-  * for state Spark's windowed aggs can't express).
+/** Gap-based sessionization as a lag/cumsum window (q_sessionize).
+  * The same session assignment as a native windowed groupBy is Spark's
+  * built-in `session_window` (q_session_window).
   *
-  * Both forms work in integer epoch-MICROSECONDS — the canonical `ts`
-  * resolution ([[graft.Tables.events]] normalizes every fixture
-  * generation's physical type to TIMESTAMP micros), so session bounds
-  * stay oracle-comparable across engines.
+  * Works in integer epoch-MICROSECONDS — the canonical `ts` resolution
+  * ([[graft.Tables.events]] normalizes every fixture generation's
+  * physical type to TIMESTAMP micros), so session bounds stay
+  * oracle-comparable across engines.
   */
 object Sessionize {
 
@@ -45,89 +44,5 @@ object Sessionize {
       .select(col("user_id"), col("session_start_us"), col("session_end_us"),
         col("n_events"), col("sum_value"))
       .orderBy(col("user_id"), col("session_start_us"))
-  }
-
-  /** `ts` carries the watermark through to the stateful operator (the
-    * analyzer requires the watermarked column to survive projection);
-    * `us` is the same instant as integer micros for the session math.
-    */
-  case class SessEvent(user_id: Long, us: Long, value: Double,
-                       ts: java.sql.Timestamp = null)
-  case class OpenSession(start: Long, last: Long, n: Long, sum: Double)
-  case class Session(user_id: Long, session_start_us: Long, session_end_us: Long,
-                     n_events: Long, sum_value: Double)
-
-  /** Per-user state transition: merge the batch's events (sorted) into
-    * the open session, emitting every session closed by a gap.
-    */
-  private[streaming] def advance(open: Option[OpenSession], sorted: Seq[SessEvent],
-                                 gapUs: Long): (Seq[(Long, OpenSession)], Option[OpenSession]) = {
-    var closed = Vector.empty[(Long, OpenSession)]
-    var cur = open
-    sorted.foreach { e =>
-      cur match {
-        case Some(s) if e.us - s.last <= gapUs =>
-          // a late-but-within-watermark event from a later micro-batch can
-          // precede the open session's bounds — extend, never shrink them
-          // (moving `last` backwards would re-arm the timeout early and
-          // mis-measure the next gap)
-          cur = Some(OpenSession(math.min(s.start, e.us), math.max(s.last, e.us),
-            s.n + 1, s.sum + e.value))
-        case Some(s) =>
-          closed :+= (e.user_id, s)
-          cur = Some(OpenSession(e.us, e.us, 1, e.value))
-        case None =>
-          cur = Some(OpenSession(e.us, e.us, 1, e.value))
-      }
-    }
-    (closed, cur)
-  }
-
-  /** Streaming form: file source → watermark → flatMapGroupsWithState
-    * with event-time timeout. Sessions close (and emit, Append mode)
-    * when a gap is observed in-stream OR when the watermark passes
-    * last-event + gap (state timeout) — state is bounded per active user.
-    */
-  def streamingSessions(spark: SparkSession, inputDir: String,
-                        gapUs: Long = DefaultGapUs,
-                        watermarkDelay: String = "10 minutes",
-                        queryName: String = "graft_sessions"): DataFrame = {
-    import spark.implicits._
-    val events = spark.readStream
-      .schema(EventStream.eventsRawSchema)
-      .parquet(inputDir)
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"),
-        col("ts"))
-      .as[SessEvent]
-
-    val sessions = events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, it: Iterator[SessEvent], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(user, s.start, s.last, s.n, s.sum))
-          } else {
-            val (closed, open) = advance(state.getOption, it.toSeq.sortBy(_.us), gapUs)
-            open match {
-              case Some(s) =>
-                state.update(s)
-                state.setTimeoutTimestamp(s.last / 1000 + gapUs / 1000)
-              case None => state.remove()
-            }
-            closed.iterator.map { case (u, s) => Session(u, s.start, s.last, s.n, s.sum) }
-          }
-      }
-
-    val q = sessions.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    EventStream.awaitDrain(q)
-    spark.table(queryName)
   }
 }

@@ -145,7 +145,9 @@ object GraftProperties extends Properties("graft") {
       val text = words.mkString(" ")
       val hs = Seq(text, text).toDF("t")
         .select(TextOps.simHash(col("t"))).collect().map(_.getLong(0))
-      hs(0) == hs(1)
+      val dist = Seq((hs(0), hs(1))).toDF("a", "b")
+        .select(ReferenceForms.hamming64(col("a"), col("b"))).head().getInt(0)
+      hs(0) == hs(1) && dist == 0
     }
   }
 

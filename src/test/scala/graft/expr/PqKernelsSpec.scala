@@ -1,7 +1,7 @@
 package graft.expr
 
 import graft.SparkSpec
-import graft.ops.VectorOps
+import graft.ops.{ReferenceForms, VectorOps}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
@@ -36,7 +36,7 @@ class PqKernelsSpec extends SparkSpec {
     val cents = synthCentroids(8, 64, 1)
     val rows = emb.select(col("vec_id"),
         VectorOps.ivfAssign(col("embedding"), cents).as("kern"),
-        VectorOps.ivfAssignHof(col("embedding"), cents).as("hof"))
+        ReferenceForms.ivfAssignHof(col("embedding"), cents).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getInt(1) == r.getInt(2), r.toString))
@@ -44,7 +44,7 @@ class PqKernelsSpec extends SparkSpec {
     val dup = Array(cents(3), cents(3), cents(1))
     val tied = emb.limit(50).select(
         VectorOps.ivfAssign(col("embedding"), dup).as("kern"),
-        VectorOps.ivfAssignHof(col("embedding"), dup).as("hof"))
+        ReferenceForms.ivfAssignHof(col("embedding"), dup).as("hof"))
       .collect()
     tied.foreach { r =>
       assert(r.getInt(0) == r.getInt(1))
@@ -109,7 +109,7 @@ class PqKernelsSpec extends SparkSpec {
     val qLit = typedLit(q.map(_.toDouble))
     val rows = emb.select(
         VectorOps.l2sq(col("embedding"), qLit).as("kern"),
-        VectorOps.l2sqHof(col("embedding"), qLit).as("hof"))
+        ReferenceForms.l2sqHof(col("embedding"), qLit).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r2 => assert(r2.getDouble(0) == r2.getDouble(1), r2.toString))

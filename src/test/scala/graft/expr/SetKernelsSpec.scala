@@ -1,7 +1,7 @@
 package graft.expr
 
 import graft.SparkSpec
-import graft.ops.TextOps
+import graft.ops.{ReferenceForms, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Bit-parity of the compiled set-intersection kernels against the
@@ -76,7 +76,7 @@ class SetKernelsSpec extends SparkSpec {
         col("id_b") === col("id_a") + 1)
     val rows = pairs.select(
         TextOps.jaccard(col("sa"), col("sb")).as("kern"),
-        TextOps.jaccardHof(col("sa"), col("sb")).as("hof"))
+        ReferenceForms.jaccardHof(col("sa"), col("sb")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -99,7 +99,7 @@ class SetKernelsSpec extends SparkSpec {
     ).toDF("a", "b")
     val got = cases.select(
         TextOps.jaccard(col("a"), col("b")).as("kern"),
-        TextOps.jaccardHof(col("a"), col("b")).as("hof"))
+        ReferenceForms.jaccardHof(col("a"), col("b")).as("hof"))
       .collect()
     got.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
@@ -116,7 +116,7 @@ class SetKernelsSpec extends SparkSpec {
     assert(nan.getDouble(0).isNaN)
     intercept[Exception] {
       Seq(1).toDF("x").select(
-        TextOps.jaccardHof(array().cast("array<string>"),
+        ReferenceForms.jaccardHof(array().cast("array<string>"),
           array().cast("array<string>")).as("hof"))
         .head()
     }
@@ -126,7 +126,7 @@ class SetKernelsSpec extends SparkSpec {
       TextOps.jaccard(
         array(lit("a"), lit(null).cast("string")),
         array(lit(null).cast("string"), lit("b"))).as("kern"),
-      TextOps.jaccardHof(
+      ReferenceForms.jaccardHof(
         array(lit("a"), lit(null).cast("string")),
         array(lit(null).cast("string"), lit("b"))).as("hof"))
       .head()

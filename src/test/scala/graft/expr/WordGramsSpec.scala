@@ -1,7 +1,7 @@
 package graft.expr
 
 import graft.SparkSpec
-import graft.ops.TextOps
+import graft.ops.{ReferenceForms, TextOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
@@ -17,7 +17,7 @@ class WordGramsSpec extends SparkSpec {
     for (n <- Seq(3, 15)) {
       val rows = docs.select(
           TextOps.shingles(col("text"), n).as("kern"),
-          TextOps.shinglesHof(col("text"), n).as("hof"))
+          ReferenceForms.shinglesHof(col("text"), n).as("hof"))
         .collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>

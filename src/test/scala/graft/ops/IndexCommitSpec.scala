@@ -189,9 +189,11 @@ class IndexCommitSpec extends SparkSpec {
       val mor = VectorOps.readIndexVersionMor(spark, path, 2, "vec_id")
       assert(mor.join(doomed, Seq("vec_id"), "left_semi").count() == 0)
       // an already-committed target version is refused loudly
-      intercept[IllegalArgumentException] {
+      val refused = intercept[java.io.IOException] {
         VectorOps.commitDeletes(spark, path, 1, 2, doomed)
       }
+      assert(refused.getMessage.contains("already committed"),
+        refused.getMessage)
     } finally rmrf(dir)
   }
 

@@ -12,8 +12,8 @@ class LayoutSpec extends SparkSpec {
     val df = pts.toDF("x", "y")
       .select(col("x"), col("y"), Layout.zValue(col("x"), col("y"), 16).as("z"))
       .select(col("x"), col("y"),
-        Layout.unInterleave(col("z"), 0, 16).as("x2"),
-        Layout.unInterleave(col("z"), 1, 16).as("y2"))
+        ReferenceForms.unInterleave(col("z"), 0, 16).as("x2"),
+        ReferenceForms.unInterleave(col("z"), 1, 16).as("y2"))
     assert(df.filter(col("x") =!= col("x2") || col("y") =!= col("y2")).isEmpty)
   }
 

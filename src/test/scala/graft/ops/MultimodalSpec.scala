@@ -74,40 +74,6 @@ class MultimodalSpec extends SparkSpec {
     assert(z.forall(_ == 0f))
   }
 
-  test("resizeFeatures pools adjacent bins, preserving total mass") {
-    val feats = Multimodal.extractFeatures(media, "media_id", "content")
-    val resized = Multimodal.resizeFeatures(feats, "features", 4)
-      .orderBy("media_id").collect()
-    val full = feats.orderBy("media_id").collect()
-    resized.zip(full).foreach { case (r, f) =>
-      val small = r.getSeq[Float](r.fieldIndex("features_resized"))
-      val big = f.getSeq[Float](f.fieldIndex("features"))
-      assert(small.length == 4)
-      assert(math.abs(small.sum - big.sum) < 1e-5) // mass preserved
-      // each output bin is the sum of its 4 source bins
-      assert(math.abs(small.head - big.take(4).sum) < 1e-6)
-    }
-  }
-
-  test("resizeFeatures on non-divisible sizes: last bin absorbs the remainder") {
-    val df = Seq(Tuple1((1 to 10).map(_.toFloat))).toDF("features")
-    val out = Multimodal.resizeFeatures(df, "features", 4)
-      .select("features_resized").head().getSeq[Float](0)
-    // width 2, last bin takes 4 elements: [1+2, 3+4, 5+6, 7+8+9+10]
-    assert(out == Seq(3f, 7f, 11f, 34f))
-    assert(out.sum == (1 to 10).sum.toFloat) // no element dropped
-  }
-
-  test("sampleFrames yields nFrames rows per media with in-range offsets") {
-    val nBytes = Multimodal.synthPng(1L).length
-    val frames = Multimodal.sampleFrames(media.filter(col("media_id") === 1),
-      "media_id", "content", nFrames = 4).collect()
-    assert(frames.length == 4)
-    val offsets = frames.map(_.getAs[Long]("frame_offset"))
-    assert(offsets.forall(o => o >= 0 && o < nBytes))
-    assert(offsets.distinct.length == 4)
-  }
-
   test("video container round-trips: sampled frames decode to the exact pixel law") {
     import spark.implicits._
     val vids = Seq(5L, 6L, 7L).toDF("doc_id")

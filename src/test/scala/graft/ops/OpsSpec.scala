@@ -12,13 +12,13 @@ class DedupSpec extends SparkSpec {
     ("b", 5L, "y5"), ("c", 7L, "z7")).toDF("k", "ver", "payload")
 
   test("latestPerKey keeps the max-order row per key (deterministic)") {
-    val got = Dedup.latestPerKey(df, Seq("k"), "ver")
+    val got = ReferenceForms.latestPerKey(df, Seq("k"), "ver")
       .orderBy("k").collect().toSeq
     assert(got == Seq(Row("a", 3L, "x3"), Row("b", 5L, "y5"), Row("c", 7L, "z7")))
   }
 
   test("latestPerKeyAgg (max_by form) matches the window form") {
-    val w = Dedup.latestPerKey(df, Seq("k"), "ver").orderBy("k").collect().toSeq
+    val w = ReferenceForms.latestPerKey(df, Seq("k"), "ver").orderBy("k").collect().toSeq
     val a = Dedup.latestPerKeyAgg(df, Seq("k"), Seq(col("ver")))
       .orderBy("k").collect().toSeq
     assert(w == a)
@@ -185,21 +185,6 @@ class SamplingSpec extends SparkSpec {
     assert(s1.length == 100 && s1.distinct.length == 100)
     assert(s1.forall(n => n >= 1 && n <= 1000))
     assert(s1.toSeq == s2.toSeq) // seed-deterministic
-  }
-
-  test("exactSampleScalable: oversample path ≡ direct path (exact same rows)") {
-    val df = (1 to 20000).toDF("n")
-    val direct = Sampling.exactSample(df, 500, seed = 7)
-      .collect().map(_.getInt(0)).toSeq
-    // directLimit=0 forces the filter-then-sort scale path
-    val scaled = Sampling.exactSampleScalable(df, 500, seed = 7, directLimit = 0)
-      .collect().map(_.getInt(0)).toSeq
-    assert(scaled == direct, "scale path must pick the identical sample")
-    // n >= total short-circuits to the full input
-    assert(Sampling.exactSampleScalable(df, 30000, directLimit = 0).count() == 20000)
-    // small n stays on the direct path (same result by construction)
-    assert(Sampling.exactSampleScalable(df, 500, seed = 7).collect()
-      .map(_.getInt(0)).toSeq == direct)
   }
 
   test("editDistancePairs guards its quadratic domain") {

@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   * names are the winner's: replacing them before the manifest create
   * refuses the loser would silently alter the committed v3. The loser
   * throws "already committed", and v3's manifest, rows, vectors and
-  * sidecars stay exactly as the winner committed them.
+  * sidecars stay exactly as the winner committed them. The same holds
+  * for every other writer pointed at v3: a clone localize, a tombstone
+  * or DV delete, a small-file compaction and a re-cluster each refuse
+  * with the same `IOException` before doing any work.
   */
 class StaleRewriteSpec extends SparkSpec {
 
@@ -78,8 +81,8 @@ class StaleRewriteSpec extends SparkSpec {
   }
 
   /** After `winner` committed v3, a stale upsert and a stale merge from
-    * v2, each over other ids (one of them a tombstoned id), are refused
-    * and v3 is unchanged. */
+    * v2, each over other ids (one of them a tombstoned id), and every
+    * other writer from v2 to v3 are refused and v3 is unchanged. */
   private def staleLosersRefused(tag: String)(
       winner: (String, Array[Array[Double]], Seq[Long]) => Unit): Unit = {
     val (dir, path, cents, ids) = freshIndex(tag)
@@ -100,6 +103,22 @@ class StaleRewriteSpec extends SparkSpec {
       }
       assert(merge.getMessage.contains("already committed"),
         merge.getMessage)
+      val doomed = ids(3)
+      val writers: Seq[(String, () => Any)] = Seq(
+        "localizeClone" -> (() => VectorOps.localizeClone(spark, path, 2, 3)),
+        "commitDeletes" -> (() => VectorOps.commitDeletes(spark, path, 2, 3,
+          embs.filter(col("vec_id") === doomed).select(col("vec_id")))),
+        "ivfCompactSmall" -> (() =>
+          VectorOps.ivfCompactSmall(spark, path, 2, 3, 1L << 20)),
+        "reclusterVersioned" -> (() =>
+          VectorOps.reclusterVersioned(spark, path, 2, 3, "vec_id", 2)),
+        "commitDeletionVector" -> (() => VectorOps.commitDeletionVector(
+          spark, path, 2, 3, col("vec_id") === doomed)))
+      writers.foreach { case (name, write) =>
+        val e = intercept[java.io.IOException](write())
+        assert(e.getMessage.contains("already committed"),
+          s"$name: ${e.getMessage}")
+      }
       assert(VectorOps.latestVersion(spark, path).contains(3))
       val after = v3State(path)
       val changed = Seq("manifest", "merge-on-read rows", "visible rows",
